@@ -1,0 +1,1 @@
+"""Benchmark for sandcrawler_spark; run it with ``python3 perfbench/run.py``."""
