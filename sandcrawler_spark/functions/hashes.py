@@ -125,11 +125,6 @@ def b32_hex_udf(s: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(T.StringType())
-def sniff_mimetype_udf(blobs: pd.Series) -> pd.Series:
-    return blobs.map(lambda b: sniff_mimetype(bytes(b)), na_action="ignore")
-
-
-@F.pandas_udf(T.StringType())
 def hex_b32_udf(s: pd.Series) -> pd.Series:
     def safe(v: str) -> str | None:
         try:

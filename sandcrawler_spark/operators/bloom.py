@@ -23,15 +23,20 @@ Layout (the design that survives 10^10 seen URLs):
   them into the stored shard rows with a full-outer join + vectorized
   binary-OR, and write the next version. The driver moves only the
   ≤B-row plan, no bitmap bytes.
-- Probing never moves bitmaps through the driver either:
-  * sideload probe (default while the bloom fits executor memory): a
-    pandas UDF whose WORKERS read the current shard files directly from
-    shared storage (the same storage the Iceberg/snapshot state lives
-    on) and cache the assembled bitmap per version — broadcast
+- Probing never moves bitmaps through the driver either.
+  :meth:`BloomStore.probe` picks one of two modes from the measured
+  bitmap size:
+  * sideload probe (while the bloom fits executor memory): a pandas UDF
+    whose WORKERS read the current shard files directly from shared
+    storage (the same storage the Iceberg/snapshot state lives on) and
+    cache the assembled bitmap per written version — broadcast
     semantics without a driver hop, zero candidate shuffle.
   * cogrouped probe (the 12-GiB design point): candidates co-partition
     with the stored shard rows on the shard key, so each task holds ONE
     shard's bitmap and only candidates move.
+- A standalone anti-join with no store builds a throwaway sharded bloom
+  lazily in the same plan (per-shard bitmaps sized from each shard's
+  own key count) and probes it through the same cogroup function.
 - Capacity: ``m = 16n`` bits for the EXPECTED key count with headroom;
   when the live count outgrows it (fpr would degrade), the store
   schedules a full distributed rebuild at double capacity — amortized
@@ -47,6 +52,7 @@ import glob
 import json
 import os
 import shutil
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -56,7 +62,7 @@ from pyspark.sql import types as T
 
 _K = 7  # probes; with m = 16n bits → fpr ≈ 0.6%
 DEFAULT_SHARDS = 32
-# above this total bitmap size the round loop switches from the
+# above this total bitmap size BloomStore.probe switches from the
 # worker-sideload probe to the cogrouped probe (bytes)
 SIDELOAD_MAX_BYTES = 256 << 20
 
@@ -76,14 +82,16 @@ def _shard_of(h: np.ndarray, num_shards: int) -> np.ndarray:
     return (h.astype(np.int64) % num_shards + num_shards) % num_shards
 
 
-# Worker-side cache of assembled bitmaps, keyed by version directory.
-# Version dirs are immutable once the meta pointer names them, so a hit
-# never goes stale; old versions are evicted to bound worker memory.
+# Worker-side cache of assembled bitmaps, keyed by the token each
+# committed version carries in bloom_meta.json. A version dir path is
+# not unique: a store deleted and rebuilt at the same root writes
+# ``shards/v000000`` again. Old versions are evicted to bound worker
+# memory.
 _SIDELOAD_CACHE: dict[str, np.ndarray] = {}
 
 
-def _sideload_bits(path: str, num_shards: int, n_bytes: int) -> np.ndarray:
-    bits = _SIDELOAD_CACHE.get(path)
+def _sideload_bits(path: str, token: str, num_shards: int, n_bytes: int) -> np.ndarray:
+    bits = _SIDELOAD_CACHE.get(token)
     if bits is None:
         bits = np.zeros(num_shards * n_bytes, dtype=np.uint8)
         for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
@@ -96,8 +104,69 @@ def _sideload_bits(path: str, num_shards: int, n_bytes: int) -> np.ndarray:
                     bits[s * n_bytes : s * n_bytes + len(arr)] = arr
         if len(_SIDELOAD_CACHE) >= 4:
             _SIDELOAD_CACHE.clear()
-        _SIDELOAD_CACHE[path] = bits
+        _SIDELOAD_CACHE[token] = bits
     return bits
+
+
+def _shard_delta_df(hashes: DataFrame, num_shards: int, m_shard_bits: int = 0) -> DataFrame:
+    """Distributed per-shard bitmap build over an int64 ``h`` column:
+    one parallel task per shard, each emitting its own (small) bitmap
+    row — ready to join/write/cogroup, never collected.
+    ``m_shard_bits=0`` sizes each shard from its own key count (m = 16n,
+    pow2), so a throwaway bloom needs no count job up front."""
+
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        h = pdf["h"].to_numpy(dtype=np.int64).astype(np.uint64)
+        m = m_shard_bits or _next_pow2(16 * len(h))
+        bm = np.zeros(m // 8, dtype=np.uint8)
+        for pos in _probe_positions(h, m - 1):
+            np.bitwise_or.at(bm, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+        return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])], "bm": [bm.tobytes()]})
+
+    tagged = hashes.withColumn("shard", F.pmod(F.col("h"), F.lit(num_shards)))
+    return tagged.groupBy("shard").applyInPandas(build, schema="shard int, bm binary")
+
+
+def _probe_cogrouped(
+    candidates: DataFrame, hash_col: str, shards: DataFrame, num_shards: int
+) -> DataFrame:
+    """Co-partition candidates with the ``(shard, bm)`` rows on the shard
+    key so each task holds ONE shard's bitmap — nothing driver-resident
+    or broadcast. Each shard's mask comes from its bitmap length. Returns
+    candidates with a ``__maybe`` boolean appended."""
+    # int like the shard rows' key: both sides must hash-partition alike,
+    # or a candidate's group meets no bitmap once partitions outnumber one
+    tagged = candidates.withColumn(
+        "__h", F.xxhash64(hash_col)
+    ).withColumn("shard", F.pmod(F.col("__h"), F.lit(num_shards)).cast("int"))
+    out_schema = T.StructType(
+        [f for f in tagged.schema.fields if f.name != "shard"]
+        + [T.StructField("__maybe", T.BooleanType())]
+    )
+    cols = [f.name for f in tagged.schema.fields if f.name != "shard"]
+
+    def probe(cand: pd.DataFrame, bm_rows: pd.DataFrame) -> pd.DataFrame:
+        if cand.empty:
+            return pd.DataFrame(columns=cols + ["__maybe"])
+        if bm_rows.empty:
+            cand = cand[cols]
+            cand["__maybe"] = False
+            return cand
+        bm = np.frombuffer(bytes(bm_rows["bm"].iloc[0]), dtype=np.uint8)
+        hv = cand["__h"].to_numpy(dtype=np.int64).astype(np.uint64)
+        out = np.ones(len(hv), dtype=bool)
+        for pos in _probe_positions(hv, len(bm) * 8 - 1):
+            out &= (bm[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
+        cand = cand[cols]
+        cand["__maybe"] = out
+        return cand
+
+    return (
+        tagged.groupBy("shard")
+        .cogroup(shards.groupBy("shard"))
+        .applyInPandas(probe, schema=out_schema)
+        .drop("__h")
+    )
 
 
 @F.pandas_udf(T.BinaryType())
@@ -121,7 +190,7 @@ class BloomStore:
     parquet with rows ``(shard int, bm binary)``; an absent shard row is
     an all-zero bitmap. NOTHING bitmap-sized ever lives on the driver —
     updates are distributed OR-jobs over this table and probes read it
-    executor-side (sideload or cogroup)."""
+    executor-side (sideload or cogroup, chosen by :meth:`probe`)."""
 
     def __init__(self, root: str, num_shards: int = DEFAULT_SHARDS) -> None:
         self.root = root
@@ -130,6 +199,7 @@ class BloomStore:
         self.n_keys = 0
         self.round_id = -1
         self.version = -1
+        self.token = ""  # names the committed version for worker caches
         os.makedirs(root, exist_ok=True)
         self._load()
 
@@ -155,6 +225,7 @@ class BloomStore:
             self.n_keys = meta["n_keys"]
             self.round_id = meta["round_id"]
             self.version = meta.get("version", -1)
+            self.token = meta.get("token") or uuid.uuid4().hex
             if self.version >= 0 and not os.path.isdir(self._version_dir(self.version)):
                 raise FileNotFoundError(self._version_dir(self.version))
         except (OSError, ValueError, KeyError, FileNotFoundError):
@@ -178,6 +249,7 @@ class BloomStore:
                     "n_keys": self.n_keys,
                     "round_id": self.round_id,
                     "version": self.version,
+                    "token": self.token,
                 },
                 f,
             )
@@ -202,26 +274,9 @@ class BloomStore:
     def total_bytes(self) -> int:
         return self.num_shards * self.m_shard_bits // 8
 
-    def _shard_delta_df(self, hashes: DataFrame) -> DataFrame:
-        """Distributed per-shard bitmap build over an int64 ``h`` column:
-        one parallel task per shard, each emitting its own (small)
-        bitmap row — ready to join/write, never collected."""
-        mask = self.m_shard_bits - 1
-        n_bytes = self.m_shard_bits // 8
-        B = self.num_shards
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            bm = np.zeros(n_bytes, dtype=np.uint8)
-            h = pdf["h"].to_numpy(dtype=np.int64).astype(np.uint64)
-            for pos in _probe_positions(h, mask):
-                np.bitwise_or.at(bm, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-            return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])], "bm": [bm.tobytes()]})
-
-        tagged = hashes.withColumn("shard", F.pmod(F.col("h"), F.lit(B)))
-        return tagged.groupBy("shard").applyInPandas(build, schema="shard int, bm binary")
-
     def _write_version(self, shards: DataFrame) -> None:
         self.version += 1
+        self.token = uuid.uuid4().hex
         # ≤num_shards rows of bitmap bytes — one output file per shard
         # row keeps the sideload read and the cogroup scan aligned
         shards.repartition(min(self.num_shards, 32), "shard").write.mode(
@@ -236,7 +291,7 @@ class BloomStore:
         ``delta_hashes``: DataFrame with int64 column ``h``."""
         if self.version < 0 and self.m_shard_bits == 0:
             self._alloc(max(8 * n_delta, 1 << 16))
-        delta = self._shard_delta_df(delta_hashes)
+        delta = _shard_delta_df(delta_hashes, self.num_shards, self.m_shard_bits)
         if self.version >= 0:
             spark = delta_hashes.sparkSession
             cur = spark.read.parquet(self._version_dir(self.version)).select(
@@ -265,31 +320,41 @@ class BloomStore:
         persisted bloom). Amortized: capacity doubles each time, so over
         a crawl's lifetime total rebuild work is O(final size)."""
         self._alloc(2 * max(n_keys, 1))
-        self._write_version(self._shard_delta_df(url_seen_hashes))
+        self._write_version(
+            _shard_delta_df(url_seen_hashes, self.num_shards, self.m_shard_bits)
+        )
         self.n_keys = n_keys
         self.round_id = round_id
         self._commit_meta()
 
     # ------------------------------------------------------------ probe
+    def probe(self, candidates: DataFrame, hash_col: str) -> DataFrame:
+        """Candidates with a ``__maybe`` boolean appended: the sideload
+        probe while the bitmaps total at most ``SIDELOAD_MAX_BYTES``, the
+        cogrouped probe past that. Both give the same answers."""
+        if self.total_bytes() <= SIDELOAD_MAX_BYTES:
+            might_contain = self.might_contain_udf(candidates.sparkSession)
+            return candidates.withColumn("__maybe", might_contain(F.xxhash64(hash_col)))
+        return self.probe_cogrouped(candidates, hash_col)
+
     def might_contain_udf(self, spark=None):
         """Vectorized membership probe over an int64 hash column.
 
         Sideload mode: each PYTHON WORKER reads the current version's
         shard files from shared storage once and caches the assembled
-        bitmap — the driver ships only the path string. Used while the
-        bloom fits executor memory (``total_bytes() <=
-        SIDELOAD_MAX_BYTES``); past that the round loop switches to
-        :meth:`probe_cogrouped`."""
+        bitmap under the version's token — the driver ships only the
+        path and token strings."""
         path = self.shards_path
         if path is None:
             raise ValueError("bloom has no committed version yet")
+        token = self.token
         mask = self.m_shard_bits - 1
         n_bytes = self.m_shard_bits // 8
         B = self.num_shards
 
         @F.pandas_udf(T.BooleanType())
         def might_contain(h: pd.Series) -> pd.Series:
-            bm = _sideload_bits(path, B, n_bytes)
+            bm = _sideload_bits(path, token, B, n_bytes)
             hv = h.to_numpy(dtype=np.int64).astype(np.uint64)
             base = _shard_of(hv, B).astype(np.uint64) * n_bytes
             out = np.ones(len(hv), dtype=bool)
@@ -301,99 +366,12 @@ class BloomStore:
         return might_contain
 
     def probe_cogrouped(self, candidates: DataFrame, hash_col: str) -> DataFrame:
-        """12-GiB-bloom probe path: co-partition candidates with the
-        STORED shard rows on the shard key so each task holds ONE
-        shard's bitmap — nothing driver-resident or broadcast. Returns
-        candidates with a ``__maybe`` boolean appended. Same answers as
-        the sideload probe (property-tested)."""
-        spark = candidates.sparkSession
-        mask = self.m_shard_bits - 1
+        """12-GiB-bloom probe path: cogroup candidates with the STORED
+        shard rows. Same answers as the sideload probe (property-tested)."""
         if self.shards_path is None:
             raise ValueError("bloom has no committed version yet")
-        shards_df = spark.read.parquet(self.shards_path).select("shard", "bm")
-        tagged = candidates.withColumn(
-            "__h", F.xxhash64(hash_col)
-        ).withColumn("shard", F.pmod(F.col("__h"), F.lit(self.num_shards)))
-        out_schema = T.StructType(
-            [f for f in tagged.schema.fields if f.name != "shard"]
-            + [T.StructField("__maybe", T.BooleanType())]
-        )
-        cols = [f.name for f in tagged.schema.fields if f.name != "shard"]
-
-        def probe(cand: pd.DataFrame, bm_rows: pd.DataFrame) -> pd.DataFrame:
-            if cand.empty:
-                return pd.DataFrame(columns=cols + ["__maybe"])
-            if bm_rows.empty:
-                cand = cand[cols]
-                cand["__maybe"] = False
-                return cand
-            bm = np.frombuffer(bytes(bm_rows["bm"].iloc[0]), dtype=np.uint8)
-            hv = cand["__h"].to_numpy(dtype=np.int64).astype(np.uint64)
-            out = np.ones(len(hv), dtype=bool)
-            for pos in _probe_positions(hv, mask):
-                out &= (bm[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-            cand = cand[cols]
-            cand["__maybe"] = out
-            return cand
-
-        return (
-            tagged.groupBy("shard")
-            .cogroup(shards_df.groupBy("shard"))
-            .applyInPandas(probe, schema=out_schema)
-            .drop("__h")
-        )
-
-
-# --------------------------------------------------------------- legacy API
-
-
-def build_bloom(seen: DataFrame, key_col: str, n_keys: int | None = None) -> tuple[bytes, int]:
-    """One-shot (unsharded) bloom build — kept for standalone anti-join
-    use outside a crawl loop; the crawl driver itself maintains a
-    :class:`BloomStore` incrementally."""
-    n = n_keys if n_keys is not None else seen.count()
-    m_bits = _next_pow2(max(1024, 16 * max(n, 1)))
-    mask = m_bits - 1
-    n_bytes = m_bits // 8
-
-    hashes = seen.select(F.xxhash64(key_col).alias("h"))
-
-    def part_bloom(it):
-        bm = np.zeros(n_bytes, dtype=np.uint8)
-        for pdf in it:
-            h = pdf["h"].to_numpy(dtype=np.int64).astype(np.uint64)
-            for pos in _probe_positions(h, mask):
-                np.bitwise_or.at(bm, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-        yield pd.DataFrame({"bloom": [bm.tobytes()]})
-
-    parts = hashes.mapInPandas(part_bloom, schema="bloom binary").collect()
-    acc = np.zeros(n_bytes, dtype=np.uint8)
-    for row in parts:
-        acc |= np.frombuffer(row["bloom"], dtype=np.uint8)
-    return acc.tobytes(), mask
-
-
-def bloom_might_contain_udf(spark, bloom_bytes: bytes, mask: int):
-    """Vectorized membership probe over an int64 hash column.
-
-    The bitmap ships inside the UDF closure, NOT as an explicit
-    SparkContext broadcast: an unmanaged broadcast per call leaks one
-    bitmap per round on driver and executors (ADVICE r2). One-shot
-    blooms here are small by construction (the round loop's large,
-    incremental bloom lives in :class:`BloomStore`, which sideloads
-    from shared storage), so closure shipping costs one serialization
-    per stage and nothing persists after the job."""
-
-    @F.pandas_udf(T.BooleanType())
-    def might_contain(h: pd.Series) -> pd.Series:
-        bm = np.frombuffer(bloom_bytes, dtype=np.uint8)
-        hv = h.to_numpy(dtype=np.int64).astype(np.uint64)
-        out = np.ones(len(hv), dtype=bool)
-        for pos in _probe_positions(hv, mask):
-            out &= (bm[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-        return pd.Series(out)
-
-    return might_contain
+        shards = candidates.sparkSession.read.parquet(self.shards_path).select("shard", "bm")
+        return _probe_cogrouped(candidates, hash_col, shards, self.num_shards)
 
 
 def seen_anti_join(
@@ -401,23 +379,21 @@ def seen_anti_join(
     url_seen: DataFrame,
     keys: list[str],
     hash_key: str,
-    use_bloom: bool = True,
-    n_keys: int | None = None,
+    bloom: BloomStore | None = None,
     scratch: list | None = None,
-    probe_udf=None,
-    probe_fn=None,
     confirm_parts: tuple[DataFrame, DataFrame | None] | None = None,
 ) -> DataFrame:
     """candidates ∖ url_seen on ``keys`` (J3 left_anti), with the bloom
     short-circuit for definitely-new rows.
 
-    ``probe_udf``: a prebuilt membership probe (from
-    :meth:`BloomStore.might_contain_udf`) — the crawl driver passes its
-    incrementally-maintained bloom so no per-round rebuild happens
-    here. ``probe_fn``: alternative whole-DataFrame tagger
-    (:meth:`BloomStore.probe_cogrouped`-style, df → df + ``__maybe``)
-    for blooms too large to sideload. Without either, falls back to a
-    one-shot build (standalone use).
+    ``bloom``: the crawl's incrementally-maintained store, probed with
+    :meth:`BloomStore.probe`. Without one (standalone use), a throwaway
+    sharded bloom over ``url_seen`` is built lazily inside the same plan
+    and probed through the same cogroup function.
+
+    ``scratch``: when given with a store, the probed candidates are
+    cached (both branches read them) and appended here for the caller
+    to unpersist.
 
     ``confirm_parts``: optional (base, delta) split of the SAME seen
     set for the exact-confirm phase — anti-join vs (base ∪ delta) ≡
@@ -425,7 +401,7 @@ def seen_anti_join(
     catalog-bucketed table (``sources/bucketed.py``) its side of the
     join plans WITHOUT an Exchange (only the small maybe-side
     shuffles). ``url_seen`` must still be the full set (it feeds the
-    one-shot bloom fallback).
+    throwaway bloom).
     """
 
     def _keyed(df: DataFrame) -> DataFrame:
@@ -445,21 +421,18 @@ def seen_anti_join(
             out = out.join(_keyed(delta), cond, "left_anti")
         return out
 
-    if not use_bloom:
-        return _confirm(candidates)
-
-    if probe_fn is not None:
-        tagged = probe_fn(candidates)
+    if bloom is not None:
+        tagged = bloom.probe(candidates, hash_key)
+        if scratch is not None:
+            tagged = tagged.persist()  # reused for both branches (columnar cache)
+            scratch.append(tagged)
     else:
-        if probe_udf is None:
-            bloom_bytes, mask = build_bloom(url_seen, hash_key, n_keys=n_keys)
-            probe_udf = bloom_might_contain_udf(
-                candidates.sparkSession, bloom_bytes, mask
-            )
-        tagged = candidates.withColumn("__maybe", probe_udf(F.xxhash64(hash_key)))
-    tagged = tagged.persist()  # reused for both branches (columnar cache)
-    if scratch is not None:
-        scratch.append(tagged)
+        # not cached: the cached plan would carry the seen set's whole
+        # lineage, and AQE re-renders it on every plan update
+        shards = _shard_delta_df(
+            url_seen.select(F.xxhash64(hash_key).alias("h")), DEFAULT_SHARDS
+        )
+        tagged = _probe_cogrouped(candidates, hash_key, shards, DEFAULT_SHARDS)
     definitely_new = tagged.filter(~F.col("__maybe")).drop("__maybe")
     maybe = tagged.filter(F.col("__maybe")).drop("__maybe")
     confirmed_new = _confirm(maybe)

@@ -105,17 +105,6 @@ def minhash_signatures_wide(
     return sh.groupBy("id").agg(*aggs)
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, _shingles: DataFrame | None = None
-) -> DataFrame:
-    """(id, j, mh) long form — a post-aggregation unpivot of the wide
-    signatures (k rows per id AFTER the heavy groupBy, not before)."""
-    wide = minhash_signatures_wide(df, id_col, text_col, n, _shingles)
-    k = len(MINHASH_PERMS)
-    stack = ", ".join(f"{j}, mh{j}" for j in range(k))
-    return wide.selectExpr("id", f"stack({k}, {stack}) AS (j, mh)")
-
-
 def lsh_band_keys(signatures_wide: DataFrame) -> DataFrame:
     """(id, band, band_key) from wide signatures: each band key is an
     md5 over its rows-per-band minhash values in permutation order —

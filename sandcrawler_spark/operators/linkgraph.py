@@ -410,7 +410,7 @@ def bfs_depths(
 
     Scale: visited grows monotonically, so the per-level anti-join is
     O(visited); at the 10^10 design point the crawl replaces the plain
-    anti-join with its bloom/cuckoo prefilter + exact confirm
+    anti-join with its bloom prefilter + exact confirm
     (``operators/bloom.py``) — this standalone version keeps the exact
     join only.  ``early_stop=False`` keeps the whole loop lazy (no
     per-level driver action); with it True an empty frontier ends the

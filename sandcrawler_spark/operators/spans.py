@@ -84,17 +84,6 @@ def doc_word_count(docs: DataFrame) -> DataFrame:
     )
 
 
-def resource_type_counts(docs: DataFrame) -> DataFrame:
-    """Per-doc typed sub-resource counts (the WebResource resource_type
-    histogram)."""
-    return (
-        explode_spans(docs)
-        .filter(F.col("kind") != "text")
-        .groupBy("doc_id", "kind")
-        .agg(F.count("*").alias("n"))
-    )
-
-
 def interleave_stats(span_rows: DataFrame) -> DataFrame:
     """Per-document interleaving profile of a span sequence — the
     multimodal corpus-QA metric for ``(doc_id, spans)`` tables

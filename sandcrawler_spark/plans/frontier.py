@@ -6,7 +6,7 @@ the two canonicalization pandas UDFs):
 
     frontier candidates
       → in-batch dedup (keep best fetch-priority per identity)     [A8/W1]
-      → anti-join url_seen (optional bloom prefilter + exact)      [J3/J8]
+      → anti-join url_seen (bloom prefilter + exact confirm)       [J3/J8]
       → broadcast-join robots/blocklist (block/wall/cookie gates)  [F6/J1]
       → salted per-host politeness window (two-phase top-k)        [W3]
       → distributed global fetch ranking (total order)             [W2/O1]
@@ -30,22 +30,13 @@ matches the single-threaded oracle byte-for-byte.
 from __future__ import annotations
 
 import hashlib
-import os
-import sys
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-_TRACE = bool(os.environ.get("SPARK_GRAFT_TRACE"))
-
-
-def _trace(label: str, t0: float) -> None:
-    if _TRACE:
-        print(f"[trace] {label}: {time.perf_counter() - t0:.2f}s", file=sys.stderr)
-
 from sandcrawler_spark.functions.urlkeys import canonical_url_udf, resolve_url_udf
+from sandcrawler_spark.operators.bloom import BloomStore, seen_anti_join
 from sandcrawler_spark.operators.ranking import with_global_rank
 from sandcrawler_spark.plans import schemas as S
 from sandcrawler_spark.plans.state import SnapshotStore
@@ -353,11 +344,8 @@ def _new_candidates(
     url_seen: DataFrame,
     generation: int = 0,
     has_forced: bool = True,
-    use_bloom: bool = True,
-    seen_count: int | None = None,
+    bloom: BloomStore | None = None,
     scratch: list | None = None,
-    probe_udf=None,
-    probe_fn=None,
     confirm_parts: tuple[DataFrame, DataFrame | None] | None = None,
 ) -> DataFrame:
     """Drop candidates already processed: the URL-seen anti-join with
@@ -378,8 +366,6 @@ def _new_candidates(
     definition means compaction provably removes exactly the rows the
     next round's filter would have removed anyway (digest neutrality).
     """
-    from sandcrawler_spark.operators.bloom import seen_anti_join
-
     unforced = (
         candidates.filter(~F.col("force_recrawl")) if has_forced else candidates
     )
@@ -388,11 +374,8 @@ def _new_candidates(
         url_seen,
         keys=["ingest_type", "canonical_url"],
         hash_key="canonical_url",
-        use_bloom=use_bloom,
-        n_keys=seen_count,  # from manifest counters: saves a count job
+        bloom=bloom,  # incrementally-maintained sharded bloom
         scratch=scratch,
-        probe_udf=probe_udf,  # incrementally-maintained sharded bloom
-        probe_fn=probe_fn,  # cogrouped probe once past sideload size
         confirm_parts=confirm_parts,  # bucketed base + plain deltas
     )
     if not has_forced:
@@ -438,12 +421,9 @@ def run_round(
     docs: DataFrame,
     round_id: int,
     default_budget: int = DEFAULT_BUDGET,
-    use_bloom: bool = True,
-    seen_count: int | None = None,
+    bloom: BloomStore | None = None,
     scratch: list | None = None,
     generation: int = 0,
-    probe_udf=None,
-    probe_fn=None,
     has_forced: bool = True,
     host_tokens: DataFrame | None = None,
     prepared_rules: DataFrame | None = None,
@@ -467,11 +447,8 @@ def run_round(
             url_seen,
             generation=generation,
             has_forced=has_forced,
-            use_bloom=use_bloom,
-            seen_count=seen_count,
+            bloom=bloom,
             scratch=scratch,
-            probe_udf=probe_udf,
-            probe_fn=probe_fn,
             confirm_parts=seen_confirm_parts,
         )
 
@@ -726,10 +703,7 @@ def _compact_frontier(
     spark: SparkSession,
     store: SnapshotStore,
     round_id: int,
-    probe_udf,
-    probe_fn,
-    use_bloom: bool,
-    seen_count: int | None,
+    bloom: BloomStore,
 ) -> None:
     """Rewrite the accumulated frontier sources as ONE base table of
     still-active candidates, so the next rounds' candidate scan is
@@ -743,8 +717,6 @@ def _compact_frontier(
     UNCONDITIONALLY — they stay dormant while their generation matches
     but re-arm when a re-ingest bumps the generation, exactly as under
     append-only assembly."""
-    from sandcrawler_spark.operators.bloom import seen_anti_join
-
     frontier, _ = _assemble_frontier(spark, store, upto_round=round_id)
     if frontier is None:
         return
@@ -759,11 +731,8 @@ def _compact_frontier(
             url_seen,
             keys=["ingest_type", "canonical_url"],
             hash_key="canonical_url",
-            use_bloom=use_bloom,
-            n_keys=seen_count,
+            bloom=bloom,
             scratch=scratch,
-            probe_udf=probe_udf,
-            probe_fn=probe_fn,
         )
         if has_forced:
             kept = kept.unionByName(cand.filter(F.col("force_recrawl")))
@@ -785,7 +754,6 @@ def run_crawl(
     state_dir: str,
     max_rounds: int = 4,
     default_budget: int = DEFAULT_BUDGET,
-    use_bloom: bool = True,
     resume: bool = False,
     token_bucket: bool = False,
     rules_broadcast_max: int = RULES_BROADCAST_MAX,
@@ -829,10 +797,8 @@ def run_crawl(
     retry_horizon counter). Default 0 preserves the historical
     terminal-bad semantics byte-for-byte. Mirrored by the oracle.
     """
-    from sandcrawler_spark.operators.bloom import BloomStore
-
     store = SnapshotStore(state_dir, spark)
-    bloom = BloomStore(store.aux_path("bloom")) if use_bloom else None
+    bloom = BloomStore(store.aux_path("bloom"))
     parallelism = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # AQE off for the scheduling rounds: shuffle partitions are already
     # sized explicitly, and AQE's per-shuffle-stage re-planning adds
@@ -852,7 +818,6 @@ def run_crawl(
         # job instead of serializing ahead of it.
         from concurrent.futures import ThreadPoolExecutor
 
-        t_rules = time.perf_counter()
         rules_tbl = _dedup_rules(robots).persist()
         _rules_pool = ThreadPoolExecutor(max_workers=1)
         _rules_future = _rules_pool.submit(rules_tbl.count)
@@ -886,7 +851,6 @@ def run_crawl(
             # all additions discovered in rounds < r; processed keys fall out
             # through the url_seen anti-join (no full-frontier rewrite per
             # round — the Iceberg-native layout).
-            t_prep = time.perf_counter()
             if round_id == 0:
                 frontier = prepare_seeds(spark.read.parquet(f"{data_dir}/seeds.parquet"))
                 seeds_path = store.aux_path("seeds_prepared")
@@ -900,7 +864,6 @@ def run_crawl(
                 store.note_seed_rows("seeds_prepared", int(obs_seeds.get["n"]))
                 frontier = spark.read.parquet(seeds_path)  # canonicalize ONCE
                 frontier_input_rows = int(obs_seeds.get["n"])
-                _trace(f"round {round_id} seeds prepare+write", t_prep)
             else:
                 stale = (
                     _c(round_id - 1, "scheduled") == 0
@@ -921,7 +884,6 @@ def run_crawl(
                 frontier, frontier_input_rows = _assemble_frontier(
                     spark, store, upto_round=round_id - 1
                 )
-                _trace(f"round {round_id} assemble frontier", t_prep)
             seen_parts = None
             sc = store.seen_compaction if bucketed_seen else None
             if sc is not None and sc["round"] <= round_id - 1:
@@ -948,9 +910,6 @@ def run_crawl(
             any_forced = any(_c(r, "forced", 0) for r in range(round_id))
             if url_seen is not None and any_forced:
                 url_seen = resolve_url_seen(url_seen)
-            seen_count = sum(
-                _c(r, "deduped", 0) for r in range(round_id)
-            ) or None
 
             # --- sharded incremental bloom: normally already up to date from
             # the previous round's delta update (no Spark job here at all).
@@ -959,21 +918,18 @@ def run_crawl(
             # url_seen DELTAS — O(missing deltas), not a full rebuild; the
             # full distributed rebuild remains only for capacity overflow or
             # absent/corrupt state (amortized O(log n) times per crawl).
-            probe_udf = None
-            probe_fn = None
-            if url_seen is not None and use_bloom:
+            if url_seen is not None:
                 if bloom.needs_rebuild() or (
                     not bloom.ready_for(round_id) and bloom.version < 0
                 ):
-                    t0 = time.perf_counter()
+                    # key count from manifest counters: saves a count job
+                    seen_count = sum(_c(r, "deduped", 0) for r in range(round_id))
                     bloom.rebuild(
                         url_seen.select(F.col("url_hash").alias("h")),
                         n_keys=seen_count or url_seen.count(),
                         round_id=round_id - 1,
                     )
-                    _trace(f"round {round_id} bloom rebuild", t0)
                 elif not bloom.ready_for(round_id):
-                    t0 = time.perf_counter()
                     for r in range(bloom.round_id + 1, round_id):
                         delta = store.read_round_table(r, "url_seen")
                         bloom.update(
@@ -981,13 +937,6 @@ def run_crawl(
                             n_delta=_c(r, "deduped", 0),
                             round_id=r,
                         )
-                    _trace(f"round {round_id} bloom catch-up", t0)
-                from sandcrawler_spark.operators.bloom import SIDELOAD_MAX_BYTES
-
-                if bloom.total_bytes() <= SIDELOAD_MAX_BYTES:
-                    probe_udf = bloom.might_contain_udf(spark)
-                else:
-                    probe_fn = lambda df: bloom.probe_cogrouped(df, "canonical_url")  # noqa: E731
 
             host_tokens = None
             if token_bucket:
@@ -1000,15 +949,12 @@ def run_crawl(
             if rules_broadcastable is None:
                 rules_broadcastable = _rules_future.result() <= rules_broadcast_max
                 _rules_pool.shutdown(wait=False)
-                _trace("rules prep (dedup+count, overlapped)", t_rules)
 
             scratch: list[DataFrame] = []
-            t0 = time.perf_counter()
             rr = run_round(
                 spark, frontier, url_seen, robots, captures, docs,
-                round_id, default_budget, use_bloom, seen_count=seen_count,
+                round_id, default_budget, bloom=bloom,
                 scratch=scratch, generation=generation,
-                probe_udf=probe_udf, probe_fn=probe_fn,
                 has_forced=store.forced_seeds > 0,
                 host_tokens=host_tokens,
                 prepared_rules=rules_tbl,
@@ -1016,7 +962,6 @@ def run_crawl(
                 max_retries=max_retries,
                 seen_confirm_parts=seen_parts,
             )
-            _trace(f"round {round_id} run_round (rank job)", t0)
 
             # Counters (A7) + crawl-order digest ride the WRITE jobs as
             # Observations — zero extra actions per round.
@@ -1063,9 +1008,7 @@ def run_crawl(
             # serialized its write against the other two. The explicit
             # materialize keeps exactly-once compute AND overlaps every
             # write — one less sequential barrier per round.)
-            t0 = time.perf_counter()
             rr.fetched.count()
-            _trace(f"round {round_id} materialize round caches", t0)
             writes = {"url_seen": seen_df, "frontier_add": frontier_df, "fetch_order": fetch_df}
             if token_bucket:
                 # next round's bucket state: tokens' = min(cap, tokens -
@@ -1103,8 +1046,6 @@ def run_crawl(
                     )
                 )
                 writes["hosts"] = hosts_df
-            t0 = time.perf_counter()
-            t_bloom = time.perf_counter()
             wpool = ThreadPoolExecutor(max_workers=len(writes) + 1)
             wfuts = {
                 n: wpool.submit(store.write_table, round_id, n, df)
@@ -1113,24 +1054,21 @@ def run_crawl(
             # Bloom delta update chained on the url_seen write landing,
             # overlapping the remaining writes: it reads the just-written
             # delta (a disjoint scan — no cache lineage raced twice) and
-            # the OR is an idempotent driver-side bitmap mutation — safe
-            # to redo if a crash forces the round to re-run. The bloom is
+            # the OR is idempotent — safe to redo if a crash forces the
+            # round to re-run. The bloom is
             # a prefilter backed by the exact anti-join, so even a bloom
             # ahead of the committed manifest only costs extra exact
             # checks, never correctness.
-            bloom_future = None
-            if use_bloom:
+            def _bloom_update():
+                wfuts["url_seen"].result()
+                delta = store.read_round_table(round_id, "url_seen")
+                bloom.update(
+                    delta.select(F.col("url_hash").alias("h")),
+                    n_delta=int(obs_seen.get["deduped"]),
+                    round_id=round_id,
+                )
 
-                def _bloom_update():
-                    wfuts["url_seen"].result()
-                    delta = store.read_round_table(round_id, "url_seen")
-                    bloom.update(
-                        delta.select(F.col("url_hash").alias("h")),
-                        n_delta=int(obs_seen.get["deduped"]),
-                        round_id=round_id,
-                    )
-
-                bloom_future = wpool.submit(_bloom_update)
+            bloom_future = wpool.submit(_bloom_update)
             try:
                 for f in wfuts.values():
                     f.result()
@@ -1139,7 +1077,6 @@ def run_crawl(
                 # the pool (running threads drain, no new submissions)
                 wpool.shutdown(wait=False)
                 raise
-            _trace(f"round {round_id} write all tables (concurrent)", t0)
             seen_vals, fetch_vals, frontier_vals = obs_seen.get, obs_fetch.get, obs_frontier.get
             counters = {
                 f"status:{s}": int(seen_vals[s]) for s in S.ALL_STATUSES if seen_vals[s]
@@ -1155,9 +1092,7 @@ def run_crawl(
             # phase-profile evidence that compaction keeps round input
             # O(active): derived from manifest counters, no extra action
             counters["frontier_input_rows"] = frontier_input_rows
-            if bloom_future is not None:
-                bloom_future.result()  # re-raises a failed bloom update
-                _trace(f"round {round_id} bloom delta update (overlapped)", t_bloom)
+            bloom_future.result()  # re-raises a failed bloom update
             wpool.shutdown(wait=False)
             store.commit_round(round_id, counters)
 
@@ -1174,29 +1109,8 @@ def run_crawl(
                 if adds_since >= compact_min_rows and adds_since > compact_factor * max(
                     base_rows, 1
                 ):
-                    t0 = time.perf_counter()
-                    # fresh probe: the bloom now reflects this round too
-                    c_probe_udf = c_probe_fn = None
-                    if use_bloom and bloom.version >= 0:
-                        from sandcrawler_spark.operators.bloom import (
-                            SIDELOAD_MAX_BYTES,
-                        )
-
-                        if bloom.total_bytes() <= SIDELOAD_MAX_BYTES:
-                            c_probe_udf = bloom.might_contain_udf(spark)
-                        else:
-                            c_probe_fn = lambda df: bloom.probe_cogrouped(  # noqa: E731
-                                df, "canonical_url"
-                            )
-                    _compact_frontier(
-                        spark, store, round_id,
-                        probe_udf=c_probe_udf, probe_fn=c_probe_fn,
-                        use_bloom=use_bloom,
-                        seen_count=sum(
-                            _c(r, "deduped", 0) for r in range(round_id + 1)
-                        ) or None,
-                    )
-                    _trace(f"round {round_id} frontier compaction", t0)
+                    # the bloom already reflects this round's delta
+                    _compact_frontier(spark, store, round_id, bloom)
 
             # --- url_seen bucketed compaction: fold deltas into a
             # catalog-bucketed base when they outgrow it (same knobs as
@@ -1217,7 +1131,6 @@ def run_crawl(
                         write_bucketed,
                     )
 
-                    t0 = time.perf_counter()
                     delta = store.read_table(
                         "url_seen", upto_round=round_id, from_round=sc_round + 1
                     )
@@ -1242,7 +1155,6 @@ def run_crawl(
                     store.set_seen_compaction(
                         round_id, name, cat, rows=sc_rows + seen_since
                     )
-                    _trace(f"round {round_id} url_seen bucketed compaction", t0)
             for df in scratch:  # free this round's caches before the next
                 df.unpersist()
         return store
@@ -1282,7 +1194,6 @@ def run_reingest(
     reingest_seeds_path: str,
     extra_rounds: int = 2,
     default_budget: int = DEFAULT_BUDGET,
-    use_bloom: bool = True,
     max_retries: int = 0,
 ) -> SnapshotStore:
     """Dump→re-ingest cycle (reference: sql/dump_reingest_quarterly.sql —
@@ -1308,6 +1219,6 @@ def run_reingest(
     return run_crawl(
         spark, data_dir, state_dir,
         max_rounds=store.last_round + 1 + extra_rounds,
-        default_budget=default_budget, use_bloom=use_bloom, resume=True,
+        default_budget=default_budget, resume=True,
         max_retries=max_retries,
     )

@@ -37,77 +37,3 @@ ORACLES = {**ORACLES, **ORACLES2, **ORACLES3, **ORACLES4, **ORACLES5, **ORACLES6
 # oracle Arrow schema carries a top-level nested column, so neither
 # class can ship silently again.
 # ---------------------------------------------------------------------
-
-# The driver's correctness gate samples the first 50 registry entries in
-# dict order. Order the registry so the highest-verification-value
-# entries come first (round-5 state):
-#   1. the seven round-4 driver-red entries (array<> columns at the
-#      output boundary crashed the driver's pandas canonicalizer;
-#      values were judge-verified identical; now scalarized per the
-#      authoring note above) — these must turn green in
-#      CORRECTNESS_r05;
-#   2. the six entries never sampled by the driver in r1–r4 (all six
-#      local-pass under the identical gate; judge re-verified r4) —
-#      green rows here zero out the verification-coverage debt: every
-#      one of the 154 registered entries will then have a driver-green
-#      row somewhere in r1–r5;
-#   3. everything already driver-green at least once.
-# The local gate (tools/check_oracle.py) always runs all entries
-# regardless of order. pack_ffd_bins was deregistered in round 4 (no SQL
-# closed form → permanent "no_oracle" red); its exact-oracle twin
-# pack_ffd_twoclass carries the FFD kernel in the battery.
-_FIXED_RED_R04 = [
-    "bib_tei2release", "sp_pdf_hop", "in_enrich_matches",
-    "im_grobid_releases", "im_manifest_matches", "im_cdx_sha1hex",
-    "bib_tei_affiliations",
-]
-_NEVER_DRIVER_CHECKED = [
-    "c9_author_match", "cdx_revisit_resolve", "f10_transfer_fix",
-    "med_frames", "med_pdf_spans", "med_resize",
-]
-# Round-6 sampling order (VERDICT r5 "Next round #1" + this round's
-# optimization changes): the driver samples the FIRST 50 entries, so
-# front-order (a) every entry whose OPERATOR INTERNALS changed in the
-# round-6 optimization pass (restructured plans proven oracle-equal
-# locally — these need a driver-green row), (b) the entries whose code
-# changed in round 5 AFTER their last driver-green row (bf_* backfill
-# min_by fix 6308272, fs_* ladder order-independence 32342c5/093223f),
-# then (c) everything else in prior order (all driver-green on current
-# code lineage at r5).
-_CHANGED_R06 = [
-    # restructured implementations (semantic-equivalence proven vs oracle)
-    "fs_dataset_ingest", "ir_bm25_topk", "ann_cosine_topk",
-    "cls_quality_score", "w1_dedup_top1", "a8_last_wins_dedup",
-    "j2_sortmerge_join", "o1_global_rank", "lg_pagerank", "lg_hits",
-    # shingles() consumers (array_distinct rewrite) + minhash verify pushdown
-    "dd_minhash_lsh", "dd_jaccard_pairs", "dd_minhash_incr",
-    "txt_fingerprint", "txt_decontam", "dd_substring_spans",
-    # plan-only changes (scan fan-out opt-out; values unchanged)
-    "q1_pricing_summary", "j1_broadcast_join", "j3_anti_join",
-    "j4_semi_join", "a2_global_count", "a3_count_distinct",
-    "a4_topn_counts", "a5_cube_rollup", "a9_sum",
-    "a10_conditional_pivot", "a11_percentiles", "w2_best_capture",
-    "w3_politeness_topk", "w4_multiplicity_cutoff", "u1_distinct",
-    "u3_except", "st_tumbling_window", "st_session_window",
-    "fr_change_rate", "aj_asof_join", "ann_pq_search",
-    "lg_bfs_depth", "lg_indegree", "lg_anchor_topk", "cu_dsir_score",
-]
-_STALE_R05 = [
-    "bf_unextracted", "bf_ungrobid", "bf_regrobid",
-    "fs_verify_local", "fs_web_fetch", "fs_check_existing",
-]
-_front = [
-    k for k in _CHANGED_R06 if k in QUERIES
-] + [
-    k for k in _STALE_R05 if k in QUERIES and k not in _CHANGED_R06
-] + [
-    k for k in _FIXED_RED_R04 if k in QUERIES and k not in _CHANGED_R06  # guard vs deregistration (ADVICE r5)
-] + [
-    k for k in _NEVER_DRIVER_CHECKED
-    if k in QUERIES and k not in _CHANGED_R06 and k not in _STALE_R05
-] + [
-    k for k in QUERIES
-    if k not in _CHANGED_R06 and k not in _STALE_R05
-    and k not in _FIXED_RED_R04 and k not in _NEVER_DRIVER_CHECKED
-]
-QUERIES = {k: QUERIES[k] for k in _front}

@@ -20,9 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, fanout: bool | None = None
-) -> DataFrame:
+def _t(spark: SparkSession, sf_dir: str, name: str, fanout: bool = True) -> DataFrame:
     """Battery table scan, split-aware.
 
     Parquet scans parallelize at ROW-GROUP granularity, and the bench
@@ -42,15 +40,11 @@ def _t(
     partial stage collapses the data or re-shuffles it anyway), the
     round-robin fan-out is a pure extra pass over the table (the r5
     one-shot bench caught this as a regression cluster — a5/w1/fr/aj).
-    ``fanout=True`` forces it regardless of the footer heuristics."""
+    ``fanout=True`` (the default) applies the footer heuristics."""
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
-    if fanout is False:
+    if not fanout:
         return df
-    if fanout is True:
-        return df.repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions"))
-        )
     try:
         import pyarrow.parquet as pq
 

@@ -1354,17 +1354,17 @@ ORACLES2.update(
 )
 
 
-# --- cuckoo URL-seen + weighted sampling -------------------------------
+# --- standalone URL-seen + weighted sampling ----------------------------
 
 
 def cf_anti_join(spark, sf_dir):
-    """Cuckoo-prefiltered new-keys anti-join (the deletable half of the
-    north rule's "bloom/cuckoo" URL-seen): candidates probe the sharded
-    cuckoo table (cogrouped, executor-side), definitely-new rows skip
-    the confirm shuffle, maybe-seen rows are confirmed exactly. The
-    oracle states the exact anti-join answer — the filter must be
-    invisible in the result."""
-    from sandcrawler_spark.operators import cuckoo
+    """Bloom-prefiltered new-keys anti-join outside a crawl: candidates
+    probe a throwaway sharded bloom over the seen set (built and probed
+    executor-side, cogrouped), definitely-new rows skip the confirm
+    shuffle, maybe-seen rows are confirmed exactly. The oracle states
+    the exact anti-join answer — the filter must be invisible in the
+    result."""
+    from sandcrawler_spark.operators.bloom import seen_anti_join
 
     docs = _t(spark, sf_dir, "documents")
     cand = docs.where(F.col("doc_id") < 400).select(
@@ -1373,7 +1373,7 @@ def cf_anti_join(spark, sf_dir):
     seen = docs.where((F.col("doc_id") % 3 == 0)).select(
         F.concat(F.lit("u"), F.col("doc_id").cast("string")).alias("url")
     )
-    return cuckoo.seen_anti_join_cuckoo(cand, seen, "url", num_shards=8)
+    return seen_anti_join(cand, seen, ["url"], "url")
 
 
 def smp_weighted(spark, sf_dir):

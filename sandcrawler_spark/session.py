@@ -58,6 +58,22 @@ def _tmpfs_local_dir() -> str | None:
     return os.path.join(base, f"pid-{os.getpid()}")
 
 
+def memory_for(mem_total_kb: int) -> tuple[str, str]:
+    """(driver heap, off-heap) sizes for a machine with ``mem_total_kb``
+    of RAM: a quarter of it for the heap, at most 8g, and half the heap
+    again off-heap, each at least 1g (16 GB -> 3g/1g). A larger heap
+    than the machine can back lets the JVM grow until the kernel kills
+    it instead of collecting."""
+    heap_g = max(1, min(8, mem_total_kb // (4 << 20)))
+    return f"{heap_g}g", f"{max(1, heap_g // 2)}g"
+
+
+def _machine_memory() -> tuple[str, str]:
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return memory_for(kb)
+
+
 def get_spark(
     app: str = "sandcrawler_spark",
     cores: int | None = None,
@@ -84,6 +100,11 @@ def get_spark(
     master = f"local[{cores}]" if cores and cores > 0 else "local[*]"
     if shuffle_partitions is None:
         shuffle_partitions = cores if cores and cores > 0 else (os.cpu_count() or 8)
+    heap = os.environ.get("SPARK_DRIVER_MEM")
+    offheap = os.environ.get("SPARK_OFFHEAP")
+    if heap is None or offheap is None:
+        fit_heap, fit_offheap = _machine_memory()
+        heap, offheap = heap or fit_heap, offheap or fit_offheap
 
     b = (
         SparkSession.builder.master(master)
@@ -99,8 +120,13 @@ def get_spark(
         # seed canonicalization at 32 cores: ~20% faster warm
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "96g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
+        # plan strings feed only logs and listener events, yet AQE renders
+        # one per plan update; a long lazy lineage (a round fed another
+        # round's unmaterialized output) made them outgrow a machine-sized
+        # heap. Spark's documented bound for that; audited plans are <100k
+        .config("spark.sql.maxPlanStringLength", "4m")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # sandbox-scale inputs are single files of tens of MB; 16m keeps
         # their row groups fanning out across cores (production/100TB:
@@ -109,9 +135,10 @@ def get_spark(
         .config("spark.sql.files.openCostInBytes", "1m")
         # Tungsten execution + storage off-heap: measured 1.6× on the
         # frontier round (GC was 266s/round at 16 concurrent tasks with
-        # on-heap caches)
+        # on-heap caches). Heap and off-heap default to memory_for(this
+        # machine); SPARK_DRIVER_MEM / SPARK_OFFHEAP override each.
         .config("spark.memory.offHeap.enabled", "true")
-        .config("spark.memory.offHeap.size", os.environ.get("SPARK_OFFHEAP", "32g"))
+        .config("spark.memory.offHeap.size", offheap)
         # raise the min_by/max_by (ObjectHashAggregate) sort fallback —
         # the 128-entry default silently degrades the dedup aggregation
         # to sort-based; the frontier dedup keys fit comfortably in RAM

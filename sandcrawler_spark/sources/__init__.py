@@ -1,3 +1,3 @@
 """Sources & sinks: CDX text scan, JSON-lines, zip/binary blobs, blob
-fan-out sinks, Kafka (gated), and the Iceberg-or-parquet table store
-(see plans.state)."""
+fan-out sinks, and the Iceberg-or-parquet table store (see
+plans.state)."""

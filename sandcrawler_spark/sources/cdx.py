@@ -93,20 +93,6 @@ def filter_pdfs(cdx: DataFrame) -> DataFrame:
     )
 
 
-SCHOLARLY_SURT_RE = (
-    # F4 union regex in the spirit of pig/filter-cdx-paper-pdfs.pig:24-36:
-    # edu/tilde dirs, publication path words, journal-ish domain words,
-    # DOI-like path segments
-    r"(^edu,)|(/~[^/]+/)|(/(pubs?|research|publications?|papers?|articles?)/)"
-    r"|(journal|scielo|revista|article)|(/10\.[0-9]{3,5}/)"
-)
-
-
-def filter_scholarly(cdx: DataFrame) -> DataFrame:
-    """F4: scholarly-URL heuristic — one Catalyst-compiled rlike."""
-    return cdx.filter(F.col("surt").rlike(SCHOLARLY_SURT_RE))
-
-
 def _sha1_top1(cdx: DataFrame) -> DataFrame:
     """Distinct-by-sha1 keeping one deterministic row (the pig scripts'
     ``GROUP BY sha1sum`` + ``TOP(1, ...)``, filter-cdx-tarball.pig:30-34)

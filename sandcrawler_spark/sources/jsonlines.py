@@ -1,8 +1,7 @@
-"""JSON-lines source (S2) + JSON/blob sinks (S8, S13).
+"""JSON-lines source (S2) + blob sinks (S13).
 
 Reference: JsonLinePusher (workers.py:374-409) reads JSON-per-line task
-files and counts undecodable lines instead of failing; the Postgres→JSON
-dump (sql/dump_reingest_quarterly.sql) writes row_to_json lines; the
+files and counts undecodable lines instead of failing; the
 disk blob sink (persist.py:437-467) fans TEI-XML out to
 ``aa/bb/<sha1>...`` prefix directories.
 """
@@ -24,12 +23,6 @@ def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | str | None
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)
-
-
-def write_jsonl(df: DataFrame, path: str, partitions: int | None = None) -> None:
-    """S8: snapshot dump as JSON-lines (the COPY row_to_json analogue)."""
-    out = df.repartition(partitions) if partitions else df
-    out.write.mode("overwrite").json(path)
 
 
 def write_blob_fanout(df: DataFrame, path: str, key_col: str = "sha1hex") -> None:

@@ -11,8 +11,8 @@ reference's 'one decode, five upserts' transaction body). At-least-once
 stream delivery + key-deduped MERGE = effectively-once, replacing the
 reference's manual offset-store-after-process (workers.py:595-598).
 
-File-based streams are used here (Kafka jars absent — sources/kafka.py
-builds the production source); semantics are source-agnostic.
+File-based streams are used here (Kafka jars absent); semantics are
+source-agnostic.
 """
 
 from __future__ import annotations

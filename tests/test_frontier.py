@@ -48,9 +48,7 @@ def _spark_seen(store):
 def test_spark_matches_oracle(spark, fixture_dir, tmp_path):
     rounds = 3
     oracle = run_oracle(fixture_dir, max_rounds=rounds)
-    store = run_crawl(
-        spark, fixture_dir, str(tmp_path / "state"), max_rounds=rounds, use_bloom=True
-    )
+    store = run_crawl(spark, fixture_dir, str(tmp_path / "state"), max_rounds=rounds)
 
     spark_orders = _spark_orders(store)
     assert len(spark_orders) == len(oracle.fetch_orders)
@@ -122,14 +120,6 @@ def test_resume_after_torn_uncommitted_writes(spark, fixture_dir, tmp_path):
     part = run_crawl(spark, fixture_dir, part_dir, max_rounds=3, resume=True)
     assert _spark_orders(full) == _spark_orders(part)
     assert _spark_seen(full) == _spark_seen(part)
-
-
-def test_no_bloom_same_result(spark, fixture_dir, tmp_path):
-    """Bloom is a prefilter only — disabling it must not change results."""
-    with_b = run_crawl(spark, fixture_dir, str(tmp_path / "b1"), max_rounds=2, use_bloom=True)
-    no_b = run_crawl(spark, fixture_dir, str(tmp_path / "b0"), max_rounds=2, use_bloom=False)
-    assert _spark_orders(with_b) == _spark_orders(no_b)
-    assert _spark_seen(with_b) == _spark_seen(no_b)
 
 
 def test_compaction_digest_neutral_and_bounded_input(spark, fixture_dir, tmp_path):

@@ -263,3 +263,15 @@ def test_tmpfs_local_dir_reaps_dead_pid_dirs(monkeypatch, tmp_path):
         assert os.path.exists(live)
     finally:
         _shutil.rmtree(base, ignore_errors=True)
+
+
+def test_session_memory_fits_the_machine():
+    """Driver heap = a quarter of RAM capped at 8g, off-heap = half the
+    heap, each at least 1g — never more than the machine can back."""
+    from sandcrawler_spark.session import memory_for
+
+    gib_kb = 1 << 20
+    assert memory_for(16 * gib_kb) == ("4g", "2g")
+    assert memory_for(16_393_000) == ("3g", "1g")  # a 16 GB box's MemTotal
+    assert memory_for(256 * gib_kb) == ("8g", "4g")
+    assert memory_for(2 * gib_kb) == ("1g", "1g")

@@ -5,25 +5,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def test_bloom_no_false_negatives(spark):
-    from sandcrawler_spark.operators.bloom import build_bloom, bloom_might_contain_udf
-
-    seen = spark.createDataFrame([(f"http://h/{i}",) for i in range(2000)], "u string")
-    blob, mask = build_bloom(seen, "u")
-    probe = bloom_might_contain_udf(spark, blob, mask)
-    # every seen key must test positive (bloom has no false negatives)
-    hits = seen.withColumn("m", probe(F.xxhash64("u"))).filter("m").count()
-    assert hits == 2000
-    # unseen keys: false-positive rate stays small
-    unseen = spark.createDataFrame(
-        [(f"http://other/{i}",) for i in range(2000)], "u string"
-    )
-    fp = unseen.withColumn("m", probe(F.xxhash64("u"))).filter("m").count()
-    assert fp < 100  # ~5% worst case at 16 bits/key; typically ≪1%
-
-
-def test_seen_anti_join_exact(spark):
-    from sandcrawler_spark.operators.bloom import seen_anti_join
+def test_seen_anti_join_exact(spark, tmp_path):
+    """Exact with the crawl's store and with the throwaway bloom built
+    when no store is given."""
+    from sandcrawler_spark.operators.bloom import BloomStore, seen_anti_join
 
     cand = spark.createDataFrame(
         [("pdf", f"http://h/{i}") for i in range(500)], "ingest_type string, u string"
@@ -32,8 +17,10 @@ def test_seen_anti_join_exact(spark):
         [("pdf", f"http://h/{i}") for i in range(0, 500, 2)],
         "ingest_type string, u string",
     )
-    for use_bloom in (True, False):
-        out = seen_anti_join(cand, seen, ["ingest_type", "u"], "u", use_bloom=use_bloom)
+    store = BloomStore(str(tmp_path / "bloom"), num_shards=4)
+    store.update(seen.select(F.xxhash64("u").alias("h")), n_delta=250, round_id=0)
+    for bloom in (store, None):
+        out = seen_anti_join(cand, seen, ["ingest_type", "u"], "u", bloom=bloom)
         got = sorted(r["u"] for r in out.collect())
         want = sorted(f"http://h/{i}" for i in range(1, 500, 2))
         assert got == want

@@ -1,9 +1,8 @@
-"""Tests: title slug kernel (C7/C8) and Iceberg MERGE statement policies."""
+"""Tests: title slug kernel (C7/C8)."""
 
 from __future__ import annotations
 
 from sandcrawler_spark.functions.slug import similarity_ratio, title_slug
-from sandcrawler_spark.sources.iceberg import merge_sql
 
 
 def test_title_slug_semantics():
@@ -23,15 +22,3 @@ def test_similarity_ratio():
     assert abs(similarity_ratio("kitten", "sitting") - (1 - 3 / 7)) < 1e-9
     assert similarity_ratio("abcd", "abce") == 0.75
 
-
-def test_merge_sql_policies():
-    # ON CONFLICT DO NOTHING (file_meta, db.py:204-207)
-    s = merge_sql("cat.crawl.file_meta", "src", ["sha1hex"], None,
-                  ["sha1hex", "size_bytes"])
-    assert "WHEN MATCHED" not in s
-    assert "WHEN NOT MATCHED THEN INSERT (sha1hex, size_bytes)" in s
-    # ON CONFLICT DO UPDATE (results, db.py:474-485)
-    s = merge_sql("cat.crawl.url_seen", "src", ["ingest_type", "canonical_url"],
-                  ["hit", "status"], ["ingest_type", "canonical_url", "hit", "status"])
-    assert "t.ingest_type = s.ingest_type AND t.canonical_url = s.canonical_url" in s
-    assert "WHEN MATCHED THEN UPDATE SET t.hit = s.hit, t.status = s.status" in s

@@ -228,42 +228,6 @@ def test_stateful_url_seen_dedup_stream(spark, tmp_path):
     assert got2 == {"http://a/3": (5, 0)}
 
 
-def test_kafka_topic_priority_mapping(spark):
-    """S3 mapping logic without the connector jars: the three request
-    topics rank priority < daily < bulk (kafka/topics.md:28-43)."""
-    from sandcrawler_spark.sources.kafka import topic_priority_col
-
-    df = spark.createDataFrame(
-        [
-            ("sandcrawler-prod.ingest-file-requests-priority",),
-            ("sandcrawler-prod.ingest-file-requests-daily",),
-            ("sandcrawler-prod.ingest-file-requests-bulk",),
-            ("some-other-topic",),
-        ],
-        "topic string",
-    )
-    got = [r["p"] for r in df.select(topic_priority_col().alias("p")).collect()]
-    assert got == [0, 1, 2, 2]
-
-
-def test_kafka_keyed_json_payload(spark):
-    """S4 sink shape without the connector jars: key = sha1hex, value =
-    full row as JSON (workers.py:265-349)."""
-    import json
-
-    from sandcrawler_spark.sources.kafka import keyed_json_payload
-
-    df = spark.createDataFrame(
-        [("aa11", "http://x.example.org/a", 200)],
-        "sha1hex string, url string, status int",
-    )
-    row = keyed_json_payload(df).collect()[0]
-    assert row["key"] == "aa11"
-    assert json.loads(row["value"]) == {
-        "sha1hex": "aa11", "url": "http://x.example.org/a", "status": 200,
-    }
-
-
 def test_rate_limit_stream_token_bucket(spark, tmp_path):
     """Streaming per-host token bucket: first batch bursts to capacity,
     a saturated host is then held to the refill rate (state carried

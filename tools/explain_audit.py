@@ -190,10 +190,11 @@ def main() -> int:
         ("line dedup: agg + anti-join, no python", "txt_line_dedup",
          [r"Aggregate", r"LeftAnti"],
          [r"BatchEvalPython", r"ArrowEvalPython", r"CartesianProduct"]),
-        # cuckoo URL-seen: shard tables built/probed executor-side via
-        # grouped Arrow (never row-Python, never a bitmap collect), and
-        # the confirm stage is a real anti-join
-        ("cuckoo anti-join: cogrouped shards + exact confirm", "cf_anti_join",
+        # standalone URL-seen: a throwaway sharded bloom built and
+        # probed executor-side via grouped Arrow (never row-Python,
+        # never a bitmap collect), and the confirm stage is a real
+        # anti-join
+        ("bloom anti-join: cogrouped probe + exact confirm", "cf_anti_join",
          [r"FlatMapCoGroupsInPandas", r"LeftAnti"],
          [r"BatchEvalPython", r"CartesianProduct"]),
         # ES weighted sample: top-k must be TakeOrderedAndProject

@@ -33,7 +33,6 @@ def main() -> int:
     ap.add_argument("--rounds", type=int, default=4)
     ap.add_argument("--budget", type=int, default=3)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument(
         "--bucketed-seen",
         action="store_true",
@@ -131,7 +130,6 @@ def main() -> int:
         args.state,
         max_rounds=args.rounds,
         default_budget=args.budget,
-        use_bloom=not args.no_bloom,
         resume=args.resume,
         token_bucket=args.token_bucket,
         max_retries=args.max_retries,
