@@ -30,8 +30,10 @@ matches the single-threaded oracle byte-for-byte.
 from __future__ import annotations
 
 import hashlib
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -40,14 +42,16 @@ from sandcrawler_spark.operators.bloom import BloomStore, seen_anti_join
 from sandcrawler_spark.operators.ranking import with_global_rank
 from sandcrawler_spark.plans import schemas as S
 from sandcrawler_spark.plans.state import SnapshotStore
+from sandcrawler_spark.sources.bucketed import read_bucketed, write_bucketed
 
 DEFAULT_BUDGET = 3
 SALT_BUCKETS = 8
 # token-bucket politeness: bucket capacity = CAP_MULT × per-round refill
 # (the robots host_budget); refill happens once per scheduling round
 TOKEN_BUCKET_CAP_MULT = 2
-# robots-rules join strategy cutover: up to this many deduped rule rows
-# the rules side is broadcast (one hash map per executor, zero shuffle);
+# robots-rules join strategy cutover: up to this many robots.parquet rows
+# (footer count, an upper bound on the deduped rule rows) the rules side
+# is broadcast (one hash map per executor, zero shuffle);
 # above it — e.g. 10^8 hosts at the 10^10-URL design point — the join
 # falls back to a shuffle join on host, where AQE's skew-join splitting
 # defuses hot-host partitions (politeness salting happens downstream)
@@ -403,7 +407,6 @@ class RoundResult:
     fetch_ranked: DataFrame      # selected fetch list with global 'rank'
     url_seen_delta: DataFrame
     next_frontier: DataFrame
-    counters: dict
     # the persisted fetch-result cache every output derives from; one
     # action on it materializes the whole round's shared lineage, after
     # which url_seen_delta / fetch_ranked / next_frontier are pure
@@ -661,7 +664,7 @@ def run_round(
     if retries is not None:
         additions = additions.unionByName(retries)
 
-    return RoundResult(fetch_ranked, seen_delta, additions, {}, fetched_cached)
+    return RoundResult(fetch_ranked, seen_delta, additions, fetched_cached)
 
 
 def _assemble_frontier(
@@ -744,8 +747,306 @@ def _compact_frontier(
         store.aux_path(name)
     )
     store.set_compaction(round_id, name, int(obs.get["n"]))
-    for df in scratch:
+    _release(scratch)
+
+
+def _compact_seen(
+    spark: SparkSession, store: SnapshotStore, round_id: int, added: int
+) -> None:
+    """Fold the url_seen deltas since the last bucketed base, together
+    with that base, into ONE catalog-bucketed base table
+    (``sources/bucketed.py``). The base is the raw delta multiset —
+    union-equivalent forever, nothing resolved away."""
+    sc = store.seen_compaction
+    first = sc["round"] + 1 if sc else 0
+    full = store.read_table("url_seen", upto_round=round_id, from_round=first)
+    if sc is not None:
+        base = read_bucketed(spark, store.aux_path(sc["table"]), sc["catalog"])
+        full = base.unionByName(full)
+    name = f"seen_base_r{round_id:05d}"
+    cat = f"seen_base_{hashlib.md5(store.root.encode()).hexdigest()[:8]}_r{round_id}"
+    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    write_bucketed(full, store.aux_path(name), cat, ["ingest_type", "canonical_url"], n_buckets)
+    store.set_seen_compaction(round_id, name, cat, rows=(sc["rows"] if sc else 0) + added)
+
+
+def _compaction_due(since: int, base: int, factor: float | None, min_rows: int) -> bool:
+    """The one trigger both compactions share: the rows added since the
+    last base outgrow it by ``factor`` and number at least ``min_rows``."""
+    return factor is not None and since >= min_rows and since > factor * max(base, 1)
+
+
+def _release(dfs: list[DataFrame]) -> None:
+    """Unpersist every DataFrame in ``dfs`` and empty the list."""
+    for df in dfs:
         df.unpersist()
+    dfs.clear()
+
+
+@dataclass
+class _Crawl:
+    """What the phases of one ``run_crawl`` call share: the session, the
+    committed state and its bloom, the cached rules table and the
+    crawl's options."""
+
+    spark: SparkSession
+    store: SnapshotStore
+    bloom: BloomStore
+    rules: DataFrame
+    rules_broadcastable: bool
+    default_budget: int
+    max_retries: int
+    token_bucket: bool
+    bucketed_seen: bool
+    compact_factor: float | None
+    compact_min_rows: int
+
+    def counter(self, round_id: int, key: str, default=0):
+        """One committed round's counter (``default`` when absent)."""
+        return self.store.counters().get(str(round_id), {}).get(key, default)
+
+
+def _seed_round0(c: _Crawl, data_dir: str) -> tuple[DataFrame, int]:
+    """Round 0's frontier: the seeds, canonicalized ONCE into the state
+    dir; their forced and total row counts ride the write job as an
+    Observation. Returns (frontier, input_row_count)."""
+    path = c.store.aux_path("seeds_prepared")
+    obs = Observation()
+    prepare_seeds(c.spark.read.parquet(f"{data_dir}/seeds.parquet")).observe(
+        obs,
+        F.sum(F.col("force_recrawl").cast("int")).alias("nf"),
+        F.count(F.lit(1)).alias("n"),
+    ).write.mode("overwrite").parquet(path)
+    n = int(obs.get["n"])
+    c.store.note_forced_seeds(int(obs.get["nf"] or 0))
+    c.store.note_seed_rows("seeds_prepared", n)
+    return c.spark.read.parquet(path), n
+
+
+def _crawl_finished(c: _Crawl, round_id: int) -> bool:
+    """True when the previous round selected and discovered nothing, no
+    seeds were registered for this round, and no retry is backing off:
+    a dormant retry becomes eligible at its not_before round, so the
+    crawl is NOT stale while one is pending, even across all-quiet
+    backoff-gap rounds."""
+    stale = (
+        c.counter(round_id - 1, "scheduled", None) == 0
+        and c.counter(round_id - 1, "frontier_rows", None) == 0
+    )
+    horizon = max((c.counter(r, "retry_horizon") for r in range(round_id)), default=0)
+    return stale and c.store.seeds_added_at_round != round_id and round_id > horizon
+
+
+def _read_seen(
+    c: _Crawl, round_id: int
+) -> tuple[DataFrame | None, tuple[DataFrame, DataFrame | None] | None]:
+    """The seen set of the rounds before ``round_id`` (resolved
+    last-round-wins once forced rows exist), plus the (bucketed base,
+    plain deltas since) parts the exact confirm anti-joins separately
+    when a bucketed base exists: the base side plans shuffle-free, and
+    the anti-join is key-presence-only, so resolution-neutral."""
+    sc = c.store.seen_compaction if c.bucketed_seen else None
+    parts = None
+    if sc is not None and sc["round"] <= round_id - 1:
+        base = read_bucketed(c.spark, c.store.aux_path(sc["table"]), sc["catalog"])
+        delta = c.store.read_table(
+            "url_seen", upto_round=round_id - 1, from_round=sc["round"] + 1
+        )
+        url_seen = base if delta is None else base.unionByName(delta)
+        parts = (base, delta)
+    else:
+        url_seen = c.store.read_table("url_seen", upto_round=round_id - 1)
+    if url_seen is not None and any(c.counter(r, "forced") for r in range(round_id)):
+        url_seen = resolve_url_seen(url_seen)
+    return url_seen, parts
+
+
+def _bloom_add(c: _Crawl, round_id: int, n_delta: int) -> None:
+    """OR one round's written url_seen delta into the bloom. Idempotent,
+    so safe to redo when a crash forces the round to re-run."""
+    delta = c.store.read_round_table(round_id, "url_seen")
+    c.bloom.update(
+        delta.select(F.col("url_hash").alias("h")), n_delta=n_delta, round_id=round_id
+    )
+
+
+def _sync_bloom(c: _Crawl, url_seen: DataFrame, round_id: int) -> None:
+    """Bring the sharded bloom up to the rounds before ``round_id``.
+    Normally it already is, from the previous round's delta update (no
+    Spark job here at all). A bloom behind the committed rounds (resume
+    after a crash in the update window) replays the missing rounds'
+    url_seen DELTAS — O(missing deltas); the full distributed rebuild is
+    only for capacity overflow or absent/corrupt state (amortized
+    O(log n) times per crawl)."""
+    if c.bloom.needs_rebuild() or (
+        not c.bloom.ready_for(round_id) and c.bloom.version < 0
+    ):
+        # key count from manifest counters: saves a count job
+        n_keys = sum(c.counter(r, "deduped") for r in range(round_id))
+        c.bloom.rebuild(
+            url_seen.select(F.col("url_hash").alias("h")),
+            n_keys=n_keys or url_seen.count(),
+            round_id=round_id - 1,
+        )
+    else:  # empty range when ready (or ahead after an uncommitted update)
+        for r in range(c.bloom.round_id + 1, round_id):
+            _bloom_add(c, r, c.counter(r, "deduped"))
+
+
+def _read_host_tokens(c: _Crawl, round_id: int) -> DataFrame | None:
+    """Token-bucket state left by the previous round (empty in round 0:
+    hosts never seen start full); None with the flat budget."""
+    if not c.token_bucket:
+        return None
+    if round_id == 0:
+        return c.spark.createDataFrame([], "host string, tokens int")
+    return c.store.read_round_table(round_id - 1, "hosts")
+
+
+def _next_host_tokens(
+    c: _Crawl, fetch_ranked: DataFrame, host_tokens: DataFrame
+) -> DataFrame:
+    """Next round's bucket state: tokens' = min(cap, tokens - consumed +
+    refill). Only hosts that ever consumed need a row — absent hosts are
+    implicitly full (min(cap, cap-0+b) = cap), so the state table stays
+    O(active hosts)."""
+    consumed = fetch_ranked.groupBy("host").agg(F.count("*").alias("__c"))
+    prev = host_tokens.withColumnRenamed("tokens", "__t")
+    budgets = c.rules.select("host", "host_budget")
+    if c.rules_broadcastable:
+        budgets = F.broadcast(budgets)
+    universe = prev.select("host").unionByName(consumed.select("host")).distinct()
+    refill = F.coalesce("host_budget", F.lit(c.default_budget))
+    cap = refill * F.lit(TOKEN_BUCKET_CAP_MULT)
+    return (
+        universe.join(prev, "host", "left")
+        .join(consumed, "host", "left")
+        .join(budgets, "host", "left")
+        .select(
+            "host",
+            F.least(cap, F.coalesce("__t", cap) - F.coalesce("__c", F.lit(0)) + refill)
+            .cast("int")
+            .alias("tokens"),
+        )
+    )
+
+
+def _observed_writes(
+    c: _Crawl, rr: RoundResult, host_tokens: DataFrame | None
+) -> tuple[dict[str, DataFrame], tuple[Observation, Observation, Observation]]:
+    """The round's tables to write, keyed by table name, and the three
+    Observations (url_seen, fetch_order, frontier_add) that carry the
+    round's counters (A7) and crawl-order digest on the WRITE jobs —
+    zero extra actions per round."""
+    obs_seen, obs_fetch, obs_frontier = Observation(), Observation(), Observation()
+    seen_df = rr.url_seen_delta.observe(
+        obs_seen,
+        F.count(F.lit(1)).alias("deduped"),
+        F.sum(F.col("forced").cast("int")).alias("forced"),
+        *[
+            F.sum(F.when(F.col("status") == s, 1).otherwise(0)).alias(s)
+            for s in S.ALL_STATUSES
+        ],
+    )
+    fetch_df = rr.fetch_ranked.select(
+        "rank", "ingest_type", "canonical_url", "host", "priority", "depth"
+    ).observe(
+        obs_fetch,
+        F.count(F.lit(1)).alias("scheduled"),
+        F.bit_xor(
+            F.xxhash64(
+                F.concat_ws("|", F.col("rank").cast("string"), F.col("canonical_url"))
+            )
+        ).alias("digest"),
+    )
+    frontier_exprs = [F.count(F.lit(1)).alias("frontier_rows")]
+    if c.max_retries > 0:
+        # count of re-enqueued rows + the furthest backoff round (the
+        # keep-alive horizon of _crawl_finished)
+        frontier_exprs += [
+            F.sum((F.col("attempt") > 0).cast("long")).alias("retried"),
+            F.max("not_before").alias("retry_horizon"),
+        ]
+    writes = {
+        "url_seen": seen_df,
+        "frontier_add": rr.next_frontier.observe(obs_frontier, *frontier_exprs),
+        "fetch_order": fetch_df,
+    }
+    if host_tokens is not None:
+        writes["hosts"] = _next_host_tokens(c, rr.fetch_ranked, host_tokens)
+    return writes, (obs_seen, obs_fetch, obs_frontier)
+
+
+def _round_counters(
+    c: _Crawl,
+    observed: tuple[Observation, Observation, Observation],
+    input_rows: int,
+) -> dict[str, int]:
+    """The round's manifest counters, from its three write Observations."""
+    seen, fetch, frontier = (o.get for o in observed)
+    counters = {f"status:{s}": int(seen[s]) for s in S.ALL_STATUSES if seen[s]}
+    counters["deduped"] = int(seen["deduped"])
+    counters["scheduled"] = int(fetch["scheduled"])
+    counters["order_digest"] = int(fetch["digest"] or 0)
+    counters["frontier_rows"] = int(frontier["frontier_rows"])
+    counters["forced"] = int(seen["forced"] or 0)
+    if c.max_retries > 0:
+        counters["retried"] = int(frontier["retried"] or 0)
+        counters["retry_horizon"] = int(frontier["retry_horizon"] or 0)
+    # phase-profile evidence that compaction keeps round input
+    # O(active): derived from manifest counters, no extra action
+    counters["frontier_input_rows"] = input_rows
+    return counters
+
+
+def _write_and_commit(
+    c: _Crawl, round_id: int, rr: RoundResult, host_tokens: DataFrame | None,
+    input_rows: int,
+) -> None:
+    """Write the round's tables and commit its manifest entry.
+
+    ONE action on the persisted fetch-result cache materializes the
+    round's shared lineage first; every table is then a pure cache
+    reader, so all writes run concurrently on one pool without
+    race-computing shared stages. The bloom update is chained on the
+    url_seen write landing and overlaps the other writes: it reads the
+    just-written delta (a disjoint scan). A bloom ahead of the committed
+    manifest only costs extra exact checks, never correctness — it is a
+    prefilter backed by the exact anti-join."""
+    writes, observed = _observed_writes(c, rr, host_tokens)
+    rr.fetched.count()
+    with ThreadPoolExecutor(max_workers=len(writes) + 1) as pool:
+        done = {n: pool.submit(c.store.write_table, round_id, n, df) for n, df in writes.items()}
+
+        def bloom_update() -> None:
+            done["url_seen"].result()
+            _bloom_add(c, round_id, int(observed[0].get["deduped"]))
+
+        bloom_done = pool.submit(bloom_update)
+    for f in [*done.values(), bloom_done]:
+        f.result()  # a failed write or bloom update aborts before commit
+    c.store.commit_round(round_id, _round_counters(c, observed, input_rows))
+
+
+def _compact(c: _Crawl, round_id: int) -> None:
+    """After a commit: fold the frontier sources into one active-only
+    base, and with ``bucketed_seen`` the url_seen deltas into one
+    bucketed base, each when what was added since its last base
+    outgrows it."""
+    comp = c.store.compaction
+    first = comp["round"] + 1 if comp else 0
+    added = sum(c.counter(r, "frontier_rows") for r in range(first, round_id + 1))
+    base = comp["rows"] if comp else c.store.seed_rows
+    if _compaction_due(added, base, c.compact_factor, c.compact_min_rows):
+        # the bloom already reflects this round's delta
+        _compact_frontier(c.spark, c.store, round_id, c.bloom)
+    if not c.bucketed_seen:
+        return
+    sc = c.store.seen_compaction
+    first = sc["round"] + 1 if sc else 0
+    added = sum(c.counter(r, "deduped") for r in range(first, round_id + 1))
+    if _compaction_due(added, sc["rows"] if sc else 0, c.compact_factor, c.compact_min_rows):
+        _compact_seen(c.spark, c.store, round_id, added)
 
 
 def run_crawl(
@@ -756,13 +1057,18 @@ def run_crawl(
     default_budget: int = DEFAULT_BUDGET,
     resume: bool = False,
     token_bucket: bool = False,
-    rules_broadcast_max: int = RULES_BROADCAST_MAX,
     compact_factor: float | None = 2.0,
     compact_min_rows: int = 50_000,
     max_retries: int = 0,
     bucketed_seen: bool = False,
 ) -> SnapshotStore:
     """Multi-round crawl driver with snapshot commit + exact resume.
+
+    Each round reads committed state, runs the round job, and commits
+    (url_seen delta, next frontier, ranked fetch order, counters)
+    atomically. Killing the process between commits and re-running with
+    ``resume=True`` continues from the last committed round with
+    identical results (north_rule checkpoint/lineage requirement).
 
     ``bucketed_seen=True`` periodically folds the accumulated url_seen
     deltas into ONE catalog-bucketed base table (bucketed+sorted by the
@@ -777,12 +1083,6 @@ def run_crawl(
     storage-partitioned joins. Trigger/cadence shares
     ``compact_factor`` / ``compact_min_rows`` with frontier compaction.
 
-    Each round reads committed state, runs the round job, and commits
-    (url_seen delta, next frontier, ranked fetch order, counters)
-    atomically. Killing the process between commits and re-running with
-    ``resume=True`` continues from the last committed round with
-    identical results (north_rule checkpoint/lineage requirement).
-
     ``token_bucket=True`` switches politeness from a flat per-round
     budget to per-host token buckets persisted on a ``hosts`` state
     table (north_star): refill = robots host_budget per round, capacity
@@ -796,9 +1096,14 @@ def run_crawl(
     where every pending candidate is backing off (the persisted
     retry_horizon counter). Default 0 preserves the historical
     terminal-bad semantics byte-for-byte. Mirrored by the oracle.
+
+    Everything the call persists is unpersisted, and AQE restored, on
+    every exit.
     """
     store = SnapshotStore(state_dir, spark)
-    bloom = BloomStore(store.aux_path("bloom"))
+    start_round = store.last_round + 1 if resume else 0
+    if start_round == 0 and store.last_round >= 0:
+        raise ValueError(f"state dir {state_dir} not empty; pass resume=True")
     parallelism = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # AQE off for the scheduling rounds: shuffle partitions are already
     # sized explicitly, and AQE's per-shuffle-stage re-planning adds
@@ -808,20 +1113,11 @@ def run_crawl(
     # its planning cost — re-enable via spark-defaults there.
     aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    cached: list[DataFrame] = []  # the crawl's static join sides
+    scratch: list[DataFrame] = []  # the in-flight round's caches
     try:
         robots = spark.read.parquet(f"{data_dir}/robots.parquet")
-        # Rules are static across rounds: dedup ONCE, cache, and decide
-        # the join strategy from the actual cardinality (the one count
-        # action here replaces a per-round dedup recompute). The count
-        # is submitted on a thread and resolved right before the first
-        # run_round, so it OVERLAPS the round-0 seed canonicalization
-        # job instead of serializing ahead of it.
-        from concurrent.futures import ThreadPoolExecutor
-
-        rules_tbl = _dedup_rules(robots).persist()
-        _rules_pool = ThreadPoolExecutor(max_workers=1)
-        _rules_future = _rules_pool.submit(rules_tbl.count)
-        rules_broadcastable: bool | None = None  # resolved lazily below
+        rules = _dedup_rules(robots).persist()  # static across rounds: dedup ONCE
         # pre-partition the per-round join sides ON their join keys and keep
         # them cached: every round's best-capture/outlink join then reuses the
         # exchange instead of re-shuffling the big side (bucketed-table shape)
@@ -835,356 +1131,52 @@ def run_crawl(
             .repartition(parallelism, "doc_id")
             .persist()
         )
-
-        start_round = store.last_round + 1 if resume else 0
-        if start_round == 0 and store.last_round >= 0:
-            raise ValueError(f"state dir {state_dir} not empty; pass resume=True")
-
-        def _c(round_id: int, key: str, default=None):
-            rc = store.counters().get(str(round_id), {})
-            return rc.get(key, default)
-
-        generation = store.generation
-
+        cached += [rules, captures, docs]
+        # the footers' row count bounds the deduped rule rows from above:
+        # it picks the join strategy without a Spark job, and a broadcast
+        # rules table never exceeds RULES_BROADCAST_MAX rows
+        rule_rows = pads.dataset(f"{data_dir}/robots.parquet", format="parquet").count_rows()
+        c = _Crawl(
+            spark, store, BloomStore(store.aux_path("bloom")), rules,
+            rule_rows <= RULES_BROADCAST_MAX, default_budget, max_retries,
+            token_bucket, bucketed_seen, compact_factor, compact_min_rows,
+        )
         for round_id in range(start_round, max_rounds):
             # Append-only frontier: candidates for round r = prepared seeds ∪
             # all additions discovered in rounds < r; processed keys fall out
             # through the url_seen anti-join (no full-frontier rewrite per
             # round — the Iceberg-native layout).
             if round_id == 0:
-                frontier = prepare_seeds(spark.read.parquet(f"{data_dir}/seeds.parquet"))
-                seeds_path = store.aux_path("seeds_prepared")
-                obs_seeds = Observation()
-                frontier.observe(
-                    obs_seeds,
-                    F.sum(F.col("force_recrawl").cast("int")).alias("nf"),
-                    F.count(F.lit(1)).alias("n"),
-                ).write.mode("overwrite").parquet(seeds_path)
-                store.note_forced_seeds(int(obs_seeds.get["nf"] or 0))
-                store.note_seed_rows("seeds_prepared", int(obs_seeds.get["n"]))
-                frontier = spark.read.parquet(seeds_path)  # canonicalize ONCE
-                frontier_input_rows = int(obs_seeds.get["n"])
+                frontier, input_rows = _seed_round0(c, data_dir)
+            elif _crawl_finished(c, round_id):
+                break
             else:
-                stale = (
-                    _c(round_id - 1, "scheduled") == 0
-                    and _c(round_id - 1, "frontier_rows") == 0
-                )
-                # a dormant retry becomes eligible at its not_before
-                # round — the crawl is NOT stale while one is pending,
-                # even across all-quiet backoff-gap rounds
-                retry_horizon = max(
-                    (_c(r, "retry_horizon", 0) for r in range(round_id)), default=0
-                )
-                if (
-                    stale
-                    and store.seeds_added_at_round != round_id
-                    and round_id > retry_horizon
-                ):
-                    break  # no selections, no discoveries, no new seeds → done
-                frontier, frontier_input_rows = _assemble_frontier(
+                frontier, input_rows = _assemble_frontier(
                     spark, store, upto_round=round_id - 1
                 )
-            seen_parts = None
-            sc = store.seen_compaction if bucketed_seen else None
-            if sc is not None and sc["round"] <= round_id - 1:
-                from sandcrawler_spark.sources.bucketed import read_bucketed
-
-                seen_base = read_bucketed(
-                    spark, store.aux_path(sc["table"]), sc["catalog"]
-                )
-                seen_delta = store.read_table(
-                    "url_seen", upto_round=round_id - 1, from_round=sc["round"] + 1
-                )
-                url_seen = (
-                    seen_base
-                    if seen_delta is None
-                    else seen_base.unionByName(seen_delta)
-                )
-                # confirm anti-joins run per part: the bucketed base
-                # side plans shuffle-free; resolution below (forced
-                # path) touches only the unioned payload view — the
-                # anti-join is key-presence-only, resolution-neutral
-                seen_parts = (seen_base, seen_delta)
-            else:
-                url_seen = store.read_table("url_seen", upto_round=round_id - 1)
-            any_forced = any(_c(r, "forced", 0) for r in range(round_id))
-            if url_seen is not None and any_forced:
-                url_seen = resolve_url_seen(url_seen)
-
-            # --- sharded incremental bloom: normally already up to date from
-            # the previous round's delta update (no Spark job here at all).
-            # A bloom behind the committed rounds (resume after a crash in
-            # the update window) catches up by replaying the missing rounds'
-            # url_seen DELTAS — O(missing deltas), not a full rebuild; the
-            # full distributed rebuild remains only for capacity overflow or
-            # absent/corrupt state (amortized O(log n) times per crawl).
+            url_seen, seen_parts = _read_seen(c, round_id)
             if url_seen is not None:
-                if bloom.needs_rebuild() or (
-                    not bloom.ready_for(round_id) and bloom.version < 0
-                ):
-                    # key count from manifest counters: saves a count job
-                    seen_count = sum(_c(r, "deduped", 0) for r in range(round_id))
-                    bloom.rebuild(
-                        url_seen.select(F.col("url_hash").alias("h")),
-                        n_keys=seen_count or url_seen.count(),
-                        round_id=round_id - 1,
-                    )
-                elif not bloom.ready_for(round_id):
-                    for r in range(bloom.round_id + 1, round_id):
-                        delta = store.read_round_table(r, "url_seen")
-                        bloom.update(
-                            delta.select(F.col("url_hash").alias("h")),
-                            n_delta=_c(r, "deduped", 0),
-                            round_id=r,
-                        )
-
-            host_tokens = None
-            if token_bucket:
-                host_tokens = (
-                    store.read_round_table(round_id - 1, "hosts")
-                    if round_id > 0
-                    else spark.createDataFrame([], "host string, tokens int")
-                )
-
-            if rules_broadcastable is None:
-                rules_broadcastable = _rules_future.result() <= rules_broadcast_max
-                _rules_pool.shutdown(wait=False)
-
-            scratch: list[DataFrame] = []
+                _sync_bloom(c, url_seen, round_id)
+            host_tokens = _read_host_tokens(c, round_id)
             rr = run_round(
                 spark, frontier, url_seen, robots, captures, docs,
-                round_id, default_budget, bloom=bloom,
-                scratch=scratch, generation=generation,
+                round_id, default_budget, bloom=c.bloom,
+                scratch=scratch, generation=store.generation,
                 has_forced=store.forced_seeds > 0,
                 host_tokens=host_tokens,
-                prepared_rules=rules_tbl,
-                rules_broadcastable=rules_broadcastable,
+                prepared_rules=rules,
+                rules_broadcastable=c.rules_broadcastable,
                 max_retries=max_retries,
                 seen_confirm_parts=seen_parts,
             )
-
-            # Counters (A7) + crawl-order digest ride the WRITE jobs as
-            # Observations — zero extra actions per round.
-            obs_seen, obs_fetch, obs_frontier = Observation(), Observation(), Observation()
-            status_exprs = [
-                F.sum(F.when(F.col("status") == s, 1).otherwise(0)).alias(s)
-                for s in S.ALL_STATUSES
-            ]
-            seen_df = rr.url_seen_delta.observe(
-                obs_seen,
-                F.count(F.lit(1)).alias("deduped"),
-                F.sum(F.col("forced").cast("int")).alias("forced"),
-                *status_exprs,
-            )
-            fetch_df = rr.fetch_ranked.select(
-                "rank", "ingest_type", "canonical_url", "host", "priority", "depth"
-            ).observe(
-                obs_fetch,
-                F.count(F.lit(1)).alias("scheduled"),
-                F.bit_xor(
-                    F.xxhash64(
-                        F.concat_ws("|", F.col("rank").cast("string"), F.col("canonical_url"))
-                    )
-                ).alias("digest"),
-            )
-            frontier_exprs = [F.count(F.lit(1)).alias("frontier_rows")]
-            if max_retries > 0:
-                # retry bookkeeping rides the same write-job Observation:
-                # count of re-enqueued rows + the furthest backoff round
-                # (keep-alive horizon for the stale check above)
-                frontier_exprs += [
-                    F.sum((F.col("attempt") > 0).cast("long")).alias("retried"),
-                    F.max("not_before").alias("retry_horizon"),
-                ]
-            frontier_df = rr.next_frontier.observe(obs_frontier, *frontier_exprs)
-            # Materialize the round's shared lineage with ONE action on
-            # the persisted fetch-result cache; every per-round output
-            # (url_seen delta, fetch order, frontier additions, hosts)
-            # is then a pure cache reader, so ALL write jobs can be
-            # submitted concurrently below. (History: submitting the
-            # writes concurrently WITHOUT this barrier race-computed the
-            # shared uncached stages — worse with more cores; round 3
-            # phased the url_seen write first to fix that, which
-            # serialized its write against the other two. The explicit
-            # materialize keeps exactly-once compute AND overlaps every
-            # write — one less sequential barrier per round.)
-            rr.fetched.count()
-            writes = {"url_seen": seen_df, "frontier_add": frontier_df, "fetch_order": fetch_df}
-            if token_bucket:
-                # next round's bucket state: tokens' = min(cap, tokens -
-                # consumed + refill). Only hosts that ever consumed need a
-                # row — absent hosts are implicitly full (min(cap, cap-0+b)
-                # = cap), so the state table stays O(active hosts).
-                consumed = rr.fetch_ranked.groupBy("host").agg(
-                    F.count("*").alias("__c")
-                )
-                prev = host_tokens.withColumnRenamed("tokens", "__t")
-                budgets = rules_tbl.select("host", "host_budget")
-                if rules_broadcastable:
-                    budgets = F.broadcast(budgets)
-                universe = (
-                    prev.select("host").unionByName(consumed.select("host")).distinct()
-                )
-                refill = F.coalesce("host_budget", F.lit(default_budget))
-                hosts_df = (
-                    universe.join(prev, "host", "left")
-                    .join(consumed, "host", "left")
-                    .join(budgets, "host", "left")
-                    .select(
-                        "host",
-                        F.least(
-                            refill * F.lit(TOKEN_BUCKET_CAP_MULT),
-                            F.coalesce(
-                                F.col("__t"),
-                                refill * F.lit(TOKEN_BUCKET_CAP_MULT),
-                            )
-                            - F.coalesce(F.col("__c"), F.lit(0))
-                            + refill,
-                        )
-                        .cast("int")
-                        .alias("tokens"),
-                    )
-                )
-                writes["hosts"] = hosts_df
-            wpool = ThreadPoolExecutor(max_workers=len(writes) + 1)
-            wfuts = {
-                n: wpool.submit(store.write_table, round_id, n, df)
-                for n, df in writes.items()
-            }
-            # Bloom delta update chained on the url_seen write landing,
-            # overlapping the remaining writes: it reads the just-written
-            # delta (a disjoint scan — no cache lineage raced twice) and
-            # the OR is idempotent — safe to redo if a crash forces the
-            # round to re-run. The bloom is
-            # a prefilter backed by the exact anti-join, so even a bloom
-            # ahead of the committed manifest only costs extra exact
-            # checks, never correctness.
-            def _bloom_update():
-                wfuts["url_seen"].result()
-                delta = store.read_round_table(round_id, "url_seen")
-                bloom.update(
-                    delta.select(F.col("url_hash").alias("h")),
-                    n_delta=int(obs_seen.get["deduped"]),
-                    round_id=round_id,
-                )
-
-            bloom_future = wpool.submit(_bloom_update)
-            try:
-                for f in wfuts.values():
-                    f.result()
-            except BaseException:
-                # a failed write aborts the round before commit; release
-                # the pool (running threads drain, no new submissions)
-                wpool.shutdown(wait=False)
-                raise
-            seen_vals, fetch_vals, frontier_vals = obs_seen.get, obs_fetch.get, obs_frontier.get
-            counters = {
-                f"status:{s}": int(seen_vals[s]) for s in S.ALL_STATUSES if seen_vals[s]
-            }
-            counters["deduped"] = int(seen_vals["deduped"])
-            counters["scheduled"] = int(fetch_vals["scheduled"])
-            counters["order_digest"] = int(fetch_vals["digest"] or 0)
-            counters["frontier_rows"] = int(frontier_vals["frontier_rows"])
-            counters["forced"] = int(seen_vals["forced"] or 0)
-            if max_retries > 0:
-                counters["retried"] = int(frontier_vals["retried"] or 0)
-                counters["retry_horizon"] = int(frontier_vals["retry_horizon"] or 0)
-            # phase-profile evidence that compaction keeps round input
-            # O(active): derived from manifest counters, no extra action
-            counters["frontier_input_rows"] = frontier_input_rows
-            bloom_future.result()  # re-raises a failed bloom update
-            wpool.shutdown(wait=False)
-            store.commit_round(round_id, counters)
-
-            # --- frontier compaction: when additions since the last base
-            # outgrow it, fold sources into one active-only base table
-            if compact_factor is not None:
-                comp = store.compaction
-                comp_round = comp["round"] if comp else -1
-                adds_since = sum(
-                    _c(r, "frontier_rows", 0)
-                    for r in range(comp_round + 1, round_id + 1)
-                )
-                base_rows = comp["rows"] if comp else store.seed_rows
-                if adds_since >= compact_min_rows and adds_since > compact_factor * max(
-                    base_rows, 1
-                ):
-                    # the bloom already reflects this round's delta
-                    _compact_frontier(spark, store, round_id, bloom)
-
-            # --- url_seen bucketed compaction: fold deltas into a
-            # catalog-bucketed base when they outgrow it (same knobs as
-            # frontier compaction). The base is the raw delta multiset —
-            # union-equivalent forever, nothing resolved away.
-            if bucketed_seen and compact_factor is not None:
-                sc = store.seen_compaction
-                sc_round = sc["round"] if sc else -1
-                sc_rows = sc["rows"] if sc else 0
-                seen_since = sum(
-                    _c(r, "deduped", 0) for r in range(sc_round + 1, round_id + 1)
-                )
-                if seen_since >= compact_min_rows and seen_since > compact_factor * max(
-                    sc_rows, 1
-                ):
-                    from sandcrawler_spark.sources.bucketed import (
-                        read_bucketed,
-                        write_bucketed,
-                    )
-
-                    delta = store.read_table(
-                        "url_seen", upto_round=round_id, from_round=sc_round + 1
-                    )
-                    full = (
-                        delta
-                        if sc is None
-                        else read_bucketed(
-                            spark, store.aux_path(sc["table"]), sc["catalog"]
-                        ).unionByName(delta)
-                    )
-                    name = f"seen_base_r{round_id:05d}"
-                    cat = "seen_base_{}_r{}".format(
-                        hashlib.md5(state_dir.encode()).hexdigest()[:8], round_id
-                    )
-                    write_bucketed(
-                        full,
-                        store.aux_path(name),
-                        cat,
-                        ["ingest_type", "canonical_url"],
-                        n_buckets=parallelism,
-                    )
-                    store.set_seen_compaction(
-                        round_id, name, cat, rows=sc_rows + seen_since
-                    )
-            for df in scratch:  # free this round's caches before the next
-                df.unpersist()
+            _write_and_commit(c, round_id, rr, host_tokens, input_rows)
+            _compact(c, round_id)
+            _release(scratch)  # free this round's caches before the next
         return store
     finally:
-        try:
-            # if the crawl exited before the first rules-resolution
-            # point (stale-break on resume, start_round >= max_rounds),
-            # the background count future is still in flight — cancel
-            # it, and if it already started, wait it out (surfacing its
-            # error if any) BEFORE unpersisting the table under it.
-            # Best-effort only: the 120 s cap means a pathologically
-            # stuck count job can still see the unpersist race it —
-            # tolerated, Spark recomputes unpersisted partitions
-            # (ADVICE r5).
-            if rules_broadcastable is None and not _rules_future.cancel():
-                try:
-                    _rules_future.result(timeout=120)
-                except Exception:  # noqa: BLE001 — crawl result unaffected
-                    pass
-        except NameError:
-            pass
-        try:
-            rules_tbl.unpersist()
-        except NameError:
-            pass
-        try:
-            _rules_pool.shutdown(wait=False)  # no-op if already shut down
-        except NameError:
-            pass
         spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
+        _release(scratch)
+        _release(cached)
 
 
 def run_reingest(

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 from dataclasses import dataclass, field
+from decimal import ROUND_HALF_EVEN, Decimal
 
 import pyarrow.parquet as pq
 
@@ -36,6 +37,15 @@ class OracleResult:
 
 def _load(path: str) -> list[dict]:
     return pq.read_table(path).to_pylist()
+
+
+def bround6(x: float) -> float:
+    """Spark's ``F.bround(x, 6)`` on a double: half-even on the value's
+    decimal string (``BigDecimal(Double.toString(x))``), not on its
+    exact binary value as Python's ``round`` does. The two disagree on
+    about a quarter of halved 6-dp priorities: 0.3401365 is a decimal
+    tie (→ 0.340136), but its double lies just above it (→ 0.340137)."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_EVEN))
 
 
 def run_oracle(
@@ -342,7 +352,7 @@ def run_oracle(
                             "canonical_url": tgt,
                             "host": host_of(tgt),
                             "priority": 2,
-                            "citation_priority": round(c["citation_priority"] * 0.5, 6),
+                            "citation_priority": bround6(c["citation_priority"] * 0.5),
                             "depth": c["depth"] + 1,
                             "hops": new_hops,
                             "seq": c["seq"],

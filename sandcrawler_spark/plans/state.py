@@ -26,11 +26,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-try:  # pragma: no cover - exercised only when Iceberg jars are present
-    _HAVE_ICEBERG = False  # flipped by probe below when catalog configured
-except ImportError:  # pragma: no cover
-    _HAVE_ICEBERG = False
-
 
 @dataclass
 class SnapshotStore:
@@ -178,29 +173,10 @@ class SnapshotStore:
     def last_round(self) -> int:
         return self._manifest["rounds"][-1] if self._manifest["rounds"] else -1
 
-    def write_tables(self, round_id: int, tables: dict[str, DataFrame]) -> None:
-        """Write per-round deltas (NOT yet committed — a crash here leaves
-        the manifest at the previous round).
-
-        The deltas are independent, so their write jobs are submitted
-        CONCURRENTLY (Spark's scheduler interleaves their stages) — this
-        overlaps three otherwise-serial job latencies per round."""
-        if round_id in self._manifest["rounds"]:
-            raise ValueError(f"round {round_id} already committed")
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(tables)) as ex:
-            list(
-                ex.map(
-                    lambda item: self.write_table(round_id, *item),
-                    tables.items(),
-                )
-            )
-
     def write_table(self, round_id: int, name: str, df: DataFrame) -> None:
-        """Write ONE per-round delta (uncommitted). Callers that manage
-        their own write concurrency (run_crawl submits every round
-        table plus the bloom update on one pool) use this directly."""
+        """Write ONE per-round delta (NOT yet committed — a crash here
+        leaves the manifest at the previous round). run_crawl submits
+        every round table plus the bloom update on one pool."""
         if round_id in self._manifest["rounds"]:
             raise ValueError(f"round {round_id} already committed")
         df.write.mode("overwrite").parquet(self._round_dir(round_id, name))
@@ -211,16 +187,6 @@ class SnapshotStore:
         if counters:
             self._manifest["counters"][str(round_id)] = counters
         self.save_manifest()
-
-    def write_round(
-        self,
-        round_id: int,
-        tables: dict[str, DataFrame],
-        counters: dict[str, int] | None = None,
-    ) -> None:
-        """Write all per-round deltas, then commit the manifest atomically."""
-        self.write_tables(round_id, tables)
-        self.commit_round(round_id, counters)
 
     def read_table(
         self,

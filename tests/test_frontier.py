@@ -8,6 +8,7 @@ import os
 
 import pytest
 
+from sandcrawler_spark.plans import oracle
 from sandcrawler_spark.plans.datagen import gen_frontier
 from sandcrawler_spark.plans.frontier import run_crawl
 from sandcrawler_spark.plans.oracle import run_oracle
@@ -208,3 +209,66 @@ def test_bucketed_seen_digest_neutral_and_resume(spark, fixture_dir, tmp_path):
     )
     assert _spark_orders(part) == _spark_orders(plain)
     assert _spark_seen(part) == _spark_seen(plain)
+
+
+def test_oracle_halving_matches_spark_bround(spark):
+    """Outlinks inherit half their parent's citation priority, rounded to
+    6 dp: Spark's ``F.bround`` rounds the double's decimal string
+    half-even, so the oracle must too — Python's ``round`` on the exact
+    binary value splits decimal ties the other way about half the time."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    rng = random.Random(5)
+    # odd last digit: every halved value is a decimal tie at 7 dp
+    cites = [0.680273] + [(2 * rng.randrange(500_000) + 1) / 1e6 for _ in range(2000)]
+    df = spark.createDataFrame([(c,) for c in cites], "c double")
+    got = df.select(F.bround(F.col("c") * 0.5, 6).alias("h")).collect()
+    want = [oracle.bround6(c * 0.5) for c in cites]
+    assert [r["h"] for r in got] == want
+    assert sum(round(c * 0.5, 6) != w for c, w in zip(cites, want)) > 100
+
+
+def test_oracle_parity_on_halved_citation_ties(spark, tmp_path, monkeypatch):
+    """A small crawl whose seed citations sit on a 1e-6 grid, so halved
+    outlink priorities land on decimal ties: round 1's fetch order
+    depends on how those ties round, and the Spark crawl must equal the
+    oracle's."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "data")
+    gen_frontier(d, n_urls=800, n_hosts=25, n_seeds=200, seed=3)
+    seeds = pq.read_table(f"{d}/seeds.parquet")
+    grid = np.round(0.34 + (np.arange(seeds.num_rows) % 8) * 1e-6, 6)
+    col = seeds.schema.get_field_index("citation_priority")
+    seeds = seeds.set_column(col, "citation_priority", pa.array(grid, pa.float64()))
+    pq.write_table(seeds, f"{d}/seeds.parquet")
+
+    want = run_oracle(d, max_rounds=3).fetch_orders
+    store = run_crawl(spark, d, str(tmp_path / "state"), max_rounds=3)
+    assert _spark_orders(store) == want
+    # the fixture exercises the ties: binary rounding orders round 1 differently
+    monkeypatch.setattr(oracle, "bround6", lambda x: round(x, 6))
+    assert run_oracle(d, max_rounds=3).fetch_orders[1] != want[1]
+
+
+def test_crawl_leaves_no_cache_behind(spark, tmp_path):
+    """run_crawl unpersists everything it persisted and restores AQE,
+    both after a 2-round crawl and on an early exit (resume of a
+    finished crawl, where no round runs)."""
+    d = str(tmp_path / "data")
+    gen_frontier(d, n_urls=300, n_hosts=10, n_seeds=100, seed=11)
+    jsc = spark.sparkContext._jsc
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        for resume in (False, True):
+            before = jsc.getPersistentRDDs().size()
+            run_crawl(spark, d, str(tmp_path / "state"), max_rounds=2, resume=resume)
+            assert jsc.getPersistentRDDs().size() == before, f"resume={resume}"
+            assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)

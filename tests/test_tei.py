@@ -1,17 +1,22 @@
 """Goldens for the GROBID TEI / Crossref-refs operators (operators/tei.py):
-the real GROBID fixture from the reference test suite, the reference's own
+an in-repo GROBID TEI fixture carrying the header and first citation of
+the reference suite's 23b29ea…85.xml, the reference's own
 clean_crossref_unstructured vectors (grobid.py:38-72), every branch of
 should_parse_crossref_ref, and the per-work cap of crossref_refs_prep.
 """
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
 from sandcrawler_spark.operators import tei
 
-FIXTURE = "/root/reference/python/tests/files/23b29ea36382680716be08fc71aa81bd226e8a85.xml"
+FIXTURE = os.path.join(
+    os.path.dirname(__file__), "fixtures", "grobid_railway_freight.tei.xml"
+)
 
 
 def test_tei_biblio_golden_fixture(spark):
@@ -186,11 +191,11 @@ def test_tei_body_words(spark):
 
 
 def test_teixml2json_golden_fixture(spark):
-    """tei_to_grobid_doc vs the reference's real GROBID fixture —
-    goldens pinned from running the reference's own grobid2json.py on
-    the same file (differential run: zero field diffs on both
-    reference fixtures, modulo the documented date-False → null
-    divergence)."""
+    """tei_to_grobid_doc goldens, first pinned by running the
+    reference's own grobid2json.py on its real GROBID fixture
+    (differential run: zero field diffs, modulo the documented
+    date-False → null divergence); the in-repo fixture carries the
+    same header, first citation and citation count."""
     with open(FIXTURE) as f:
         xml_text = f.read()
     df = spark.createDataFrame(

@@ -4,6 +4,7 @@ semantics vs the flat budget, and state-table persistence."""
 
 from __future__ import annotations
 
+from sandcrawler_spark.plans import frontier
 from sandcrawler_spark.plans.datagen import gen_frontier
 from sandcrawler_spark.plans.frontier import run_crawl
 from sandcrawler_spark.plans.oracle import run_oracle
@@ -54,15 +55,14 @@ def test_bucket_bursts_then_throttles(spark, tmp_path):
         assert 0 <= row["tokens"] <= cap, row
 
 
-def test_shuffle_rules_path_parity(spark, tmp_path):
+def test_shuffle_rules_path_parity(spark, tmp_path, monkeypatch):
     """Forcing the rules join off the broadcast path (the 10^8-host
     design point where the rules table can't broadcast) must leave the
     crawl order byte-identical."""
     d = str(tmp_path / "data3")
     gen_frontier(d, n_urls=600, n_hosts=8, n_seeds=300, seed=9, budget_range=(2, 5))
     bc = run_crawl(spark, d, str(tmp_path / "sbc"), max_rounds=2)
-    sh = run_crawl(
-        spark, d, str(tmp_path / "ssh"), max_rounds=2, rules_broadcast_max=0
-    )
+    monkeypatch.setattr(frontier, "RULES_BROADCAST_MAX", 0)
+    sh = run_crawl(spark, d, str(tmp_path / "ssh"), max_rounds=2)
     assert _orders(spark, bc) == _orders(spark, sh)
     assert bc.counters() == sh.counters()

@@ -81,81 +81,7 @@ def main() -> None:
     ap.add_argument("--cores", type=int, default=32)
     ap.add_argument("--growth-rounds", type=int, default=2)
     ap.add_argument("--skip-deep", action="store_true")
-    ap.add_argument(
-        "--scaling-windows", type=int, default=3,
-        help="paired crawl/ceiling windows for --scaling (median of "
-             "accepted windows is reported)",
-    )
-    ap.add_argument(
-        "--scaling", action="store_true",
-        help="run the BASELINE.md N->4N protocol (8 vs 32 cores on the "
-             "largest --sizes fixture, warm best-of-2/3, with the "
-             "same-session one-stage Spark-shuffle ceiling)",
-    )
     args = ap.parse_args()
-
-    scaling = None
-    if args.scaling:
-        # Round-6 protocol (VERDICT r5 #3): PAIRED INTERLEAVED windows.
-        # Each window co-measures crawl-8c, crawl-32c and the
-        # zero-skew-shuffle ceiling back to back, so every efficiency
-        # ratio is read against what the box could do in the SAME
-        # noise window; windows whose co-measured ceiling falls outside
-        # the [2.4, 3.0] plausibility band (BENCH.md r5: a hypervisor-
-        # steal episode during the ceiling's own 8-core run once
-        # produced a physically impossible 5.34x) are REJECTED, and the
-        # summary is the MEDIAN vs-ceiling ratio over accepted windows
-        # with its min-max spread — one defensible number instead of a
-        # per-attempt scatter. Digest equality is asserted across every
-        # run of every window.
-        import bench
-
-        big = max(int(s) for s in args.sizes.split(",") if s)
-        data = fixture(big, max(2_000, big // 80))
-        warm = fixture(50_000, 2_000, tag="warm")
-        band = (2.4, 3.0)
-        windows = []
-        digests = None
-        for w in range(args.scaling_windows):
-            lo = bench.bench_frontier(8, data, warm)
-            hi = bench.bench_frontier(32, data, warm)
-            ceil = bench.spark_shuffle_ceiling(8, 32)
-            for d in (lo["order_digests"], hi["order_digests"]):
-                if digests is None:
-                    digests = d
-                assert d == digests, "crawl order must not depend on window/cores"
-            eff = round(hi["urls_per_sec"] / (4 * lo["urls_per_sec"]), 3)
-            windows.append({
-                "8c": {k: lo[k] for k in ("seconds_best_of_2", "seconds_runs", "urls_per_sec")},
-                "32c": {k: hi[k] for k in ("seconds_best_of_2", "seconds_runs", "urls_per_sec")},
-                "raw_efficiency_8_to_32": eff,
-                "spark_shuffle_ceiling_8_32": ceil,
-                "efficiency_vs_ceiling": round(eff * 4 / ceil, 3) if ceil else None,
-                "ceiling_plausible": band[0] <= ceil <= band[1],
-            })
-        accepted = [
-            w["efficiency_vs_ceiling"] for w in windows
-            if w["ceiling_plausible"] and w["efficiency_vs_ceiling"] is not None
-        ]
-        accepted.sort()
-        scaling = {
-            "n_urls": big,
-            "protocol": "paired-interleaved windows; ceiling plausibility band enforced",
-            "ceiling_plausibility_band": list(band),
-            "windows": windows,
-            "n_windows": len(windows),
-            "n_accepted": len(accepted),
-            "median_efficiency_vs_ceiling": (
-                accepted[len(accepted) // 2] if accepted else None
-            ),
-            "vs_ceiling_spread": (
-                [accepted[0], accepted[-1]] if accepted else None
-            ),
-            "raw_efficiency_median": sorted(
-                w["raw_efficiency_8_to_32"] for w in windows
-            )[len(windows) // 2] if windows else None,
-            "digest_match": True,
-        }
 
     from sandcrawler_spark.session import get_spark
 
@@ -188,8 +114,6 @@ def main() -> None:
         "corpus_growth": growth,
         "deep_crawl": deep,
     }
-    if scaling is not None:
-        out["scaling_protocol"] = scaling
     print(json.dumps(out))
 
 
