@@ -8,10 +8,9 @@ Architecture (Spark-first, NOT a port of the reference):
   AQE skew handling come for free).
 - Row-level logic that Spark lacks (WHATWG URL canonicalization, SURT
   keying) runs in vectorized pandas/Arrow UDFs — no per-row Python.
-- Frontier state (url_seen, hosts, counters) lives in a snapshot table
-  store: Apache Iceberg when its runtime jars are on the classpath, a
-  parquet-snapshot emulation otherwise (same MERGE semantics, same
-  per-round lineage).
+- Frontier state (url_seen, hosts, counters) lives in a parquet
+  snapshot table store (plans.state): each round commits its deltas
+  atomically, with per-round lineage.
 
 Reference semantics are pinned in docstrings with file:line citations into
 /root/reference (read-only snapshot of internetarchive/sandcrawler).

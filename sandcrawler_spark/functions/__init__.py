@@ -21,7 +21,7 @@ from sandcrawler_spark.functions.urlkeys import (  # noqa: F401
     url_fuzzy_equal,
 )
 from sandcrawler_spark.functions.hashes import b32_hex, gen_file_metadata, hex_b32  # noqa: F401
-from sandcrawler_spark.functions.mime import normalize_mime, normalize_mime_col  # noqa: F401
+from sandcrawler_spark.functions.mime import normalize_mime  # noqa: F401
 from sandcrawler_spark.functions.paths import (  # noqa: F401
     sanitize_fs_path,
     sanitize_fs_path_col,

@@ -7,7 +7,7 @@ base32-encoded SHA-1 that heritrix/wayback CDX files carry into hex;
 
 Spark forms:
 - sha1/sha2/md5/length over a binary column are Catalyst builtins
-  (:func:`file_meta_cols`) — the hot path never leaves the JVM.
+  (``F.sha1`` etc. at the call site) — the hot path never leaves the JVM.
 - base32→hex needs bit-surgery Spark lacks → vectorized pandas UDF.
 - the libmagic mimetype sniff is replaced by a deterministic
   magic-number sniff (libmagic is not in this environment); same
@@ -21,7 +21,6 @@ import binascii
 import hashlib
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -101,18 +100,6 @@ def gen_file_metadata(blob: bytes, allow_empty: bool = False) -> dict:
 # ---------------------------------------------------------------- Spark side
 
 
-def file_meta_cols(binary_col: Column | str) -> list[Column]:
-    """Catalyst-builtin file_meta projection over a binary column —
-    the distributed form of ``gen_file_metadata`` minus the sniff."""
-    c = F.col(binary_col) if isinstance(binary_col, str) else binary_col
-    return [
-        F.length(c).alias("size_bytes"),
-        F.sha1(c).alias("sha1hex"),
-        F.sha2(c, 256).alias("sha256hex"),
-        F.md5(c).alias("md5hex"),
-    ]
-
-
 @F.pandas_udf(T.StringType())
 def b32_hex_udf(s: pd.Series) -> pd.Series:
     def safe(v: str) -> str | None:
@@ -123,13 +110,3 @@ def b32_hex_udf(s: pd.Series) -> pd.Series:
 
     return s.map(safe, na_action="ignore")
 
-
-@F.pandas_udf(T.StringType())
-def hex_b32_udf(s: pd.Series) -> pd.Series:
-    def safe(v: str) -> str | None:
-        try:
-            return hex_b32(v)
-        except (ValueError, binascii.Error):
-            return None
-
-    return s.map(safe, na_action="ignore")

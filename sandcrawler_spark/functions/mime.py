@@ -5,15 +5,9 @@ Semantics: lowercase+strip, prefix-match against a canonical list, then
 special-cases (application/xml→text/xml, application/x-pdf→
 application/pdf, '.pdf'→application/pdf, a download-alias set →
 application/octet-stream), else None.
-
-Spark form: a pure ``when()/otherwise()`` chain — Catalyst folds it into
-whole-stage codegen; no UDF, no Python in the hot path.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 NORMAL_MIME = (
     "application/pdf",
@@ -51,16 +45,3 @@ def normalize_mime(raw: str | None) -> str | None:
         return "application/octet-stream"
     return None
 
-
-def normalize_mime_col(col: Column | str) -> Column:
-    """Codegen'd column form of :func:`normalize_mime`."""
-    c = F.lower(F.trim(F.col(col) if isinstance(col, str) else col))
-    expr = F.lit(None).cast("string")
-    # build the chain back-to-front so earlier rules win
-    expr = F.when(c.isin(*_OCTET_ALIASES), F.lit("application/octet-stream")).otherwise(expr)
-    expr = F.when(c == ".pdf", F.lit("application/pdf")).otherwise(expr)
-    expr = F.when(c.startswith("application/x-pdf"), F.lit("application/pdf")).otherwise(expr)
-    expr = F.when(c.startswith("application/xml"), F.lit("text/xml")).otherwise(expr)
-    for norm in reversed(NORMAL_MIME):
-        expr = F.when(c.startswith(norm), F.lit(norm)).otherwise(expr)
-    return expr

@@ -3,9 +3,8 @@
 The north rule requires "politeness enforced via per-host token buckets
 and robots.txt caches".  The frontier (`plans/frontier.py`) consumes a
 pre-parsed per-host rules table (block flags + host_budget); this module
-is the producer that turns RAW robots.txt bodies into that table, so a
-crawl can be driven from fetched robots.txt documents instead of a
-hand-built rules parquet.
+turns RAW robots.txt bodies into per-URL allow/deny decisions (the
+battery's ``rb_longest_match`` runs it end to end).
 
 Semantics follow the public RFC 9309 spec (+ the de-facto Crawl-delay
 extension):
@@ -46,7 +45,6 @@ __all__ = [
     "parse_robots_udf",
     "explode_rules",
     "robots_allowed",
-    "frontier_rules_from_robots",
 ]
 
 
@@ -269,44 +267,3 @@ def robots_allowed(
         F.coalesce(F.col("_decision"), F.lit(True)).alias("allowed"),
     )
 
-
-def frontier_rules_from_robots(
-    robots_bodies: DataFrame,
-    agent: str = "sandcrawler",
-    default_budget: int = 32,
-    round_seconds: float = 60.0,
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
-) -> DataFrame:
-    """Bridge raw robots.txt bodies -> the frontier's rules-table shape.
-
-    (host, blocked, host_budget): ``blocked`` iff the site root ``/`` is
-    disallowed for ``agent`` (longest-match, same operator as
-    :func:`robots_allowed`); ``host_budget`` is ``default_budget``
-    capped by ``Crawl-delay`` (at most ``round_seconds/delay`` fetches
-    per scheduling round, floor 1). Feed this to ``run_crawl``'s robots
-    input instead of a hand-built parquet.
-    """
-    rules = explode_rules(robots_bodies, host_col, txt_col, agent)
-    roots = rules.select("host").distinct().withColumn("path", F.lit("/"))
-    root_decision = robots_allowed(roots, rules).select(
-        "host", (~F.col("allowed")).alias("blocked")
-    )
-    budgets = rules.groupBy("host").agg(F.min("crawl_delay").alias("crawl_delay"))
-    return root_decision.join(budgets, "host", "left").select(
-        "host",
-        "blocked",
-        F.when(
-            F.col("crawl_delay").isNotNull() & (F.col("crawl_delay") > 0),
-            F.greatest(
-                F.lit(1),
-                F.least(
-                    F.lit(default_budget),
-                    F.floor(F.lit(round_seconds) / F.col("crawl_delay")),
-                ),
-            ),
-        )
-        .otherwise(F.lit(default_budget))
-        .cast("int")
-        .alias("host_budget"),
-    )

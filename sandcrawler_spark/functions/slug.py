@@ -47,18 +47,3 @@ def title_slug(title: str | None) -> str | None:
 def title_slug_udf(titles: pd.Series) -> pd.Series:
     return titles.map(title_slug, na_action="ignore")
 
-
-def similarity_ratio(a: str, b: str) -> float:
-    """Levenshtein similarity ratio in [0,1] (StringUtilities.scala:43-74
-    scores ×1000; `1 - dist/max_len` is the same ordering)."""
-    if not a or not b:
-        return 0.0
-    la, lb = len(a), len(b)
-    prev = list(range(lb + 1))
-    for i in range(1, la + 1):
-        cur = [i] + [0] * lb
-        ca = a[i - 1]
-        for j in range(1, lb + 1):
-            cur[j] = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != b[j - 1]))
-        prev = cur
-    return 1.0 - prev[lb] / max(la, lb)

@@ -292,26 +292,11 @@ def surt_udf(urls: pd.Series) -> pd.Series:
     return urls.map(surt, na_action="ignore")
 
 
-@F.pandas_udf(T.StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(host_of, na_action="ignore")
-
-
-def url_hash64(col: Column | str) -> Column:
-    """Compact 64-bit join/prefilter key over the canonical URL string.
-
-    Spark's builtin xxhash64 (seed 42) — JVM-side, codegen'd. Collisions
-    are tolerated: the hash is only ever a *prefilter*; identity joins
-    always confirm on the full canonical string (SURVEY §7.0).
-    """
-    return F.xxhash64(F.col(col) if isinstance(col, str) else col)
-
-
 def host_col(url_col: Column | str) -> Column:
     """JVM-side host extraction for already-canonical URLs.
 
-    ``parse_url(url,'HOST')`` stays in codegen; use :func:`host_udf` only
-    for raw, un-canonicalized input.
+    ``parse_url(url,'HOST')`` stays in codegen; raw, un-canonicalized
+    input needs :func:`host_of`.
     """
     c = F.col(url_col) if isinstance(url_col, str) else url_col
     return F.lower(F.parse_url(c, F.lit("HOST")))

@@ -721,8 +721,9 @@ def html_to_biblio(df: DataFrame, id_col: str, html_col: str,
 
 # the 9 inline denylist literals from filter_grobid_metadata.py:9-21;
 # the reference extends these with python/title_slug_denylist.txt (554
-# data rows) — that file is corpus DATA, so it is taken as an input
-# parameter (load_title_denylist) rather than vendored here.
+# data rows) — that file is corpus DATA, so it is taken as the
+# ``title_denylist`` parameter of filter_biblio_metadata rather than
+# vendored here.
 TITLE_DENYLIST_INLINE = (
     "editorial",
     "advertisement",
@@ -746,15 +747,6 @@ _JOURNAL_SUFFIXES = (
     " Available online at www.sciarena.com", " Original Article",
     " Available online at", " ISSN", " ISSUE",
 )
-
-
-def load_title_denylist(path: str) -> tuple[str, ...]:
-    """Read a title-slug denylist file (one slug per line, the
-    reference's ``title_slug_denylist.txt`` format)."""
-    with open(path) as f:
-        return TITLE_DENYLIST_INLINE + tuple(
-            line.strip() for line in f if line.strip()
-        )
 
 
 def _ascii_slug(col):

@@ -403,38 +403,6 @@ def choose_strategy(
     return F.when(platform == "archiveorg", archiveorg).otherwise(default)
 
 
-def archiveorg_want_file(
-    name: Column, source: Column, item_name: Column
-) -> Column:
-    """want_item_file (fileset_platforms.py:716-742) as a predicate:
-    keep only source == 'original', drop item-sidecar files (exact
-    ``<item>``/``<lower(item)>`` + suffix matches), names starting with
-    '_', and academictorrents_* sidecars.
-    """
-    sidecars = [
-        "_meta.sqlite",
-        "_archive.torrent",
-        "_itemimage.jpg",
-        "_meta.xml",
-        "_thumb.png",
-        "_files.xml",
-    ]
-    is_sidecar = F.lit(False)
-    for sfx in sidecars:
-        is_sidecar = is_sidecar | (name == F.concat(item_name, F.lit(sfx))) | (
-            name == F.concat(F.lower(item_name), F.lit(sfx))
-        )
-    at_sidecar = F.lit(False)
-    for sfx in ["_academictorrents.torrent", "_academictorrents_torrent.txt", ".bib"]:
-        at_sidecar = at_sidecar | (name == F.concat(item_name, F.lit(sfx)))
-    return (
-        (source == "original")
-        & ~is_sidecar
-        & ~name.startswith("_")
-        & ~(item_name.startswith("academictorrents_") & at_sidecar)
-    )
-
-
 def summarize_manifest(
     manifest: DataFrame, key: str = "base_url", size_col: str = "size"
 ) -> DataFrame:

@@ -558,59 +558,6 @@ def groupworks_filter(
     return filtered.groupBy("slug").applyInPandas(contagion, _GW_OUT_SCHEMA)
 
 
-def ingest_request_json(
-    df: DataFrame,
-    ext_always: tuple[str, ...] = ("doi",),
-    ext_conditional: tuple[str, ...] = (),
-    extra_conditional: tuple[str, ...] = (),
-) -> DataFrame:
-    """Serialize a converter's flat output rows to the reference's
-    nested ingest-request JSON (doaj2ingestrequest.py:101-114,
-    unpaywall2ingestrequest.py:63-82): top-level request fields plus
-    an ``ext_ids`` dict and an ``edit_extra`` dict.
-
-    Null policy mirrors the reference exactly: top-level fields and
-    ``ext_always`` keys are ALWAYS present (null serialized as JSON
-    null — doaj emits ``"doi": null``), while ``ext_conditional`` /
-    ``extra_conditional`` keys appear only when truthy (unpaywall adds
-    ``pmh_id`` / ``oa_status`` / ``evidence`` behind ``if`` guards).
-    Reads columns ``ext_<k>`` / ``extra_<k>``; adds a ``json`` column.
-    Pure Catalyst (map_from_entries + to_json), no shuffle."""
-
-    def _entry(key: str, col: str) -> Column:
-        return F.struct(F.lit(key).alias("key"), F.col(col).alias("value"))
-
-    ext_entries = F.array(
-        *[_entry(k, f"ext_{k}") for k in ext_always],
-        *[_entry(k, f"ext_{k}") for k in ext_conditional],
-    )
-    n_always = len(ext_always)
-    ext_ids = F.map_from_entries(
-        F.filter(
-            ext_entries,
-            lambda e, i: (i < F.lit(n_always)) | e["value"].isNotNull(),
-        )
-    )
-    extra_entries = F.array(*[_entry(k, f"extra_{k}") for k in extra_conditional])
-    edit_extra = F.map_from_entries(
-        F.filter(extra_entries, lambda e: e["value"].isNotNull())
-    ) if extra_conditional else F.from_json(F.lit("{}"), "map<string,string>")
-    payload = F.struct(
-        F.col("base_url"),
-        F.col("ingest_type"),
-        F.col("link_source"),
-        F.col("link_source_id"),
-        F.col("ingest_request_source"),
-        F.col("release_stage"),
-        F.col("rel"),
-        ext_ids.alias("ext_ids"),
-        edit_extra.alias("edit_extra"),
-    )
-    return df.withColumn(
-        "json", F.to_json(payload, {"ignoreNullFields": "false"})
-    )
-
-
 # ------------------------------------------------- archive.org filesets
 
 # archiveorg_fileset.py:18-44 — IA file ``format`` → mimetype. "Unknown"

@@ -281,29 +281,6 @@ def anchor_text_topk(
     )
 
 
-def with_citation_priority(
-    seeds: DataFrame,
-    scores: DataFrame,
-    url_col: str = "canonical_url",
-    node_col: str = "node",
-    score_col: str = "rank",
-) -> DataFrame:
-    """Replace a seed table's ``citation_priority`` with a graph-derived
-    score (pagerank / indegree), left-joined on canonical URL; unscored
-    seeds keep priority 0.  Rounded to 6dp so the frontier's fetch-order
-    total key is identical across parallelism levels."""
-    sc = scores.select(
-        F.col(node_col).alias(url_col),
-        F.bround(F.col(score_col), 6).alias("_cite"),
-    )
-    return (
-        seeds.drop("citation_priority")
-        .join(sc, url_col, "left")
-        .withColumn("citation_priority", F.coalesce("_cite", F.lit(0.0)))
-        .drop("_cite")
-    )
-
-
 def crawl_edges(spark, state_dir: str) -> DataFrame:
     """(src, dst) link edges discovered by a committed crawl.
 

@@ -177,8 +177,6 @@ RESIZE_SCHEMA = "doc_id string, width int, height int, thumb binary"
 
 FRAME_SCHEMA = "doc_id string, frame_idx int, t_sec double, frame binary"
 
-FEATURE_SCHEMA = "doc_id string, embedding array<float>"
-
 SEGMENT_SCHEMA = (
     "doc_id string, seg_idx int, t_start double, t_end double, "
     "segment binary"
@@ -310,37 +308,6 @@ def segment_audio(
     return src.mapInPandas(segs, schema=SEGMENT_SCHEMA)
 
 
-def extract_features(
-    df: DataFrame, id_col: str, binary_col: str, dim: int = 16,
-    fake_decode: bool = True,
-) -> DataFrame:
-    """Feature-extraction stage: binary → unit-norm ``array<float>``
-    embedding, the input shape for the ANN / embedding-near-dup
-    operators (operators/similarity.py). STUB model: deterministic
-    bytes-of-sha256 → centered floats → L2 normalize; a real build
-    swaps in an ONNX/torch encoder behind the same batch signature."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(binary_col).alias("blob"))
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            embs = []
-            for b in pdf["blob"]:
-                blob = bytes(b)
-                if not fake_decode:
-                    raise NotImplementedError(
-                        "feature encoder not available in this environment"
-                    )
-                raw = hashlib.sha256(blob).digest()
-                while len(raw) < dim:
-                    raw += hashlib.sha256(raw).digest()
-                v = [float(x) - 127.5 for x in raw[:dim]]
-                norm = sum(x * x for x in v) ** 0.5 or 1.0
-                embs.append([x / norm for x in v])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "embedding": embs})
-
-    return src.mapInPandas(feats, schema=FEATURE_SCHEMA)
-
-
 PDF_EXTRACT_SCHEMA = (
     "doc_id string, sha1hex string, status string, error_msg string, "
     "size_bytes long, md5hex string, sha256hex string, mimetype string, "
@@ -413,8 +380,7 @@ def process_pdfs(
     Arrow-batched ``mapInPandas`` pass; each input row yields one result
     row carrying BOTH modalities (the reference worker publishes them to
     two sha1-keyed Kafka topics from the same process loop,
-    pdf_extract worker / kafka/topics.md pdf-text + pdf-thumbnail-SIZE).
-    Split the modalities downstream with :func:`pdf_result_sinks`."""
+    pdf_extract worker / kafka/topics.md pdf-text + pdf-thumbnail-SIZE)."""
     src = df.select(
         F.col(id_col).cast("string").alias("doc_id"),
         F.col(binary_col).alias("blob"),
@@ -437,30 +403,6 @@ def process_pdfs(
             )
 
     return src.mapInPandas(extract, schema=PDF_EXTRACT_SCHEMA)
-
-
-def pdf_result_sinks(results: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split one extraction pass into its two sha1-keyed sink feeds,
-    mirroring the reference's pdf-text and pdf-thumbnail topics
-    (kafka/topics.md:61-65; both compacted, key = sha1hex):
-
-    - pdftext: (key, json value) — the ``to_pdftext_dict`` shape
-      (pdfextract.py:188-203) minus the thumbnail bytes;
-    - thumbs:  (key, thumbnail bytes), only rows that produced one."""
-    pdftext = results.select(
-        F.col("sha1hex").alias("key"),
-        F.to_json(
-            F.struct(
-                F.col("sha1hex").alias("key"), "sha1hex", "status",
-                "error_msg", "text", "has_page0_thumbnail", "page_count",
-                "size_bytes", "mimetype",
-            )
-        ).alias("value"),
-    )
-    thumbs = results.filter("has_page0_thumbnail").select(
-        F.col("sha1hex").alias("key"), F.col("page0_thumbnail").alias("value")
-    )
-    return pdftext, thumbs
 
 
 PDFTRIO_JSON_SCHEMA = (

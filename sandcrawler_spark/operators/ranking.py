@@ -65,18 +65,3 @@ def with_global_rank(
         .withColumn(rank_col, F.row_number().over(w) - 1 + F.col("__off"))
         .drop("__pid", "__off")
     )
-
-
-def order_digest(df: DataFrame, rank_col: str, value_col: str) -> int:
-    """Order-sensitive digest of a ranked sequence: XOR of
-    xxhash64(rank || value). XOR is commutative, but each term encodes
-    its rank, so equal digests ⇒ identical (rank → value) mapping, i.e.
-    identical crawl order — comparable across parallelism levels and vs
-    the oracle without collecting the sequence. (XOR, not SUM: ANSI mode
-    would overflow a long sum of 64-bit hashes.)"""
-    row = df.select(
-        F.bit_xor(
-            F.xxhash64(F.concat_ws("|", F.col(rank_col).cast("string"), F.col(value_col)))
-        ).alias("d")
-    ).collect()[0]
-    return int(row["d"] or 0)

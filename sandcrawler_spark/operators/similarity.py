@@ -537,8 +537,7 @@ def embedding_near_dups_lsh(
 
 
 def _srp_bands(sigs, n_planes: int, n_bands: int, max_bucket):
-    """(vec_id, band, band_val) from SRP signatures — shared by the
-    batch and incremental LSH paths."""
+    """(vec_id, band, band_val) from SRP signatures."""
     from sandcrawler_spark.operators.dedup import cap_bucket_width
 
     width = -(-n_planes // n_bands)  # ceil
@@ -557,71 +556,6 @@ def _srp_bands(sigs, n_planes: int, n_bands: int, max_bucket):
         ).alias("bk"),
     ).select("vec_id", "bk.band", "bk.band_val")
     return cap_bucket_width(bands, ["band", "band_val"], max_bucket)
-
-
-def embedding_probe_lsh(
-    delta: DataFrame,
-    index: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tau: float = 0.9,
-    n_planes: int = 16,
-    n_bands: int = 4,
-    seed: int = 42,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Incremental SRP-LSH: embedding near-dup pairs touching a new
-    batch, probed against the persisted signature table instead of
-    re-signing the corpus — the embedding twin of
-    ``dedup.minhash_probe_index`` / ``dedup.simhash_probe_index``.
-
-    ``index`` is the stored output of :func:`hyperplane_signatures` on
-    prior batches (vec_id, sig — 8 bytes a vector, appended per batch;
-    the SAME seed/n_planes must be used, the hyperplanes are a pure
-    function of them). Candidates come from band equi-joins (delta ×
-    index plus intra-delta); the exact-cosine verify reads corpus
-    vectors only behind a candidate semi-join. Output (id1, id2, sim)
-    with the batch path's canonical orientation, so probe ∪ historical
-    pairs == the full :func:`embedding_near_dups_lsh` run."""
-    sig_d = hyperplane_signatures(delta, id_col, vec_col, n_planes, seed)
-    bands_d = _srp_bands(sig_d, n_planes, n_bands, max_bucket)
-    bands_i = _srp_bands(index.select("vec_id", "sig"), n_planes, n_bands, max_bucket)
-    cross = (
-        bands_d.alias("a")
-        .join(bands_i.alias("b"), ["band", "band_val"])
-        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(
-            F.least(F.col("a.vec_id"), F.col("b.vec_id")).alias("id1"),
-            F.greatest(F.col("a.vec_id"), F.col("b.vec_id")).alias("id2"),
-        )
-    )
-    intra = (
-        bands_d.alias("a")
-        .join(bands_d.alias("b"), ["band", "band_val"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("id1"), F.col("b.vec_id").alias("id2"))
-    )
-    cand = cross.unionByName(intra).distinct()
-    cand_ids = cand.select(F.col("id1").alias("cid")).unionByName(
-        cand.select(F.col("id2").alias("cid"))
-    ).distinct()
-    vecs = delta.select(
-        F.col(id_col).cast("long").alias("vid"), F.col(vec_col).alias("v")
-    ).unionByName(
-        corpus.select(
-            F.col(id_col).cast("long").alias("vid"), F.col(vec_col).alias("v")
-        ).join(cand_ids, F.col("vid") == F.col("cid"), "left_semi")
-    )
-    v1 = vecs.select(F.col("vid").alias("id1"), F.col("v").alias("v1"))
-    v2 = vecs.select(F.col("vid").alias("id2"), F.col("v").alias("v2"))
-    return (
-        cand.join(v1, "id1")
-        .join(v2, "id2")
-        .withColumn("sim", F.round(cosine_col(F.col("v1"), F.col("v2")), 6))
-        .filter(F.col("sim") >= tau)
-        .select("id1", "id2", "sim")
-    )
 
 
 # ------------------------------------------------------------------ IVF-PQ

@@ -11,77 +11,14 @@ resources. The per-row invariant the rebuild must preserve through any
 ingest/extract transform: span-sequence equality — (kind, text,
 media_ref) ordered by offset.
 
-Spark shape: explode → set-oriented per-span ops → re-assemble with
-``array_sort(collect_list(struct(offset, …)))``. Order never depends on
-partitioning: offset is data, not an artifact of task order.
+Order never depends on partitioning: offset is data, not an artifact
+of task order.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MAX_RESOURCES = 200  # ingest_file.py:116 'too-many-resources'
-
-
-def explode_spans(docs: DataFrame) -> DataFrame:
-    """(doc_id, kind, text, media_ref, offset) — one row per span."""
-    return docs.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")
-
-
-def cap_resources(docs: DataFrame, max_resources: int = MAX_RESOURCES) -> DataFrame:
-    """O4: drop docs with too many sub-resource spans
-    (ingest_file.py:116,517-525)."""
-    n_res = F.size(F.filter("spans", lambda s: s["kind"] != F.lit("text")))
-    return docs.filter(n_res <= max_resources)
-
-
-def dedup_exact_spans(docs: DataFrame) -> DataFrame:
-    """Remove exact-duplicate spans keeping FIRST occurrence order
-    (html_metadata.py:1075) — the one mutation the reference applies to
-    the span sequence. Offsets are re-assigned densely afterwards, the
-    way extraction order indexes the surviving list."""
-    ex = explode_spans(docs)
-    w_first = F.min("offset").alias("first_off")
-    firsts = ex.groupBy("doc_id", "kind", "text", "media_ref").agg(w_first)
-    reassembled = firsts.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct("first_off", "kind", "text", "media_ref"))
-            ),
-            lambda s, i: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                i.cast("int").alias("offset"),
-            ),
-        ).alias("spans")
-    )
-    return reassembled
-
-
-def doc_word_count(docs: DataFrame) -> DataFrame:
-    """word_count over the concatenated text spans in offset order
-    (ingest_html.py:53-56 counts words of the extracted body)."""
-    ex = explode_spans(docs).filter(F.col("kind") == "text")
-    return (
-        ex.groupBy("doc_id")
-        .agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("offset", "text"))),
-                    lambda s: s["text"],
-                ),
-            ).alias("body")
-        )
-        .select(
-            "doc_id",
-            F.size(F.split(F.trim("body"), "\\s+")).alias("word_count"),
-        )
-    )
 
 
 def interleave_stats(span_rows: DataFrame) -> DataFrame:
@@ -93,7 +30,7 @@ def interleave_stats(span_rows: DataFrame) -> DataFrame:
     doc alternates 0 times; a caption-per-image page alternates every
     span).
 
-    Input is exploded span rows (``explode_spans`` output).  Order
+    Input is exploded span rows (doc_id, kind, offset).  Order
     comes from ``offset`` — data, not partitioning — via a per-doc lag
     window, so the result is parallelism-independent; the window is
     keyed by doc_id, never global.

@@ -347,7 +347,7 @@ def src_warc_scan(spark, sf_dir):
     distributed scan. The oracle states the expected parse without
     touching WARC bytes. Offsets/csize are gzip-dependent, so the
     projection checks them only via the reader's own invariants
-    (pytest covers byte-exact random access)."""
+    (pytest pins them as real member byte positions)."""
     import hashlib as _h
     import os
 

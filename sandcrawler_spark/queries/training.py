@@ -1031,24 +1031,6 @@ def pack_shards_lpt(spark, sf_dir):
     )
 
 
-def pack_ffd_bins(spark, sf_dir):
-    """First-fit-decreasing packing into 4000-char bins within each of 8
-    LPT shards (applyInPandas per shard). Sequential-greedy semantics over
-    arbitrary sizes are not SQL-expressible, so this is NOT a battery
-    entry (the exact-oracle FFD entry is pack_ffd_twoclass); the exact
-    invariants (budget respected, no doc dropped, determinism) are
-    pytest-pinned in tests/test_curation.py."""
-    from sandcrawler_spark.operators import curation
-
-    sharded = curation.pack_shards(
-        _t(spark, sf_dir, "documents"), "n_chars", "doc_id", 8
-    ).select("doc_id", "n_chars", "shard")
-    packed = curation.pack_ffd(sharded, "n_chars", "doc_id", budget=4000)
-    return packed.groupBy("shard", "bin").agg(
-        F.count("*").alias("n_docs"), F.max("bin_fill").alias("bin_fill")
-    )
-
-
 _H60 = "CAST(concat('0x', substr(md5(concat('{salt}', CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)"
 
 QUERIES2.update(
@@ -1057,11 +1039,9 @@ QUERIES2.update(
         "smp_stratified": smp_stratified,
         "mix_domain_weights": mix_domain_weights,
         "pack_shards_lpt": pack_shards_lpt,
-        # pack_ffd_bins (realistic sizes) is deliberately NOT registered:
-        # arbitrary-size FFD has no SQL closed form, so it can only get a
-        # rows-only driver check. The FFD kernel's exact-oracle battery
-        # entry is pack_ffd_twoclass (closed-form fixture, value-hashed);
-        # the realistic-size path stays pytest-pinned in
+        # FFD over realistic sizes has no SQL closed form, so its one
+        # battery entry is pack_ffd_twoclass (closed-form fixture,
+        # value-hashed); realistic sizes stay pytest-pinned in
         # tests/test_curation.py (budget respected, no doc dropped,
         # determinism across partitionings).
     }
@@ -3546,7 +3526,7 @@ def pack_ffd_twoclass(spark, sf_dir):
     three per new bin. The Spark side runs the real sequential
     applyInPandas packer; the oracle states the closed form, so the
     driver gets an exact value-hash row for the FFD kernel (the
-    realistic-sizes twin pack_ffd_bins stays rows-only: arbitrary
+    closed form needs these two size classes: arbitrary
     sizes are not SQL-expressible)."""
     from sandcrawler_spark.operators import curation
 

@@ -1,3 +1,3 @@
-"""Sources & sinks: CDX text scan, JSON-lines, zip/binary blobs, blob
-fan-out sinks, and the Iceberg-or-parquet table store (see
-plans.state)."""
+"""Sources: CDX-shaped capture filters and revisit resolution, the WARC
+record scan, sitemap and RSS/Atom seed discovery, and the bucketed
+url_seen table (the snapshot table store itself is plans.state)."""

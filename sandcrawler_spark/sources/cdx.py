@@ -1,96 +1,16 @@
-"""CDX text scan + validity filter (S1 + F1).
+"""CDX-shaped capture filters (F5) and one-hop revisit resolution.
 
-Reference semantics being reproduced (parse_cdx_line, misc.py:190-242;
-Scala twin isCdxLine/keepCdx, CdxBackfillJob.scala:119-140; Pig
-filter-cdx-pdfs.pig:12-15):
-
-- 11 space-separated fields; rows with fewer are dropped
-- header/comment rows dropped (``filedesc``/leading-space — these fail
-  the field checks anyway)
-- sha1b32 must be 32 alnum chars; csize/offset digits; datetime digits
-- any '-' placeholder in the checked fields drops the row (this also
-  drops non-HTTP captures like whois, which carry '-' status)
-- mimetype normalized (misc.py:142-174); None/'-' → octet-stream
-- sha1b32 → sha1hex
-
-Spark shape: ``spark.read.text`` + one ``split`` + chained codegen'd
-filters — the whole parse is a single WholeStageCodegen span except the
-base32→hex conversion (pandas UDF; no Spark builtin).
+Reference semantics being reproduced: the pig capture filters
+(filter-cdx-source-code-crude.pig, filter-cdx-tarball.pig) and the
+revisit lookup in ``fetch_petabox`` (ia.py:531-568). Inputs are capture
+tables already typed to the CDX columns (surt, datetime, url, mimetype,
+http_status, sha1b32, ...); every function here is pure Catalyst.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from sandcrawler_spark.functions.hashes import b32_hex_udf
-from sandcrawler_spark.functions.mime import normalize_mime_col
-
-
-def parse_cdx_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
-    """Line-DataFrame → typed CDX DataFrame, invalid rows dropped."""
-    f = F.split(F.col(value_col), r"\s+").alias("f")
-    df = lines.select(f).filter(F.size("f") >= 11)
-    c = lambda i: F.col("f").getItem(i)  # noqa: E731
-    df = df.select(
-        c(0).alias("surt"),
-        c(1).alias("datetime"),
-        c(2).alias("url"),
-        c(3).alias("rawmime"),
-        c(4).alias("rawstatus"),
-        c(5).alias("sha1b32"),
-        c(8).alias("rawcsize"),
-        c(9).alias("rawoffset"),
-        c(10).alias("warc_path"),
-    )
-    df = df.filter(
-        F.col("sha1b32").rlike("^[A-Za-z0-9]{32}$")
-        & F.col("rawcsize").rlike("^[0-9]+$")
-        & F.col("rawoffset").rlike("^[0-9]+$")
-        & F.col("datetime").rlike("^[0-9]+$")
-        & (F.col("surt") != "-")
-        & (F.col("url") != "-")
-        & (F.col("rawstatus") != "-")
-        & (F.col("warc_path") != "-")
-        & F.col("rawstatus").rlike("^[0-9]+$")  # non-HTTP (whois) has no status
-    )
-    mime = normalize_mime_col(F.col("rawmime"))
-    # try_cast, not cast: the digit regexes above bound the *alphabet* but
-    # not the magnitude — a 20-digit csize would pass ^[0-9]+$ and then
-    # throw under ANSI mode (Spark 4 default), killing the whole scan on
-    # one hostile line. A value that overflows int64 is physically
-    # impossible (WARC offsets are bounded by file size), so such rows are
-    # treated as invalid and dropped, same as any other F1 failure.
-    df = df.select(
-        "surt",
-        "datetime",
-        "url",
-        F.coalesce(mime, F.lit("application/octet-stream")).alias("mimetype"),
-        F.col("rawstatus").try_cast("int").alias("http_status"),
-        "sha1b32",
-        b32_hex_udf(F.col("sha1b32")).alias("sha1hex"),
-        F.col("rawcsize").try_cast("long").alias("warc_csize"),
-        F.col("rawoffset").try_cast("long").alias("warc_offset"),
-        "warc_path",
-    )
-    return df.filter(
-        F.col("http_status").isNotNull()
-        & F.col("warc_csize").isNotNull()
-        & F.col("warc_offset").isNotNull()
-    )
-
-
-def read_cdx(spark: SparkSession, path: str) -> DataFrame:
-    """S1: read space-delimited CDX text file(s) → typed DataFrame."""
-    return parse_cdx_lines(spark.read.text(path))
-
-
-def filter_pdfs(cdx: DataFrame) -> DataFrame:
-    """F2: HTTP-200 (+FTP 226) PDF captures (pig/filter-cdx-pdfs.pig:18-20)."""
-    return cdx.filter(
-        F.col("http_status").isin(200, 226)
-        & F.col("mimetype").rlike(".*pdf.*")
-    )
 
 
 def _sha1_top1(cdx: DataFrame) -> DataFrame:

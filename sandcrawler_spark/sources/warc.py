@@ -7,9 +7,7 @@ Reference surface:
   one WARC record by ``(warc_path, offset, csize)`` — each record in a
   ``.warc.gz`` is its own gzip member, so a member can be fetched and
   gunzipped independently. :func:`read_warc_records` reproduces those
-  keys for every record it scans, and :func:`fetch_warc_record` is the
-  single-record random-access twin (same contract as
-  ``fetch_petabox(csize, offset, warc_path)``).
+  keys for every record it scans.
 - ``ia.py:520-530``: HTTP status + Content-Type come from the record's
   embedded HTTP response block; revisit records carry no body.
 - WARC/1.0 (ISO 28500): header block of ``Name: value`` lines ending
@@ -142,19 +140,6 @@ def iter_warc_members(blob: bytes) -> Iterator[tuple[int, int, bytes]]:
         pos += consumed
 
 
-def fetch_warc_record(path: str, offset: int, csize: int) -> dict | None:
-    """Random-access one record by the reference's petabox key
-    ``(warc_path, offset, csize)`` (ia.py:435-443): read exactly that
-    byte range, gunzip the member, parse. No full-file scan."""
-    with open(path, "rb") as f:
-        f.seek(offset)
-        member = f.read(csize)
-    raw = (
-        gzip.decompress(member) if member.startswith(b"\x1f\x8b") else member
-    )
-    return _parse_record(raw)
-
-
 def read_warc_records(spark: SparkSession, path: str) -> DataFrame:
     """Distributed WARC scan: ``binaryFile`` listing → one Arrow task
     per WARC file → one row per record, keyed by the petabox fetch
@@ -197,131 +182,3 @@ def read_warc_records(spark: SparkSession, path: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=cols)
 
     return files.mapInPandas(parse, schema=WARC_SCHEMA)
-
-
-def warc_to_captures(records: "DataFrame") -> "DataFrame":
-    """Adapter: WARC record scan → the capture-history shape the
-    frontier fetch simulation joins (url, dt, mimetype, status_code,
-    sha1hex + the petabox fetch triple). WARC-Date is ISO
-    (2020-06-01T00:00:00Z); CDX wants the 14-digit form — same
-    separator strip as the revisit normalization (ia.py:542-556).
-    Pure Catalyst over the scan output."""
-    from pyspark.sql import functions as F
-
-    return records.where(F.col("record_type") == "response").select(
-        F.col("target_uri").alias("url"),
-        F.substring(F.translate("warc_date", "-:TZ", ""), 1, 14).alias("dt"),
-        F.coalesce("mimetype", F.lit("application/octet-stream")).alias("mimetype"),
-        F.col("http_status").alias("status_code"),
-        "sha1hex",
-        F.col("payload_len").alias("size_bytes"),
-        "warc_path",
-        F.col("offset").alias("warc_offset"),
-        F.col("csize").alias("warc_csize"),
-    )
-
-
-def warc_to_cdx_lines(records: "DataFrame") -> "DataFrame":
-    """The CDX-11 indexing job — the batch job that PRODUCES the
-    reference's CDX inputs from raw WARCs (wayback's cdx-indexer;
-    field layout per misc.py:190-242 / our parse_cdx_lines): urlkey
-    (SURT), 14-digit timestamp, original URL, mimetype, status, base32
-    SHA-1 digest, '-' redirect, '-' meta, compressed member size,
-    member offset, WARC filename — one space-joined line per response
-    record. Round-trips: parse_cdx_lines(warc_to_cdx_lines(scan))
-    recovers the capture rows exactly (pytest-pinned).
-
-    Scale shape: one projection over the scan; SURT and hex→b32 are the
-    only Python (Arrow-batched)."""
-    from pyspark.sql import functions as F
-
-    from sandcrawler_spark.functions.hashes import hex_b32_udf
-    from sandcrawler_spark.functions.urlkeys import surt_udf
-
-    caps = warc_to_captures(records)
-    return caps.select(
-        F.concat_ws(
-            " ",
-            surt_udf(F.col("url")),
-            "dt",
-            "url",
-            "mimetype",
-            F.col("status_code").cast("string"),
-            F.upper(hex_b32_udf(F.col("sha1hex"))),
-            F.lit("-"),
-            F.lit("-"),
-            F.col("warc_csize").cast("string"),
-            F.col("warc_offset").cast("string"),
-            F.element_at(F.split("warc_path", "/"), -1),
-        ).alias("value")
-    )
-
-
-def write_warc_fanout(
-    df: DataFrame, out_dir: str, num_shards: int = 16
-) -> DataFrame:
-    """Archive-side sink: crawl results → member-gzip ``.warc.gz``
-    shard files, written executor-side (the WARC twin of the S13 blob
-    fan-out; the reference archives fetched bodies back into petabox
-    WARCs). Input columns: url, dt (14-digit CDX), payload binary,
-    http_status int, mimetype string.
-
-    Determinism: shard = xxhash64(url) mod num_shards, records sorted
-    by (url, dt) inside each shard, gzip mtime pinned — reruns produce
-    byte-identical files. Writes are tmp + os.replace (atomic per
-    shard). Returns a manifest DataFrame (shard, path, records,
-    bytes); the actual record keys are recoverable by scanning the
-    output with :func:`read_warc_records`."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    iso = F.concat(
-        F.substring("dt", 1, 4), F.lit("-"), F.substring("dt", 5, 2),
-        F.lit("-"), F.substring("dt", 7, 2), F.lit("T"),
-        F.substring("dt", 9, 2), F.lit(":"), F.substring("dt", 11, 2),
-        F.lit(":"), F.substring("dt", 13, 2), F.lit("Z"),
-    )
-    src = (
-        df.select(
-            "url", "dt", iso.alias("warc_date"), "payload",
-            "http_status", "mimetype",
-            F.pmod(F.xxhash64("url"), F.lit(num_shards)).alias("__shard"),
-        )
-        .repartition(num_shards, "__shard")
-        .sortWithinPartitions("__shard", "url", "dt")
-    )
-
-    def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: dict[int, list[bytes]] = {}
-        for pdf in batches:
-            for url, wd, payload, status, mime, shard in zip(
-                pdf["url"], pdf["warc_date"], pdf["payload"],
-                pdf["http_status"], pdf["mimetype"], pdf["__shard"],
-            ):
-                buf.setdefault(int(shard), []).append(
-                    build_warc_record_bytes(
-                        target_uri=url, warc_date=wd,
-                        payload=bytes(payload),
-                        http_status=int(status), mimetype=mime,
-                    )
-                )
-        rows = []
-        for shard, members in sorted(buf.items()):
-            path = os.path.join(out_dir, f"shard-{shard:05d}.warc.gz")
-            blob = b"".join(members)
-            with open(path + ".tmp", "wb") as f:
-                f.write(blob)
-            os.replace(path + ".tmp", path)
-            rows.append(
-                {"shard": shard, "path": path,
-                 "records": len(members), "bytes": len(blob)}
-            )
-        yield pd.DataFrame(
-            rows, columns=["shard", "path", "records", "bytes"]
-        )
-
-    os.makedirs(out_dir, exist_ok=True)
-    return src.mapInPandas(
-        write, schema="shard int, path string, records long, bytes long"
-    )

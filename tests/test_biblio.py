@@ -1,14 +1,12 @@
-"""Goldens for operators.biblio against the reference's own publisher
-fixtures (``/root/reference/python/tests/files/*.html``) — the same
-inputs/expectations as the reference's ``test_html_metadata.py``
-(:8-203), re-asserted against our from-scratch extractor."""
+"""Goldens for operators.biblio: the expectations of the reference's
+``test_html_metadata.py`` (:8-203), re-asserted against our from-scratch
+extractor over minimal in-repo publisher pages (``tests/fixtures/*.html``)
+that carry the head meta tags and fulltext links those pages use."""
 
 from __future__ import annotations
 
 import datetime
 import os
-
-import pytest
 
 from sandcrawler_spark.operators.biblio import (
     extract_biblio,
@@ -16,11 +14,7 @@ from sandcrawler_spark.operators.biblio import (
     parse_release_date,
 )
 
-FILES = "/root/reference/python/tests/files"
-
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(FILES), reason="reference fixtures not present"
-)
+FILES = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
 def _load(name: str) -> str:

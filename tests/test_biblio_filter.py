@@ -8,7 +8,6 @@ from __future__ import annotations
 from sandcrawler_spark.operators.biblio import (
     TITLE_DENYLIST_INLINE,
     filter_biblio_metadata,
-    load_title_denylist,
 )
 
 
@@ -83,11 +82,8 @@ def test_journal_rules(spark):
     assert out[7]["journal"] is None
 
 
-def test_denylist_file_loader(spark, tmp_path):
-    p = tmp_path / "deny.txt"
-    p.write_text("asolidscholarlytitlemethodsandresults\n\n")
-    deny = load_title_denylist(str(p))
-    assert set(TITLE_DENYLIST_INLINE) < set(deny)
+def test_title_denylist_extension(spark):
+    deny = TITLE_DENYLIST_INLINE + ("asolidscholarlytitlemethodsandresults",)
     rows = [(1, "A Solid Scholarly Title: Methods and Results", ["A B"], None)]
     assert 1 in _run(spark, rows)                       # inline list: kept
-    assert 1 not in _run(spark, rows, title_denylist=deny)  # file: denied
+    assert 1 not in _run(spark, rows, title_denylist=deny)  # extended: denied

@@ -138,6 +138,11 @@ def test_platform_dispatch_golden(urls_df):
 
 
 def test_archiveorg_want_file(spark):
+    """The archive.org want_file rule (fileset_platforms.py:716-742)
+    has one home, ``intake.archiveorg_filesets``: each vector's name
+    survives into the item's manifest iff it is wanted."""
+    from sandcrawler_spark.operators import intake
+
     item = "someitem_v1"
     vectors = [
         # (name, source, keep)
@@ -155,21 +160,23 @@ def test_archiveorg_want_file(spark):
         (at_item + ".bib", "original", False),
         ("paper.pdf", "original", True),
     ]
+    release_id = "a" * 26
     df = spark.createDataFrame(
-        [(n, s, item) for n, s, _ in vectors]
-        + [(n, s, at_item) for n, s, _ in at_vectors],
-        ["name", "source", "item_name"],
+        [
+            (it, release_id, "texts",
+             [(n, s, "Text", "1", "sha1", "md5") for n, s, _ in vs])
+            for it, vs in ((item, vectors), (at_item, at_vectors))
+        ],
+        "item_name string, release_id string, mediatype string, "
+        "files array<struct<name:string,source:string,format:string,"
+        "size:string,sha1:string,md5:string>>",
     )
-    got = [
-        r["keep"]
-        for r in df.select(
-            fileset.archiveorg_want_file(
-                F.col("name"), F.col("source"), F.col("item_name")
-            ).alias("keep")
-        ).collect()
-    ]
-    want = [k for *_, k in vectors] + [k for *_, k in at_vectors]
-    assert got == want
+    got = {
+        r["item_name"]: [m["path"] for m in r["manifest"]]
+        for r in intake.archiveorg_filesets(df).collect()
+    }
+    assert got[item] == [n for n, _, keep in vectors if keep]
+    assert got[at_item] == [n for n, _, keep in at_vectors if keep]
 
 
 def _mk_requests(spark, rows):

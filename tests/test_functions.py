@@ -128,7 +128,7 @@ def test_spark_udf_parity(spark):
     """pandas-UDF form must agree exactly with the pure-Python form."""
     from pyspark.sql import functions as F
 
-    from sandcrawler_spark.functions.urlkeys import canonical_url_udf, surt_udf, url_hash64
+    from sandcrawler_spark.functions.urlkeys import canonical_url_udf, surt_udf
 
     urls = [
         "HTTP://Example.COM:80/a/../b/?q=1#frag",
@@ -148,9 +148,10 @@ def test_spark_udf_parity(spark):
     for r in rows:
         assert r.cu == canonical_url(r.url)
         assert r.s == surt(r.url)
-    # hash is deterministic across runs
-    h1 = df.select(url_hash64(canonical_url_udf("url"))).collect()
-    h2 = df.select(url_hash64(canonical_url_udf("url"))).collect()
+    # the frontier's url key (xxhash64 of the canonical URL) is
+    # deterministic across runs
+    h1 = df.select(F.xxhash64(canonical_url_udf("url"))).collect()
+    h2 = df.select(F.xxhash64(canonical_url_udf("url"))).collect()
     assert h1 == h2
 
 

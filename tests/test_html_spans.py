@@ -1,14 +1,12 @@
 """HTML span producer goldens (reference html_extract_resources,
 html_metadata.py:1034-1077): selector coverage, urljoin resolution,
-first-occurrence resource dedup, document-order offsets — plus a
-real-publisher fixture from the reference checkout when available, and
-Spark/pure-kernel span-sequence equality."""
+first-occurrence resource dedup, document-order offsets — plus an
+in-repo publisher page fixture, and Spark/pure-kernel span-sequence
+equality."""
 
 from __future__ import annotations
 
 import os
-
-import pytest
 
 from sandcrawler_spark.operators.html import extract_spans
 
@@ -89,13 +87,9 @@ def test_extract_spans_empty_and_broken():
     assert any(s["kind"] == "text" and s["text"] == "ok" for s in spans)
 
 
-@pytest.mark.skipif(
-    not os.path.exists("/root/reference/python/tests/files/dlib_05vanhyning.html"),
-    reason="reference HTML fixtures not available",
-)
 def test_publisher_fixture_spans():
     with open(
-        "/root/reference/python/tests/files/dlib_05vanhyning.html",
+        os.path.join(os.path.dirname(__file__), "fixtures", "dlib_05vanhyning.html"),
         encoding="utf-8",
         errors="replace",
     ) as f:

@@ -9,7 +9,6 @@ import binascii
 
 import pytest
 
-from pyspark.sql import functions as F
 from sandcrawler_spark.operators import intake
 
 
@@ -249,74 +248,6 @@ def test_groupworks_slug_cap(spark):
     got = _rows(intake.groupworks_filter(df), "slug", "fatcat_release")
     # 'big' (51 lines > 50) dropped whole; 'ok' keeps lines 1.. (K1, K2, S)
     assert got == [("ok", "K1"), ("ok", "K2"), ("ok", "S")]
-
-
-def test_ingest_request_json_reference_shape(spark):
-    """The serialized nested form must json-load to EXACTLY the dicts
-    the reference scripts print: always-present ext_ids keys serialize
-    null (doaj emits "doi": null), conditional ext/extra keys appear
-    only when set (unpaywall's pmh_id / oa_status / evidence)."""
-    import json
-
-    from sandcrawler_spark.operators.intake import ingest_request_json
-
-    # doaj-shaped row, no DOI → ext_ids carries an explicit null doi
-    doaj = spark.createDataFrame(
-        [
-            (
-                "http://x.org/a.pdf", "pdf", "doaj", "doaj-1", "doaj",
-                "published", "publisher", None, "doaj-1",
-            )
-        ],
-        "base_url string, ingest_type string, link_source string, "
-        "link_source_id string, ingest_request_source string, "
-        "release_stage string, rel string, ext_doi string, ext_doaj string",
-    )
-    out = ingest_request_json(doaj, ext_always=("doi", "doaj")).collect()[0]
-    assert json.loads(out.json) == {
-        "base_url": "http://x.org/a.pdf",
-        "ingest_type": "pdf",
-        "link_source": "doaj",
-        "link_source_id": "doaj-1",
-        "ingest_request_source": "doaj",
-        "release_stage": "published",
-        "rel": "publisher",
-        "ext_ids": {"doi": None, "doaj": "doaj-1"},
-        "edit_extra": {},
-    }
-
-    # unpaywall-shaped rows: conditional pmh_id/oa_status/evidence
-    up = spark.createDataFrame(
-        [
-            ("http://y/1.pdf", "10.1/a", "oai:x:1", "gold", "oa journal"),
-            ("http://y/2.pdf", "10.1/b", None, None, None),
-        ],
-        "base_url string, ext_doi string, ext_pmh_id string, "
-        "extra_oa_status string, extra_evidence string",
-    )
-    up = (
-        up.withColumn("ingest_type", F.lit("pdf"))
-        .withColumn("link_source", F.lit("unpaywall"))
-        .withColumn("link_source_id", F.col("ext_doi"))
-        .withColumn("ingest_request_source", F.lit("unpaywall"))
-        .withColumn("release_stage", F.lit("published"))
-        .withColumn("rel", F.lit("repository"))
-    )
-    rows = {
-        r.base_url: json.loads(r.json)
-        for r in ingest_request_json(
-            up,
-            ext_always=("doi",),
-            ext_conditional=("pmh_id",),
-            extra_conditional=("oa_status", "evidence"),
-        ).collect()
-    }
-    assert rows["http://y/1.pdf"]["ext_ids"] == {"doi": "10.1/a", "pmh_id": "oai:x:1"}
-    assert rows["http://y/1.pdf"]["edit_extra"] == {
-        "oa_status": "gold", "evidence": "oa journal",
-    }
-    assert rows["http://y/2.pdf"]["ext_ids"] == {"doi": "10.1/b"}
-    assert rows["http://y/2.pdf"]["edit_extra"] == {}
 
 
 def test_archiveorg_filesets(spark):

@@ -1,18 +1,15 @@
 """Link-graph citation priority: PageRank vs a numpy reference (incl.
-dangling nodes), in-degree scoring, anchor top-k totality, and the
-seed-table wiring that feeds the frontier's fetch-order key."""
+dangling nodes), in-degree scoring and anchor top-k totality."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from sandcrawler_spark.operators.linkgraph import (
     anchor_text_topk,
     indegree_citation,
     pagerank,
-    with_citation_priority,
 )
 
 # small graph WITH a dangling node (4 has no outlinks) and a node that
@@ -82,20 +79,3 @@ def test_anchor_topk_total_order(spark):
     # count desc then anchor asc: 'read more'(2) first, then
     # 'appendix' beats 'here' lexicographically at count 1
     assert got == [("x", "read more", 2, 1), ("x", "appendix", 1, 2)]
-
-
-def test_with_citation_priority_wiring(spark, edges_df):
-    seeds = spark.createDataFrame(
-        [(str(i), 0.9) for i in range(N)] + [("unlinked", 0.9)],
-        "canonical_url string, citation_priority double",
-    )
-    scores = pagerank(edges_df, iterations=2).select(
-        F.col("node").cast("string").alias("node"), "rank"
-    )
-    out = with_citation_priority(seeds, scores)
-    got = {r["canonical_url"]: r["citation_priority"] for r in out.collect()}
-    want = _numpy_pagerank(EDGES, N, 2)
-    assert got["unlinked"] == 0.0
-    for v in range(N):
-        assert got[str(v)] == pytest.approx(round(want[v], 6), abs=5e-7)
-    assert "citation_priority" in out.columns

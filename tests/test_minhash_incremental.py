@@ -77,46 +77,3 @@ def test_simhash_probe_equals_batch_restricted(spark, docs):
     assert got == want
     assert len(got) > 0
 
-
-def test_embedding_probe_equals_batch_restricted(spark, tmp_path):
-    import math
-    import random
-
-    from sandcrawler_spark.operators.similarity import (
-        embedding_near_dups_lsh,
-        embedding_probe_lsh,
-        hyperplane_signatures,
-    )
-
-    rng = random.Random(7)
-    rows = []
-    vid = 0
-    for c in range(6):  # 6 base directions, 4 near-copies each
-        base = [rng.gauss(0, 1) for _ in range(12)]
-        n = math.sqrt(sum(x * x for x in base))
-        base = [x / n for x in base]
-        for _ in range(4):
-            jit = [x + rng.gauss(0, 0.01) for x in base]
-            jn = math.sqrt(sum(x * x for x in jit))
-            rows.append((vid, [x / jn for x in jit]))
-            vid += 1
-    all_vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    corpus = all_vecs.filter(F.col("vec_id") % 2 == 0)
-    delta = all_vecs.filter(F.col("vec_id") % 2 == 1)
-
-    # persisted signature state, parquet round-trip
-    ix_path = str(tmp_path / "srp_index")
-    hyperplane_signatures(corpus).write.parquet(ix_path)
-    ix = spark.read.parquet(ix_path)
-
-    got = {
-        (r["id1"], r["id2"], r["sim"])
-        for r in embedding_probe_lsh(delta, ix, corpus, tau=0.9).collect()
-    }
-    batch = {
-        (r["id1"], r["id2"], r["sim"])
-        for r in embedding_near_dups_lsh(all_vecs, tau=0.9).collect()
-    }
-    want = {p for p in batch if p[0] % 2 == 1 or p[1] % 2 == 1}
-    assert got == want
-    assert len(got) > 0

@@ -154,18 +154,3 @@ class TestSparkParity:
         urls = spark.createDataFrame([("h", "/d/x")], "host string, path string")
         plan = R.robots_allowed(urls, rules)._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-    def test_frontier_bridge(self, spark):
-        bodies = [
-            ("blocked.org", "User-agent: *\nDisallow: /\n"),
-            ("slow.org", "User-agent: *\nCrawl-delay: 10\nDisallow: /tmp\n"),
-            ("open.org", "User-agent: *\nDisallow:\n"),
-        ]
-        df = spark.createDataFrame(bodies, "host string, robots_txt string")
-        out = {
-            r["host"]: (r["blocked"], r["host_budget"])
-            for r in R.frontier_rules_from_robots(df, default_budget=32).collect()
-        }
-        assert out["blocked.org"] == (True, 32)
-        assert out["slow.org"] == (False, 6)  # floor(60/10)
-        assert out["open.org"] == (False, 32)

@@ -1,78 +1,9 @@
-"""Span-sequence invariant tests (SURVEY §5 rebuild plan c): the
-ingest/extract transforms must preserve (kind, text, media_ref) order
-exactly as the single-threaded rule does."""
+"""Span-sequence tests (SURVEY §5 rebuild plan c): per-document
+interleave profile and offset-ordered text flattening."""
 
 from __future__ import annotations
 
 import pytest
-
-from sandcrawler_spark.plans.datagen import gen_frontier
-
-
-@pytest.fixture(scope="module")
-def docs_df(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("spans_data"))
-    gen_frontier(d, n_urls=400, n_hosts=12, n_seeds=100, seed=11)
-    return spark.read.parquet(f"{d}/docs.parquet")
-
-
-def _oracle_dedup(spans):
-    """Pure-Python mirror of html_metadata.py:1075: drop exact dups,
-    keep first-occurrence order, re-index offsets densely."""
-    seen, out = set(), []
-    for s in sorted(spans, key=lambda s: s["offset"]):
-        key = (s["kind"], s["text"], s["media_ref"])
-        if key in seen:
-            continue
-        seen.add(key)
-        out.append(key)
-    return [(k, t, m, i) for i, (k, t, m) in enumerate(out)]
-
-
-def test_span_sequence_equality_after_dedup(spark, docs_df):
-    from sandcrawler_spark.operators.spans import dedup_exact_spans
-
-    got = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in dedup_exact_spans(docs_df).collect()
-    }
-    want = {
-        r["doc_id"]: _oracle_dedup([s.asDict() for s in r["spans"]])
-        for r in docs_df.collect()
-    }
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == want[k], k
-
-
-def test_word_count_matches_oracle(spark, docs_df):
-    from sandcrawler_spark.operators.spans import doc_word_count
-
-    got = {r["doc_id"]: r["word_count"] for r in doc_word_count(docs_df).collect()}
-    for r in docs_df.collect():
-        texts = [s["text"] for s in sorted(r["spans"], key=lambda s: s["offset"])
-                 if s["kind"] == "text"]
-        if not texts:
-            assert r["doc_id"] not in got
-            continue
-        body = " ".join(texts)
-        assert got[r["doc_id"]] == len(body.split()), r["doc_id"]
-
-
-def test_cap_resources(spark):
-    from pyspark.sql import Row
-
-    from sandcrawler_spark.operators.spans import cap_resources
-
-    def span(kind, off):
-        return Row(kind=kind, text=None if kind != "text" else "x",
-                   media_ref=None if kind == "text" else f"http://m/{off}", offset=off)
-
-    small = Row(doc_id="ok", spans=[span("text", 0)] + [span("image", i) for i in range(1, 5)])
-    big = Row(doc_id="big", spans=[span("text", 0)] + [span("image", i) for i in range(1, 205)])
-    df = spark.createDataFrame([small, big])
-    kept = [r["doc_id"] for r in cap_resources(df).collect()]
-    assert kept == ["ok"]
 
 
 def test_interleave_stats(spark):

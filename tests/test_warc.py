@@ -1,6 +1,6 @@
 """WARC container I/O: writer→reader round-trip, petabox-style
-random access by (path, offset, csize), plain-WARC multi-record
-parse, non-response records."""
+(path, offset, csize) keys per record, plain-WARC multi-record parse,
+non-response records."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ import os
 
 from sandcrawler_spark.sources.warc import (
     build_warc_record_bytes,
-    fetch_warc_record,
     iter_warc_members,
     read_warc_records,
 )
@@ -49,13 +48,6 @@ def test_warc_roundtrip_and_random_access(spark, tmp_path):
     r1 = by_key[("a.warc.gz", "http://w.org/1")]
     assert r1.http_status == 404 and r1.mimetype == "text/html"
     assert r1.payload_len == len(payloads[1])
-
-    # petabox twin: re-fetch exactly one record by (path, offset, csize)
-    for r in rows:
-        rec = fetch_warc_record(r.warc_path.replace("file:", ""), r.offset, r.csize)
-        assert rec is not None
-        assert rec["target_uri"] == r.target_uri
-        assert rec["payload"] == bytes(r.payload)
 
     # offsets are real byte positions: members concatenate to the file
     sizes = sorted((r.offset, r.csize) for r in rows if r.warc_path.endswith("a.warc.gz"))
@@ -109,71 +101,3 @@ def test_iter_warc_members_streaming():
     for _, _, raw in members:
         assert raw.startswith(b"WARC/1.0")
 
-
-def test_warc_cdx_indexing_roundtrip(spark, tmp_path):
-    """warc_to_cdx_lines output must parse back through the repo's own
-    CDX parser (S1) to exactly the capture rows warc_to_captures
-    emits — the WARC → CDX → frontier chain is closed."""
-    from sandcrawler_spark.sources.cdx import parse_cdx_lines
-    from sandcrawler_spark.sources.warc import (
-        warc_to_captures,
-        warc_to_cdx_lines,
-    )
-
-    payloads = [b"%PDF-1.4 one", b"<html>two</html>", b"%PDF-1.4 three"]
-    p1 = str(tmp_path / "x.warc.gz")
-    _write_warc_gz(p1, payloads)
-    records = read_warc_records(spark, p1)
-
-    caps = {r.url: r for r in warc_to_captures(records).collect()}
-    assert len(caps) == 3
-    assert caps["http://w.org/0"].dt == "20200101000000"
-    assert caps["http://w.org/1"].status_code == 404
-
-    lines = warc_to_cdx_lines(records)
-    parsed = {r.url: r for r in parse_cdx_lines(lines).collect()}
-    assert set(parsed) == set(caps)
-    for url, c in caps.items():
-        p = parsed[url]
-        assert p.datetime == c.dt
-        assert p.http_status == c.status_code
-        assert p.sha1hex == c.sha1hex
-        assert p.mimetype == c.mimetype
-        assert p.warc_csize == c.warc_csize
-        assert p.warc_offset == c.warc_offset
-        assert p.warc_path == "x.warc.gz"
-
-
-def test_warc_fanout_sink_roundtrip_and_determinism(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from sandcrawler_spark.sources.warc import write_warc_fanout
-
-    df = spark.range(1, 41).select(
-        F.concat(F.lit("http://s.org/"), F.col("id")).alias("url"),
-        F.lit("20210501120000").alias("dt"),
-        F.concat(F.lit("payload-"), F.col("id")).cast("binary").alias("payload"),
-        F.when(F.col("id") % 4 == 0, 404).otherwise(200).alias("http_status"),
-        F.lit("application/pdf").alias("mimetype"),
-    )
-    out1 = str(tmp_path / "w1")
-    man1 = write_warc_fanout(df, out1, num_shards=4).collect()
-    assert sum(m.records for m in man1) == 40
-
-    back = read_warc_records(spark, out1 + "/*.warc.gz").collect()
-    assert len(back) == 40
-    by_url = {r.target_uri: r for r in back}
-    assert bytes(by_url["http://s.org/7"].payload) == b"payload-7"
-    assert by_url["http://s.org/8"].http_status == 404
-    assert by_url["http://s.org/9"].warc_date == "2021-05-01T12:00:00Z"
-
-    # determinism: a rerun produces byte-identical shard files
-    import hashlib as _h
-
-    out2 = str(tmp_path / "w2")
-    write_warc_fanout(df, out2, num_shards=4).collect()
-    for m in man1:
-        name = m.path.split("/")[-1]
-        h1 = _h.sha1(open(m.path, "rb").read()).hexdigest()
-        h2 = _h.sha1(open(f"{out2}/{name}", "rb").read()).hexdigest()
-        assert h1 == h2
