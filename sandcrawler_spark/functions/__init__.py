@@ -1,7 +1,7 @@
-"""Scalar function kernel: URL canonicalization, SURT keys, hashes,
-mimetype normalization, CDX datetimes.
+"""Scalar function kernel: URL canonicalization, hashes,
+robots rules, filesystem paths, slugs.
 
-Each function exists in two forms:
+Most functions exist in two forms:
 
 - a pure-Python implementation (used by the single-threaded oracle and
   golden unit tests), and
@@ -10,25 +10,3 @@ Each function exists in two forms:
   codegen), else a vectorized pandas UDF (Arrow-batched; never
   row-at-a-time Python).
 """
-
-from sandcrawler_spark.functions.urlkeys import (  # noqa: F401
-    canonical_url,
-    canonical_url_udf,
-    fuzzy_match_url,
-    host_of,
-    surt,
-    surt_udf,
-    url_fuzzy_equal,
-)
-from sandcrawler_spark.functions.hashes import b32_hex, gen_file_metadata, hex_b32  # noqa: F401
-from sandcrawler_spark.functions.mime import normalize_mime  # noqa: F401
-from sandcrawler_spark.functions.paths import (  # noqa: F401
-    sanitize_fs_path,
-    sanitize_fs_path_col,
-)
-from sandcrawler_spark.functions.cdxdt import (  # noqa: F401
-    cdx_to_timestamp_col,
-    datetime_to_cdx,
-    parse_cdx_datetime,
-    timestamp_to_cdx_col,
-)

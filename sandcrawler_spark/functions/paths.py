@@ -11,21 +11,13 @@ projection, so sanitizing 10^10 blob keys is a map-only stage.
 
 from __future__ import annotations
 
-import posixpath
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def sanitize_fs_path(path: str) -> str:
-    """Scalar reference implementation (mirrors misc.py:303-310):
-    pretend-chroot to '/', cancel redundant segments, return a relative
-    path. Used for golden tests and driver-side key generation."""
-    return posixpath.relpath(posixpath.normpath(posixpath.join("/", path)), "/")
-
-
 def sanitize_fs_path_col(path: Column | str) -> Column:
-    """Column form of :func:`sanitize_fs_path` — whole-stage-codegen
-    segment fold, byte-identical to the scalar form."""
+    """Pretend-chroot to '/', cancel redundant segments, return a
+    relative path (misc.py:303-310) — whole-stage-codegen segment fold."""
     c = F.col(path) if isinstance(path, str) else path
     segs = F.split(F.concat(F.lit("/"), c), "/")
     folded = F.aggregate(

@@ -1,4 +1,4 @@
-"""URL canonicalization + SURT keying.
+"""URL canonicalization, resolution and fuzzy equality.
 
 Reproduces the observable behavior of the reference's URL identity layer:
 
@@ -7,13 +7,8 @@ Reproduces the observable behavior of the reference's URL identity layer:
   port (``http://host:/x`` → ``http://host/x``). The reference's notion of
   URL identity for dedup is the *exact canonical string* (Postgres PK on
   ``base_url``, ``sql/sandcrawler_schema.sql:156-171``).
-- ``url_fuzzy_equal`` (``misc.py:22-36``) and ``fuzzy_match_url``
-  (``python/sandcrawler/ia.py:127-143``): scheme-insensitive,
+- ``url_fuzzy_equal`` (``misc.py:22-36``): scheme-insensitive,
   ``www.``-stripping, trailing-slash-tolerant equality.
-- SURT key (first CDX column; Pig UDF ``SurtUrlKey`` at
-  ``pig/filter-cdx-join-urls.pig:12-13``): sort-friendly
-  ``tld,domain,sub)/path?query`` form used as the join/sort key for all
-  CDX processing.
 
 The canonicalizer here is a from-scratch implementation of the public
 WHATWG-ish rules the reference depends on (lowercase scheme/host, default
@@ -139,29 +134,6 @@ def canonical_url(raw: str | None) -> str | None:
     return urlunsplit((scheme, netloc, path, query, ""))
 
 
-def surt(raw: str | None) -> str | None:
-    """SURT key: ``com,example,www)/path?query`` (lowercased, scheme
-    dropped, host labels reversed). Matches the shape of CDX column 0
-    (``python/tests/files/example.cdx``); used as the sort/join key for
-    CDX processing (pig/filter-cdx-join-urls.pig:17-36).
-    """
-    cu = canonical_url(raw)
-    if cu is None:
-        return None
-    parts = urlsplit(cu)
-    host = parts.hostname or ""
-    # wayback's canonicalizer strips a leading www. for SURT keying
-    if host.startswith("www.") and host.count(".") >= 2:
-        host = host[4:]
-    key = ",".join(reversed(host.split(".")))
-    if parts.port is not None:
-        key += f":{parts.port}"
-    tail = parts.path or "/"
-    if parts.query:
-        tail += "?" + parts.query
-    return f"{key}){tail}"
-
-
 def resolve_ref(base: str | None, ref: str | None) -> str | None:
     """Resolve a possibly-relative reference against its base URL, then
     canonicalize (C11). Mirrors the reference's urljoin of every redirect
@@ -208,24 +180,6 @@ def url_fuzzy_equal(left: str, right: str) -> bool:
 
     fl, fr = fuzz(left), fuzz(right)
     return fl == fr or fl == fr + "/" or fr == fl + "/"
-
-
-def fuzzy_match_url(left: str, right: str) -> bool:
-    """Protocol-agnostic URL match (reference ia.py:127-143): exact, or
-    equal after scheme strip, or trailing-slash difference, or
-    double-slash collapse."""
-    if left == right:
-        return True
-    if "://" in left and "://" in right:
-        left = "://".join(left.split("://")[1:])
-        right = "://".join(right.split("://")[1:])
-    if left == right:
-        return True
-    if left == right + "/" or right == left + "/":
-        return True
-    if left.replace("//", "/") == right.replace("//", "/"):
-        return True
-    return False
 
 
 # ---------------------------------------------------------------- Spark UDFs
@@ -285,11 +239,6 @@ def resolve_url_udf(base: pd.Series, ref: pd.Series) -> pd.Series:
             resolve_ref(b, r) for b, r in zip(base.loc[rel_idx], ref.loc[rel_idx])
         ]
     return out
-
-
-@F.pandas_udf(T.StringType())
-def surt_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(surt, na_action="ignore")
 
 
 def host_col(url_col: Column | str) -> Column:

@@ -721,9 +721,8 @@ def html_to_biblio(df: DataFrame, id_col: str, html_col: str,
 
 # the 9 inline denylist literals from filter_grobid_metadata.py:9-21;
 # the reference extends these with python/title_slug_denylist.txt (554
-# data rows) — that file is corpus DATA, so it is taken as the
-# ``title_denylist`` parameter of filter_biblio_metadata rather than
-# vendored here.
+# data rows) — that file is corpus DATA, so it is not vendored here and
+# filter_biblio_metadata applies only the inline literals.
 TITLE_DENYLIST_INLINE = (
     "editorial",
     "advertisement",
@@ -758,13 +757,7 @@ def _ascii_slug(col):
     return F.regexp_replace(F.lower(col), "[^a-z]", "")
 
 
-def filter_biblio_metadata(
-    df: DataFrame,
-    title_col: str = "title",
-    authors_col: str = "authors",
-    journal_col: str = "journal",
-    title_denylist: tuple[str, ...] = TITLE_DENYLIST_INLINE,
-) -> DataFrame:
+def filter_biblio_metadata(df: DataFrame) -> DataFrame:
     """The reference's GROBID-metadata quality gate
     (``python/scripts/filter_grobid_metadata.py:46-160``) as one pure
     Catalyst projection + filter — the stage between metadata
@@ -785,18 +778,18 @@ def filter_biblio_metadata(
     as a no-op (with this note instead of code) for byte parity.
 
     Scale: pure projection/filter — no shuffle, no Python; the
-    denylist (≤ ~600 entries) rides the plan as an ``isin`` literal
-    set. 100-TB verdict: scan-rate bound.
+    inline denylist rides the plan as an ``isin`` literal set. 100-TB
+    verdict: scan-rate bound.
     """
-    t = F.trim(F.col(title_col))
+    t = F.trim(F.col("title"))
     slug = _ascii_slug(t)
     words = F.split(t, r"\s+")
     single = F.size(F.filter(words, lambda w: F.length(w) == 1))
     title_ok = (
-        F.col(title_col).isNotNull()
+        F.col("title").isNotNull()
         & (F.length(t) <= 500)
         & (F.length(slug) >= 10)
-        & ~slug.isin(*title_denylist)
+        & ~slug.isin(*TITLE_DENYLIST_INLINE)
         & ~slug.startswith("nr")
         & ~F.replace(F.lower(t), F.lit("."), F.lit("")).startswith("int j ")
         & ~t.startswith("The Journal of ")
@@ -823,7 +816,7 @@ def filter_biblio_metadata(
         ).otherwise(joined)
 
     authors_clean = F.filter(
-        F.transform(F.col(authors_col), _clean_name),
+        F.transform(F.col("authors"), _clean_name),
         lambda n: n.isNotNull() & (F.length(n) > 1),
     )
 
@@ -832,13 +825,13 @@ def filter_biblio_metadata(
     # hits ALL occurrences — mirrored via F.replace) → banner/length
     # gates → whitespace normalization  (:107-140)
     j = F.replace(
-        F.replace(F.col(journal_col), F.lit(" e-ISSN"), F.lit("")),
+        F.replace(F.col("journal"), F.lit(" e-ISSN"), F.lit("")),
         F.lit(" p-ISSN"), F.lit(""),
     )
     jslug = _ascii_slug(j)
     bad_j = (
-        F.col(journal_col).isNull()
-        | jslug.isin(*title_denylist)
+        F.col("journal").isNull()
+        | jslug.isin(*TITLE_DENYLIST_INLINE)
         | (F.length(jslug) < 4)
         | (j == "N.º")
     )
@@ -867,12 +860,12 @@ def filter_biblio_metadata(
 
     return (
         df.filter(
-            F.col(title_col).isNotNull()
-            & F.col(authors_col).isNotNull()
-            & (F.size(authors_col) > 0)
+            F.col("title").isNotNull()
+            & F.col("authors").isNotNull()
+            & (F.size("authors") > 0)
         )
         .filter(title_ok)
-        .withColumn(title_col, t)
-        .withColumn(authors_col, authors_clean)
-        .withColumn(journal_col, journal_clean)
+        .withColumn("title", t)
+        .withColumn("authors", authors_clean)
+        .withColumn("journal", journal_clean)
     )

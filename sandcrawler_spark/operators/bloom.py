@@ -381,7 +381,6 @@ def seen_anti_join(
     hash_key: str,
     bloom: BloomStore | None = None,
     scratch: list | None = None,
-    confirm_parts: tuple[DataFrame, DataFrame | None] | None = None,
 ) -> DataFrame:
     """candidates ∖ url_seen on ``keys`` (J3 left_anti), with the bloom
     short-circuit for definitely-new rows.
@@ -394,32 +393,12 @@ def seen_anti_join(
     ``scratch``: when given with a store, the probed candidates are
     cached (both branches read them) and appended here for the caller
     to unpersist.
-
-    ``confirm_parts``: optional (base, delta) split of the SAME seen
-    set for the exact-confirm phase — anti-join vs (base ∪ delta) ≡
-    anti-join vs base then vs delta, and when ``base`` is a
-    catalog-bucketed table (``sources/bucketed.py``) its side of the
-    join plans WITHOUT an Exchange (only the small maybe-side
-    shuffles). ``url_seen`` must still be the full set (it feeds the
-    throwaway bloom).
     """
-
-    def _keyed(df: DataFrame) -> DataFrame:
-        return df.select(*[F.col(k).alias(f"__s_{k}") for k in keys])
 
     cond = None
     for k in keys:
         c = F.col(k) == F.col(f"__s_{k}")
         cond = c if cond is None else (cond & c)
-
-    def _confirm(df: DataFrame) -> DataFrame:
-        if confirm_parts is None:
-            return df.join(_keyed(url_seen), cond, "left_anti")
-        base, delta = confirm_parts
-        out = df.join(_keyed(base), cond, "left_anti")
-        if delta is not None:
-            out = out.join(_keyed(delta), cond, "left_anti")
-        return out
 
     if bloom is not None:
         tagged = bloom.probe(candidates, hash_key)
@@ -435,5 +414,7 @@ def seen_anti_join(
         tagged = _probe_cogrouped(candidates, hash_key, shards, DEFAULT_SHARDS)
     definitely_new = tagged.filter(~F.col("__maybe")).drop("__maybe")
     maybe = tagged.filter(F.col("__maybe")).drop("__maybe")
-    confirmed_new = _confirm(maybe)
+    confirmed_new = maybe.join(
+        url_seen.select(*[F.col(k).alias(f"__s_{k}") for k in keys]), cond, "left_anti"
+    )
     return definitely_new.unionByName(confirmed_new)

@@ -29,7 +29,6 @@ matches the single-threaded oracle byte-for-byte.
 
 from __future__ import annotations
 
-import hashlib
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
@@ -42,7 +41,6 @@ from sandcrawler_spark.operators.bloom import BloomStore, seen_anti_join
 from sandcrawler_spark.operators.ranking import with_global_rank
 from sandcrawler_spark.plans import schemas as S
 from sandcrawler_spark.plans.state import SnapshotStore
-from sandcrawler_spark.sources.bucketed import read_bucketed, write_bucketed
 
 DEFAULT_BUDGET = 3
 SALT_BUCKETS = 8
@@ -56,6 +54,10 @@ TOKEN_BUCKET_CAP_MULT = 2
 # falls back to a shuffle join on host, where AQE's skew-join splitting
 # defuses hot-host partitions (politeness salting happens downstream)
 RULES_BROADCAST_MAX = 4_000_000
+# compaction cadence: a base is rewritten once the rows added since it
+# outgrow it by COMPACT_FACTOR and number at least COMPACT_MIN_ROWS
+COMPACT_FACTOR = 2.0
+COMPACT_MIN_ROWS = 50_000
 
 def _fetch_order_cols():
     """Total fetch-priority order (north_rule heap keys + URL totality).
@@ -350,7 +352,6 @@ def _new_candidates(
     has_forced: bool = True,
     bloom: BloomStore | None = None,
     scratch: list | None = None,
-    confirm_parts: tuple[DataFrame, DataFrame | None] | None = None,
 ) -> DataFrame:
     """Drop candidates already processed: the URL-seen anti-join with
     bloom prefilter (J3/J8; SURVEY §7.0) for unforced rows, the
@@ -366,9 +367,10 @@ def _new_candidates(
     rows) skips the whole forced branch INCLUDING the per-round
     max-generation shuffle over the accumulated seen set.
 
-    Shared by the per-round scheduler and the frontier compactor — one
-    definition means compaction provably removes exactly the rows the
-    next round's filter would have removed anyway (digest neutrality).
+    The frontier compactor calls the same ``seen_anti_join`` for its
+    unforced rows, so it removes exactly the rows the next round's
+    filter would remove anyway (digest neutrality); it keeps forced rows
+    unconditionally rather than applying the generation gate here.
     """
     unforced = (
         candidates.filter(~F.col("force_recrawl")) if has_forced else candidates
@@ -380,7 +382,6 @@ def _new_candidates(
         hash_key="canonical_url",
         bloom=bloom,  # incrementally-maintained sharded bloom
         scratch=scratch,
-        confirm_parts=confirm_parts,  # bucketed base + plain deltas
     )
     if not has_forced:
         return new_unforced
@@ -432,7 +433,6 @@ def run_round(
     prepared_rules: DataFrame | None = None,
     rules_broadcastable: bool = True,
     max_retries: int = 0,
-    seen_confirm_parts: tuple[DataFrame, DataFrame | None] | None = None,
 ) -> RoundResult:
     scratch = scratch if scratch is not None else []
     candidates = _dedup_candidates(frontier)
@@ -452,7 +452,6 @@ def run_round(
             has_forced=has_forced,
             bloom=bloom,
             scratch=scratch,
-            confirm_parts=seen_confirm_parts,
         )
 
     # --- robots / blocklist / budget (F6/J1). Small rules side →
@@ -750,30 +749,10 @@ def _compact_frontier(
     _release(scratch)
 
 
-def _compact_seen(
-    spark: SparkSession, store: SnapshotStore, round_id: int, added: int
-) -> None:
-    """Fold the url_seen deltas since the last bucketed base, together
-    with that base, into ONE catalog-bucketed base table
-    (``sources/bucketed.py``). The base is the raw delta multiset —
-    union-equivalent forever, nothing resolved away."""
-    sc = store.seen_compaction
-    first = sc["round"] + 1 if sc else 0
-    full = store.read_table("url_seen", upto_round=round_id, from_round=first)
-    if sc is not None:
-        base = read_bucketed(spark, store.aux_path(sc["table"]), sc["catalog"])
-        full = base.unionByName(full)
-    name = f"seen_base_r{round_id:05d}"
-    cat = f"seen_base_{hashlib.md5(store.root.encode()).hexdigest()[:8]}_r{round_id}"
-    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    write_bucketed(full, store.aux_path(name), cat, ["ingest_type", "canonical_url"], n_buckets)
-    store.set_seen_compaction(round_id, name, cat, rows=(sc["rows"] if sc else 0) + added)
-
-
-def _compaction_due(since: int, base: int, factor: float | None, min_rows: int) -> bool:
-    """The one trigger both compactions share: the rows added since the
-    last base outgrow it by ``factor`` and number at least ``min_rows``."""
-    return factor is not None and since >= min_rows and since > factor * max(base, 1)
+def _compaction_due(since: int, base: int) -> bool:
+    """True when the rows added since the last base outgrow it by
+    COMPACT_FACTOR and number at least COMPACT_MIN_ROWS."""
+    return since >= COMPACT_MIN_ROWS and since > COMPACT_FACTOR * max(base, 1)
 
 
 def _release(dfs: list[DataFrame]) -> None:
@@ -797,9 +776,6 @@ class _Crawl:
     default_budget: int
     max_retries: int
     token_bucket: bool
-    bucketed_seen: bool
-    compact_factor: float | None
-    compact_min_rows: int
 
     def counter(self, round_id: int, key: str, default=0):
         """One committed round's counter (``default`` when absent)."""
@@ -837,28 +813,13 @@ def _crawl_finished(c: _Crawl, round_id: int) -> bool:
     return stale and c.store.seeds_added_at_round != round_id and round_id > horizon
 
 
-def _read_seen(
-    c: _Crawl, round_id: int
-) -> tuple[DataFrame | None, tuple[DataFrame, DataFrame | None] | None]:
-    """The seen set of the rounds before ``round_id`` (resolved
-    last-round-wins once forced rows exist), plus the (bucketed base,
-    plain deltas since) parts the exact confirm anti-joins separately
-    when a bucketed base exists: the base side plans shuffle-free, and
-    the anti-join is key-presence-only, so resolution-neutral."""
-    sc = c.store.seen_compaction if c.bucketed_seen else None
-    parts = None
-    if sc is not None and sc["round"] <= round_id - 1:
-        base = read_bucketed(c.spark, c.store.aux_path(sc["table"]), sc["catalog"])
-        delta = c.store.read_table(
-            "url_seen", upto_round=round_id - 1, from_round=sc["round"] + 1
-        )
-        url_seen = base if delta is None else base.unionByName(delta)
-        parts = (base, delta)
-    else:
-        url_seen = c.store.read_table("url_seen", upto_round=round_id - 1)
+def _read_seen(c: _Crawl, round_id: int) -> DataFrame | None:
+    """The seen set of the rounds before ``round_id``, resolved
+    last-round-wins once forced rows exist."""
+    url_seen = c.store.read_table("url_seen", upto_round=round_id - 1)
     if url_seen is not None and any(c.counter(r, "forced") for r in range(round_id)):
         url_seen = resolve_url_seen(url_seen)
-    return url_seen, parts
+    return url_seen
 
 
 def _bloom_add(c: _Crawl, round_id: int, n_delta: int) -> None:
@@ -1030,23 +991,14 @@ def _write_and_commit(
 
 def _compact(c: _Crawl, round_id: int) -> None:
     """After a commit: fold the frontier sources into one active-only
-    base, and with ``bucketed_seen`` the url_seen deltas into one
-    bucketed base, each when what was added since its last base
-    outgrows it."""
+    base when what was added since its last base outgrows it."""
     comp = c.store.compaction
     first = comp["round"] + 1 if comp else 0
     added = sum(c.counter(r, "frontier_rows") for r in range(first, round_id + 1))
     base = comp["rows"] if comp else c.store.seed_rows
-    if _compaction_due(added, base, c.compact_factor, c.compact_min_rows):
+    if _compaction_due(added, base):
         # the bloom already reflects this round's delta
         _compact_frontier(c.spark, c.store, round_id, c.bloom)
-    if not c.bucketed_seen:
-        return
-    sc = c.store.seen_compaction
-    first = sc["round"] + 1 if sc else 0
-    added = sum(c.counter(r, "deduped") for r in range(first, round_id + 1))
-    if _compaction_due(added, sc["rows"] if sc else 0, c.compact_factor, c.compact_min_rows):
-        _compact_seen(c.spark, c.store, round_id, added)
 
 
 def run_crawl(
@@ -1057,10 +1009,7 @@ def run_crawl(
     default_budget: int = DEFAULT_BUDGET,
     resume: bool = False,
     token_bucket: bool = False,
-    compact_factor: float | None = 2.0,
-    compact_min_rows: int = 50_000,
     max_retries: int = 0,
-    bucketed_seen: bool = False,
 ) -> SnapshotStore:
     """Multi-round crawl driver with snapshot commit + exact resume.
 
@@ -1069,19 +1018,6 @@ def run_crawl(
     atomically. Killing the process between commits and re-running with
     ``resume=True`` continues from the last committed round with
     identical results (north_rule checkpoint/lineage requirement).
-
-    ``bucketed_seen=True`` periodically folds the accumulated url_seen
-    deltas into ONE catalog-bucketed base table (bucketed+sorted by the
-    anti-join keys, ``sources/bucketed.py``), and the per-round exact
-    confirm then anti-joins candidates against (bucketed base, plain
-    deltas-since) separately — set-equivalent to the union, but the
-    base side of the join plans with NO Exchange: at the 10^10 design
-    point only the (bloom-surviving) candidates shuffle, never the
-    accumulated seen set. Digest-neutral (anti ∘ union ≡ anti ∘ anti;
-    the base is the raw delta multiset, no resolution baked in).
-    Iceberg analogue: bucket(N, key) partition transform +
-    storage-partitioned joins. Trigger/cadence shares
-    ``compact_factor`` / ``compact_min_rows`` with frontier compaction.
 
     ``token_bucket=True`` switches politeness from a flat per-round
     budget to per-host token buckets persisted on a ``hosts`` state
@@ -1138,8 +1074,7 @@ def run_crawl(
         rule_rows = pads.dataset(f"{data_dir}/robots.parquet", format="parquet").count_rows()
         c = _Crawl(
             spark, store, BloomStore(store.aux_path("bloom")), rules,
-            rule_rows <= RULES_BROADCAST_MAX, default_budget, max_retries,
-            token_bucket, bucketed_seen, compact_factor, compact_min_rows,
+            rule_rows <= RULES_BROADCAST_MAX, default_budget, max_retries, token_bucket,
         )
         for round_id in range(start_round, max_rounds):
             # Append-only frontier: candidates for round r = prepared seeds ∪
@@ -1154,7 +1089,7 @@ def run_crawl(
                 frontier, input_rows = _assemble_frontier(
                     spark, store, upto_round=round_id - 1
                 )
-            url_seen, seen_parts = _read_seen(c, round_id)
+            url_seen = _read_seen(c, round_id)
             if url_seen is not None:
                 _sync_bloom(c, url_seen, round_id)
             host_tokens = _read_host_tokens(c, round_id)
@@ -1167,7 +1102,6 @@ def run_crawl(
                 prepared_rules=rules,
                 rules_broadcastable=c.rules_broadcastable,
                 max_retries=max_retries,
-                seen_confirm_parts=seen_parts,
             )
             _write_and_commit(c, round_id, rr, host_tokens, input_rows)
             _compact(c, round_id)

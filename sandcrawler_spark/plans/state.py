@@ -121,26 +121,6 @@ class SnapshotStore:
         self.save_manifest()
 
     @property
-    def seen_compaction(self) -> dict | None:
-        """Bucketed url_seen base: {round, table, catalog} — deltas up
-        to ``round`` folded into one bucketed-by-join-key table under
-        aux/ (written by ``sources/bucketed.write_bucketed``), so the
-        per-round exact-confirm anti-join co-locates on the state side.
-        Deltas AFTER ``round`` stay plain; the read unions them."""
-        return self._manifest.get("seen_compaction")
-
-    def set_seen_compaction(
-        self, round_id: int, table: str, catalog: str, rows: int
-    ) -> None:
-        self._manifest["seen_compaction"] = {
-            "round": int(round_id),
-            "table": table,
-            "catalog": catalog,
-            "rows": int(rows),
-        }
-        self.save_manifest()
-
-    @property
     def seeds_added_at_round(self) -> int:
         return int(self._manifest.get("seeds_added_at_round", -1))
 

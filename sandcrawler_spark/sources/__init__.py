@@ -1,3 +1,3 @@
 """Sources: CDX-shaped capture filters and revisit resolution, the WARC
-record scan, sitemap and RSS/Atom seed discovery, and the bucketed
-url_seen table (the snapshot table store itself is plans.state)."""
+record scan and sitemap and RSS/Atom seed discovery (the snapshot
+table store itself is plans.state)."""

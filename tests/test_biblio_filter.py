@@ -5,17 +5,14 @@ prefix semantics."""
 
 from __future__ import annotations
 
-from sandcrawler_spark.operators.biblio import (
-    TITLE_DENYLIST_INLINE,
-    filter_biblio_metadata,
-)
+from sandcrawler_spark.operators.biblio import filter_biblio_metadata
 
 
-def _run(spark, rows, **kw):
+def _run(spark, rows):
     df = spark.createDataFrame(
         rows, "id long, title string, authors array<string>, journal string"
     )
-    return {r["id"]: r for r in filter_biblio_metadata(df, **kw).collect()}
+    return {r["id"]: r for r in filter_biblio_metadata(df).collect()}
 
 
 def test_title_rules(spark):
@@ -83,7 +80,5 @@ def test_journal_rules(spark):
 
 
 def test_title_denylist_extension(spark):
-    deny = TITLE_DENYLIST_INLINE + ("asolidscholarlytitlemethodsandresults",)
     rows = [(1, "A Solid Scholarly Title: Methods and Results", ["A B"], None)]
-    assert 1 in _run(spark, rows)                       # inline list: kept
-    assert 1 not in _run(spark, rows, title_denylist=deny)  # extended: denied
+    assert 1 in _run(spark, rows)  # inline list: kept

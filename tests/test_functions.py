@@ -1,23 +1,12 @@
 """Golden tests for the scalar kernel, ported from the reference's
-inline asserts (misc.py:39-47,177-188,254-277,313-317; ia.py:146-165;
-python/tests/test_misc.py:50-69)."""
+inline asserts (misc.py:39-47; python/tests/test_misc.py:50-69)."""
 
 from __future__ import annotations
 
-import datetime
-
 import pytest
 
-from sandcrawler_spark.functions.cdxdt import datetime_to_cdx, parse_cdx_datetime
 from sandcrawler_spark.functions.hashes import b32_hex, gen_file_metadata, hex_b32
-from sandcrawler_spark.functions.mime import normalize_mime
-from sandcrawler_spark.functions.urlkeys import (
-    canonical_url,
-    fuzzy_match_url,
-    host_of,
-    surt,
-    url_fuzzy_equal,
-)
+from sandcrawler_spark.functions.urlkeys import canonical_url, host_of, url_fuzzy_equal
 
 
 def test_canonical_url_basics():
@@ -42,62 +31,12 @@ def test_canonical_url_basics():
     assert canonical_url(canonical_url(u)) == canonical_url(u)
 
 
-def test_surt():
-    assert surt("http://www.Example.com/Path?q=1") == "com,example)/Path?q=1"
-    assert surt("https://cs.cmu.edu/~user/") == "edu,cmu,cs)/~user/"
-    assert surt("http://example.com") == "com,example)/"
-    assert surt("http://example.com:8080/x") == "com,example:8080)/x"
-    # www stripped only as a prefix label of a 3+ label host
-    assert surt("http://www.com/x") == "com,www)/x"
-
-
 def test_url_fuzzy_equal_reference_vector():
     # misc.py:39-47
     assert url_fuzzy_equal(
         "http://www.annalsofian.org/article.asp?issn=0972-2327;year=2014;volume=17;issue=4;spage=463;epage=465;aulast=Nithyashree",
         "http://annalsofian.org/article.asp?issn=0972-2327;year=2014;volume=17;issue=4;spage=463;epage=465;aulast=Nithyashree",
     )
-
-
-def test_fuzzy_match_url_reference_vectors():
-    # ia.py:146-165
-    assert fuzzy_match_url("http://thing.com", "http://thing.com")
-    assert fuzzy_match_url("http://thing.com", "https://thing.com")
-    assert fuzzy_match_url("http://thing.com", "ftp://thing.com")
-    assert fuzzy_match_url("http://thing.com", "http://thing.com/")
-    assert fuzzy_match_url("https://thing.com", "http://thing.com/")
-    assert fuzzy_match_url("https://thing.com/", "http://thing.com")
-    assert not fuzzy_match_url("http://thing.com", "http://thing.com/blue")
-    assert fuzzy_match_url(
-        "https://www.cairn.info/static/images//logo-partners/logo-cnl-negatif.png",
-        "https://www.cairn.info/static/images/logo-partners/logo-cnl-negatif.png",
-    )
-    assert not fuzzy_match_url("http://thing.com", "http://www.thing.com")
-    assert not fuzzy_match_url("http://www.thing.com", "http://www2.thing.com")
-    assert not fuzzy_match_url("http://www.thing.com", "https://www2.thing.com")
-
-
-def test_normalize_mime_reference_vectors():
-    # misc.py:177-188
-    assert normalize_mime("asdf") is None
-    assert normalize_mime("application/pdf") == "application/pdf"
-    assert normalize_mime("application/pdf+journal") == "application/pdf"
-    assert normalize_mime("Application/PDF") == "application/pdf"
-    assert normalize_mime("application/p") is None
-    assert normalize_mime("application/xml+stuff") == "text/xml"
-    assert normalize_mime("application/x-pdf") == "application/pdf"
-    assert normalize_mime("application/x-html") is None
-    assert normalize_mime("unk") == "application/octet-stream"
-    assert normalize_mime("binary/octet-stream") == "application/octet-stream"
-
-
-def test_cdx_datetime_reference_vectors():
-    # misc.py:254-277
-    assert parse_cdx_datetime("") is None
-    assert parse_cdx_datetime("asdf") is None
-    assert parse_cdx_datetime("19930203123045") is not None
-    assert parse_cdx_datetime("20201028235103") == datetime.datetime(2020, 10, 28, 23, 51, 3)
-    assert datetime_to_cdx(datetime.datetime(2020, 10, 28, 23, 51, 3)) == "20201028235103"
 
 
 def test_b32_hex():
@@ -128,7 +67,7 @@ def test_spark_udf_parity(spark):
     """pandas-UDF form must agree exactly with the pure-Python form."""
     from pyspark.sql import functions as F
 
-    from sandcrawler_spark.functions.urlkeys import canonical_url_udf, surt_udf
+    from sandcrawler_spark.functions.urlkeys import canonical_url_udf
 
     urls = [
         "HTTP://Example.COM:80/a/../b/?q=1#frag",
@@ -137,17 +76,9 @@ def test_spark_udf_parity(spark):
         "scielo.br/journal/10.1234/abc",
     ]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
-    rows = (
-        df.select(
-            "url",
-            canonical_url_udf("url").alias("cu"),
-            surt_udf("url").alias("s"),
-        )
-        .collect()
-    )
+    rows = df.select("url", canonical_url_udf("url").alias("cu")).collect()
     for r in rows:
         assert r.cu == canonical_url(r.url)
-        assert r.s == surt(r.url)
     # the frontier's url key (xxhash64 of the canonical URL) is
     # deterministic across runs
     h1 = df.select(F.xxhash64(canonical_url_udf("url"))).collect()

@@ -4,8 +4,9 @@ Every top-level ``def``/``class`` in ``sandcrawler_spark/`` must be
 named by some code outside ``tests/``: the package itself (its query
 registries included), ``tools/``, ``bench.py``, ``__spark_entry__.py``
 or ``perfbench/``. A name counts when it appears as an identifier, an
-attribute or an imported name; mentions in docstrings and comments do
-not, which is why the check walks the AST instead of grepping text.
+attribute or an imported name (outside an ``__init__.py``, where an
+import is a re-export, not a use); mentions in docstrings and comments
+do not, which is why the check walks the AST instead of grepping text.
 Spark-free.
 """
 
@@ -42,12 +43,13 @@ def _sources():
 def _names_used() -> set[str]:
     used: set[str] = set()
     for p in _sources():
+        reexports = p.name == "__init__.py"  # a re-export is not a use
         for node in ast.walk(ast.parse(p.read_text(), str(p))):
             if isinstance(node, ast.Name):
                 used.add(node.id)
             elif isinstance(node, ast.Attribute):
                 used.add(node.attr)
-            elif isinstance(node, ast.alias):
+            elif isinstance(node, ast.alias) and not reexports:
                 used.add(node.name.split(".")[-1])
                 if node.asname:
                     used.add(node.asname)

@@ -7,7 +7,7 @@ import posixpath
 
 from pyspark.sql import functions as F
 
-from sandcrawler_spark.functions.paths import sanitize_fs_path, sanitize_fs_path_col
+from sandcrawler_spark.functions.paths import sanitize_fs_path_col
 
 # reference's own vectors (misc.py:313-318) + adversarial extras
 PATH_VECTORS = [
@@ -34,16 +34,6 @@ def _expected(p: str) -> str:
     return posixpath.relpath(posixpath.normpath(posixpath.join("/", p)), "/")
 
 
-def test_sanitize_scalar_matches_reference_semantics():
-    for p in PATH_VECTORS:
-        assert sanitize_fs_path(p) == _expected(p), p
-    # the reference's own goldens (misc.py test)
-    assert sanitize_fs_path("/thing.png") == "thing.png"
-    assert sanitize_fs_path("../../thing.png") == "thing.png"
-    assert sanitize_fs_path("thing.png") == "thing.png"
-    assert sanitize_fs_path("subdir/thing.png") == "subdir/thing.png"
-
-
 def test_sanitize_column_matches_scalar(spark):
     df = spark.createDataFrame([(p,) for p in PATH_VECTORS], "p string")
     got = {
@@ -52,6 +42,11 @@ def test_sanitize_column_matches_scalar(spark):
     }
     for p in PATH_VECTORS:
         assert got[p] == _expected(p), p
+    # the reference's own goldens (misc.py test)
+    assert got["/thing.png"] == "thing.png"
+    assert got["../../thing.png"] == "thing.png"
+    assert got["thing.png"] == "thing.png"
+    assert got["subdir/thing.png"] == "subdir/thing.png"
 
 
 _CDX_COLS = "surt string, datetime string, http_status int, mimetype string, sha1b32 string"
@@ -100,9 +95,10 @@ def test_j6_self_join_matchable(spark):
     assert pairs == [("r1", "r2"), ("r4", "r2")]
 
 
-def test_sanitize_property_vs_posixpath():
-    """Hypothesis: the scalar kernel equals the reference's
-    normpath-chroot-relpath composition for arbitrary segment soup."""
+def test_sanitize_property_vs_posixpath(spark):
+    """Hypothesis: the column kernel equals the reference's
+    normpath-chroot-relpath composition for arbitrary segment soup
+    (each example is a batch of paths, sanitized in one Spark job)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -110,10 +106,11 @@ def test_sanitize_property_vs_posixpath():
     path = st.lists(seg, min_size=0, max_size=8).map("/".join)
     lead = st.sampled_from(["", "/"])
 
-    @settings(max_examples=300, deadline=None)
-    @given(lead, path)
-    def run(prefix, p):
-        s = prefix + p
-        assert sanitize_fs_path(s) == _expected(s), s
+    @settings(max_examples=10, deadline=None)
+    @given(st.lists(st.tuples(lead, path).map("".join), min_size=1, max_size=100))
+    def run(paths):
+        df = spark.createDataFrame([(p,) for p in paths], "p string")
+        for r in df.select("p", sanitize_fs_path_col("p").alias("clean")).collect():
+            assert r["clean"] == _expected(r["p"]), r["p"]
 
     run()

@@ -34,13 +34,6 @@ def main() -> int:
     ap.add_argument("--budget", type=int, default=3)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument(
-        "--bucketed-seen",
-        action="store_true",
-        help="fold url_seen deltas into a catalog-bucketed base table so "
-        "the exact-confirm anti-join never shuffles the accumulated seen "
-        "set (co-located join; digest-neutral)",
-    )
-    ap.add_argument(
         "--token-bucket",
         action="store_true",
         help="per-host token-bucket politeness (persisted hosts state table) "
@@ -133,7 +126,6 @@ def main() -> int:
         resume=args.resume,
         token_bucket=args.token_bucket,
         max_retries=args.max_retries,
-        bucketed_seen=args.bucketed_seen,
     )
     out = {"rounds": store.committed_rounds, "counters": store.counters()}
     if refreshed is not None:
