@@ -199,9 +199,7 @@ def parse_robots_udf(agent: str):
     return parse
 
 
-def explode_rules(
-    df: DataFrame, host_col: str = "host", txt_col: str = "robots_txt", agent: str = "*"
-) -> DataFrame:
+def explode_rules(df: DataFrame, agent: str = "*") -> DataFrame:
     """(host, robots_txt) -> one row per matched-group rule.
 
     Output: (host, pattern, regex, allow, precedence, crawl_delay).
@@ -209,7 +207,7 @@ def explode_rules(
     (explode_outer) so crawl_delay survives for rule-less hosts.
     """
     parsed = df.select(
-        F.col(host_col).alias("host"), parse_robots_udf(agent)(F.col(txt_col)).alias("p")
+        F.col("host").alias("host"), parse_robots_udf(agent)(F.col("robots_txt")).alias("p")
     )
     return parsed.select(
         "host",
@@ -225,17 +223,11 @@ def explode_rules(
     )
 
 
-def robots_allowed(
-    urls: DataFrame,
-    rules: DataFrame,
-    host_col: str = "host",
-    path_col: str = "path",
-    broadcast_rules: bool = True,
-) -> DataFrame:
+def robots_allowed(urls: DataFrame, rules: DataFrame) -> DataFrame:
     """Longest-match allow/deny for every (host, path) in ``urls``.
 
     Set-oriented RFC 9309 decision: host equi-join (rules side
-    broadcast by default — one robots body per host is small next to a
+    broadcast — one robots body per host is small next to a
     frontier), regex match JVM-side (`rlike` with a column pattern, no
     Python), then one `max(struct(precedence, allow))` aggregation per
     URL — lexicographic struct max IS the longest-match rule with the
@@ -244,12 +236,10 @@ def robots_allowed(
 
     Returns ``urls`` + an ``allowed`` boolean column.
     """
-    pairs = urls.select(F.col(host_col).alias("host"), F.col(path_col).alias("path")).distinct()
-    rule_rows = rules.where(F.col("regex").isNotNull()).select(
-        "host", "regex", "allow", "precedence"
+    pairs = urls.select(F.col("host").alias("host"), F.col("path").alias("path")).distinct()
+    rule_rows = F.broadcast(
+        rules.where(F.col("regex").isNotNull()).select("host", "regex", "allow", "precedence")
     )
-    if broadcast_rules:
-        rule_rows = F.broadcast(rule_rows)
     decided = (
         pairs.join(rule_rows, "host")
         .where(F.expr("rlike(path, regex)"))
@@ -259,7 +249,7 @@ def robots_allowed(
     )
     out = urls.join(
         decided,
-        (urls[host_col] == decided["host"]) & (urls[path_col] == decided["path"]),
+        (urls["host"] == decided["host"]) & (urls["path"] == decided["path"]),
         "left",
     )
     return out.select(

@@ -45,25 +45,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _hash60(col, salt: str):
+def _hash60(col):
     return F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), col)), 1, 15), 16, 10
+        F.substring(F.md5(F.concat(F.lit("hlc"), col)), 1, 15), 16, 10
     ).cast("long")
 
 
 def hashed_ngram_features(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    dim: int = 4096,
-    bigrams: bool = True,
-    salt: str = "hlc",
+    df: DataFrame, id_col: str, text_col: str, dim: int = 4096
 ) -> DataFrame:
-    """(id, bucket, x) sparse hashed features; x = n-gram count / total
-    n-grams in the doc. Tokenization matches the repo's convention
-    (lower → trim → split on whitespace, empties dropped); bigrams are
-    space-joined adjacent token pairs from the SAME filtered array, so
-    the DuckDB oracle can rebuild the identical stream."""
+    """(id, bucket, x) sparse hashed unigram+bigram features (md5
+    salted with ``"hlc"``); x = n-gram count / total n-grams in the
+    doc. Tokenization matches the repo's convention (lower → trim →
+    split on whitespace, empties dropped); bigrams are space-joined
+    adjacent token pairs from the SAME filtered array, so the DuckDB
+    oracle can rebuild the identical stream."""
     toks = df.select(
         F.col(id_col).alias("id"),
         F.filter(
@@ -72,19 +68,16 @@ def hashed_ngram_features(
         ).alias("__toks"),
     )
     uni = toks.select("id", F.explode("__toks").alias("__f"))
-    feats = uni
-    if bigrams:
-        bi = toks.filter(F.size("__toks") >= 2).select(
-            "id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(__toks)-2),"
-                    " i -> concat(__toks[i], ' ', __toks[i+1]))"
-                )
-            ).alias("__f"),
-        )
-        feats = uni.unionByName(bi)
-    feats = feats.withColumn("bucket", _hash60(F.col("__f"), salt) % dim)
+    bi = toks.filter(F.size("__toks") >= 2).select(
+        "id",
+        F.explode(
+            F.expr(
+                "transform(sequence(0, size(__toks)-2),"
+                " i -> concat(__toks[i], ' ', __toks[i+1]))"
+            )
+        ).alias("__f"),
+    )
+    feats = uni.unionByName(bi).withColumn("bucket", _hash60(F.col("__f")) % dim)
     per_bucket = feats.groupBy("id", "bucket").agg(F.count("*").alias("__cnt"))
     # per-doc totals derive from the bucket counts (Σ_b cnt = n, exact
     # integer arithmetic), so the exploded+hashed feature stream is
@@ -104,16 +97,13 @@ def hashed_ngram_features(
 
 
 def apply_linear_classifier(
-    feats: DataFrame,
-    weights: DataFrame,
-    bias: float = 0.0,
-    score_decimals: int | None = 6,
+    feats: DataFrame, weights: DataFrame, bias: float = 0.0
 ) -> DataFrame:
     """(id, score) for every doc in ``feats`` (output of
-    :func:`hashed_ngram_features`): sigmoid(bias + Σ w·x). ``weights``
-    is a (bucket, w) table — ≤dim rows, broadcast onto the feature
-    stream; unseen buckets contribute 0 (left join + coalesce). One
-    partial-aggregable shuffle on id; Python-free plan."""
+    :func:`hashed_ngram_features`): sigmoid(bias + Σ w·x), rounded to
+    6dp. ``weights`` is a (bucket, w) table — ≤dim rows, broadcast
+    onto the feature stream; unseen buckets contribute 0 (left join +
+    coalesce). One partial-aggregable shuffle on id; Python-free plan."""
     margins = (
         feats.join(F.broadcast(weights), "bucket", "left")
         .groupBy("id")
@@ -124,9 +114,7 @@ def apply_linear_classifier(
             ).alias("margin")
         )
     )
-    score = F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin")))
-    if score_decimals is not None:
-        score = F.round(score, score_decimals)
+    score = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin"))), 6)
     return margins.select("id", score.alias("score"))
 
 
@@ -137,9 +125,6 @@ def classify_documents(
     weights: DataFrame,
     bias: float = 0.0,
     dim: int = 4096,
-    bigrams: bool = True,
-    salt: str = "hlc",
-    score_decimals: int | None = 6,
 ) -> DataFrame:
     """End-to-end inference: text → hashed features → linear score.
     The quality-filter hot path: at 100 TB this is a scan + explode +
@@ -154,15 +139,13 @@ def classify_documents(
     would add a corpus-sized SortMergeJoin). Round-4 fix; previously
     featureless docs had no score row at all, so quality_filter kept
     them with no audit entry."""
-    feats = hashed_ngram_features(df, id_col, text_col, dim, bigrams, salt)
+    feats = hashed_ngram_features(df, id_col, text_col, dim)
     sentinels = df.select(
         F.col(id_col).alias("id"),
         F.lit(-1).cast("long").alias("bucket"),
         F.lit(0.0).alias("x"),
     )
-    return apply_linear_classifier(
-        feats.unionByName(sentinels), weights, bias, score_decimals
-    )
+    return apply_linear_classifier(feats.unionByName(sentinels), weights, bias)
 
 
 def train_linear_classifier(
@@ -172,8 +155,6 @@ def train_linear_classifier(
     text_col: str,
     label_col: str,
     dim: int = 4096,
-    bigrams: bool = True,
-    salt: str = "hlc",
     epochs: int = 20,
     lr: float = 1.0,
     l2: float = 0.0,
@@ -196,7 +177,7 @@ def train_linear_classifier(
     are excluded from training entirely (not in n_docs, not in the bias
     gradient) — they constrain nothing but the bias, and at inference
     :func:`classify_documents` scores them sigmoid(bias) anyway."""
-    feats = hashed_ngram_features(df, id_col, text_col, dim, bigrams, salt)
+    feats = hashed_ngram_features(df, id_col, text_col, dim)
     labels = df.select(
         F.col(id_col).alias("id"), F.col(label_col).cast("double").alias("y")
     )

@@ -64,14 +64,11 @@ def _hash60(col: Column, salt: str) -> Column:
     ).cast("long")
 
 
-def hash_sample(
-    df: DataFrame, id_col: str, rate_bps: int, salt: str = "smp"
-) -> DataFrame:
-    """Deterministic ~``rate_bps``/10000 sample keyed on a salted md5 of
-    the id. Binomial per-partition (not an exact global quota — see
-    :func:`stratified_sample` for exact quotas); the salt gives
-    independent re-draws for held-out splits (train/val salts)."""
-    return df.filter(_hash60(F.col(id_col), salt) % 10000 < rate_bps)
+def hash_sample(df: DataFrame, id_col: str, rate_bps: int) -> DataFrame:
+    """Deterministic ~``rate_bps``/10000 sample keyed on an md5 of the
+    id salted with ``"smp"``. Binomial per-partition (not an exact
+    global quota — see :func:`stratified_sample` for exact quotas)."""
+    return df.filter(_hash60(F.col(id_col), "smp") % 10000 < rate_bps)
 
 
 def stratified_sample(
@@ -80,7 +77,6 @@ def stratified_sample(
     id_col: str,
     rate: float,
     exact: bool = True,
-    salt: str = "strat",
 ) -> DataFrame:
     """Per-stratum sample at ``rate``.
 
@@ -92,9 +88,9 @@ def stratified_sample(
     and partitioning-independent). Distributed via two-phase global rank
     over (stratum, hash, id) + a broadcast per-stratum offset/quota map.
     """
-    h = _hash60(F.col(id_col), salt).alias("__h")
+    h = _hash60(F.col(id_col), "strat").alias("__h")
     if not exact:
-        return df.filter(_hash60(F.col(id_col), salt) % 1_000_000 < int(rate * 1_000_000))
+        return df.filter(_hash60(F.col(id_col), "strat") % 1_000_000 < int(rate * 1_000_000))
     scratch: list[DataFrame] = []
     ranked = with_global_rank(
         df.withColumn("__h", h),
@@ -171,9 +167,8 @@ def pack_ffd(
     size_col: str,
     id_col: str,
     budget: int,
-    shard_col: str = "shard",
 ) -> DataFrame:
-    """First-fit-decreasing bin packing within each shard: docs sorted by
+    """First-fit-decreasing bin packing within each ``shard``: docs sorted by
     (size desc, id) go into the first bin with room; a doc larger than
     ``budget`` gets a singleton bin (never dropped). Sequential per
     shard — parallelism comes from the shard fan-out (pair with
@@ -206,7 +201,7 @@ def pack_ffd(
         pdf["bin_fill"] = pd.array([fills[b] for b in bins], dtype="int64")
         return pdf
 
-    return df.groupBy(shard_col).applyInPandas(_pack, out_schema)
+    return df.groupBy("shard").applyInPandas(_pack, out_schema)
 
 
 def pack_token_chunks(
@@ -214,8 +209,6 @@ def pack_token_chunks(
     id_col: str,
     tokens_col: str,
     max_tokens: int,
-    num_partitions: int | None = None,
-    scratch: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Concat-and-chunk sequence packing: documents are concatenated in
     ``id_col`` order into one token stream, which is cut into
@@ -231,14 +224,15 @@ def pack_token_chunks(
     closed-form function of the exclusive global cumsum ``c0``:
     doc occupies [c0, c0+toks) and lands in chunks
     floor(c0/max) .. floor((c0+toks-1)/max). The cumsum is two-phase
-    (range shuffle on id, per-partition totals broadcast — the
-    with_global_rank pattern, driver traffic = #partitions rows), the
-    rest is a pure projection + bounded `sequence` fan-out. No
+    (range shuffle on id into ``spark.sql.shuffle.partitions`` ranges,
+    per-partition totals broadcast — the with_global_rank pattern,
+    driver traffic = #partitions rows), the rest is a pure
+    projection + bounded `sequence` fan-out. No
     applyInPandas, no per-shard sequential pass. Zero-token docs are
     dropped (they contribute no span).
     """
     spark = df.sparkSession
-    n = num_partitions or spark.conf.get("spark.sql.shuffle.partitions")
+    n = spark.conf.get("spark.sql.shuffle.partitions")
     src = df.filter(F.col(tokens_col) > 0).select(
         id_col, F.col(tokens_col).cast("long").alias("__toks")
     )
@@ -247,11 +241,8 @@ def pack_token_chunks(
         .withColumn("__pid", F.spark_partition_id())
         .persist()  # offsets below are valid ONLY for this materialized
         # range layout (range bounds come from sampling) — keep it
-        # cached until the result is consumed; scratch hands the handle
-        # to the caller for unpersist, like with_global_rank
+        # cached until the result is consumed
     )
-    if scratch is not None:
-        scratch.append(ranged)
     sums = {
         r["__pid"]: r["s"]
         for r in ranged.groupBy("__pid").agg(F.sum("__toks").alias("s")).collect()
@@ -297,14 +288,13 @@ def pack_token_chunks(
     return out
 
 
-def weighted_sample(
-    df: DataFrame, id_col: str, weight_col: str, k: int, salt: str = "ws"
-) -> DataFrame:
+def weighted_sample(df: DataFrame, id_col: str, weight_col: str, k: int) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement (Efraimidis &
     Spirakis 2006, public paper): each row draws u = hash-uniform(0,1)
-    from a salted md5 of its id and ranks by key = u^(1/weight); the
-    top-k keys are the sample, with inclusion probability proportional
-    to weight. No rand(): the draw is a pure function of (id, salt), so
+    from an md5 of its id salted with ``"ws"`` and ranks by key =
+    u^(1/weight); the top-k keys are the sample, with inclusion
+    probability proportional to weight. No rand(): the draw is a pure
+    function of the id, so
     the sample is stable across reruns, partitionings, and resumes —
     the property `df.sample` cannot give. The key is rounded to 6
     decimals (with id tiebreak) so ordering is engine-portable.
@@ -312,7 +302,7 @@ def weighted_sample(
     Scale shape: orderBy+limit compiles to TakeOrderedAndProject —
     per-partition top-k then a single k-row merge; no global sort, no
     full shuffle."""
-    u = (_hash60(F.col(id_col), salt).cast("double") + 0.5) / float(1 << 60)
+    u = (_hash60(F.col(id_col), "ws").cast("double") + 0.5) / float(1 << 60)
     key = F.round(F.pow(u, F.lit(1.0) / F.col(weight_col).cast("double")), 6)
     return (
         df.select(F.col(id_col), F.col(weight_col), key.alias("es_key"))
@@ -321,9 +311,7 @@ def weighted_sample(
     )
 
 
-def curation_decisions(
-    docs, id_col: str = "doc_id", text_col: str = "text"
-):
+def curation_decisions(docs):
     """End-to-end keep/drop decision per document — the composed
     curation pipeline a corpus build actually runs, as ONE plan:
 
@@ -333,7 +321,8 @@ def curation_decisions(
        (:func:`..text.gopher_rules`) are ``gopher_fail``.
     3. everything else is ``kept``.
 
-    Returns ``(doc_id, reason)`` with reason ∈ {kept, exact_dup,
+    ``docs`` is (doc_id, text). Returns ``(doc_id, reason)`` with
+    reason ∈ {kept, exact_dup,
     gopher_fail}.  Stage 1 is a keyed min-aggregation joined back on
     the hash (two shuffles on the content hash, map-side combined —
     never a window over a skewed global ordering); stage 2 is a pure
@@ -345,9 +334,9 @@ def curation_decisions(
     from sandcrawler_spark.operators.text import gopher_rules
 
     hashed = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("_text"),
-        F.md5(F.lower(F.trim(F.col(text_col)))).alias("_h"),
+        F.col("doc_id").alias("doc_id"),
+        F.col("text").alias("_text"),
+        F.md5(F.lower(F.trim(F.col("text")))).alias("_h"),
     )
     canon = hashed.groupBy("_h").agg(F.min("doc_id").alias("_keep_id"))
     staged = hashed.join(canon, "_h").withColumn(
@@ -375,7 +364,6 @@ def mixture_sample(
     id_col: str,
     budget: float,
     alpha: float = 0.5,
-    salt: str = "mix",
 ) -> DataFrame:
     """Budget-constrained mixture sampling — the step that APPLIES a
     :func:`mixture_weights` table: each domain gets ``weight × budget``
@@ -406,7 +394,7 @@ def mixture_sample(
     )
     return (
         df.join(F.broadcast(rates), domain_col)
-        .filter(_hash60(F.col(id_col), salt) % 1_000_000 < F.col("rate_ppm"))
+        .filter(_hash60(F.col(id_col), "mix") % 1_000_000 < F.col("rate_ppm"))
     )
 
 
@@ -416,7 +404,6 @@ def dsir_scores(
     text_col: str,
     target_col: str,
     buckets: int = 4096,
-    salt: str = "dsir",
 ) -> DataFrame:
     """Data Selection with Importance Resampling (Xie et al., NeurIPS
     2023): score every document by the log-likelihood ratio of a
@@ -426,7 +413,7 @@ def dsir_scores(
     in-target rows (e.g. gold in-domain docs); scores are comparable
     across the whole frame.
 
-    Per-token feature = salted 60-bit md5 hash mod ``buckets`` (the
+    Per-token feature = ``"dsir"``-salted 60-bit md5 hash mod ``buckets`` (the
     hashed n-gram trick from the paper, portable to the DuckDB oracle);
     bucket LMs use add-one smoothing:
 
@@ -448,7 +435,7 @@ def dsir_scores(
             ).alias("__tok"),
         )
         .filter(F.col("__tok") != "")
-        .withColumn("__b", _hash60(F.col("__tok"), salt) % buckets)
+        .withColumn("__b", _hash60(F.col("__tok"), "dsir") % buckets)
     )
     # NOTE (round-6 measurement): a (id, tgt, bucket, cnt) pre-
     # aggregation "single pass" variant was tried and REVERTED — the
@@ -488,7 +475,6 @@ def epoch_shuffle(
     id_col: str,
     *,
     epoch: int = 0,
-    salt: str = "epoch",
     n_shards: int | None = None,
 ) -> DataFrame:
     """Deterministic global training-order shuffle for one epoch.
@@ -498,8 +484,8 @@ def epoch_shuffle(
     a preempted job that restarts (or a second consumer of the same
     epoch) has to see the identical sequence. ``df.orderBy(rand())``
     fails both ways — nondeterministic across retries and dependent on
-    partition layout. Here the sort key is a salted md5 of
-    ``(salt, epoch, id)``, so the permutation is a pure function of the
+    partition layout. Here the sort key is an md5 of
+    ``("epoch", epoch, id)``, so the permutation is a pure function of the
     epoch number, and ``epoch_pos`` (0-based) is the global position in
     that permutation. With ``n_shards``, ``shard = epoch_pos mod
     n_shards`` deals the shuffled stream round-robin — each shard is
@@ -510,7 +496,7 @@ def epoch_shuffle(
     :func:`~sandcrawler_spark.operators.ranking.with_global_rank` — no
     single-task window); the hash key is a pure codegen projection.
     """
-    h = _hash60(F.col(id_col), f"{salt}:{epoch}:").alias("__h")
+    h = _hash60(F.col(id_col), f"epoch:{epoch}:").alias("__h")
     ranked = with_global_rank(
         df.withColumn("__h", h), ["__h", id_col], rank_col="epoch_pos"
     ).drop("__h")
@@ -528,7 +514,6 @@ def interleave_sources(
     weights: dict | DataFrame,
     *,
     epoch: int = 0,
-    salt: str = "il",
 ) -> DataFrame:
     """Weighted deterministic interleave of multiple corpus sources into
     ONE global training stream (stride scheduling / weighted fair
@@ -536,7 +521,7 @@ def interleave_sources(
     decides the rates).
 
     Each source's rows are first shuffled deterministically within the
-    source (salted md5 of ``(salt, epoch, id)``), giving ``src_rank``
+    source (md5 of ``("il", epoch, id)``), giving ``src_rank``
     (0-based within source). Row r of source s is then released at
     virtual time ``(r + 1) / weight(s)``; the global stream orders by
     ``(vtime, source, src_rank)`` — a total order — so in any prefix of
@@ -556,7 +541,7 @@ def interleave_sources(
     — never a per-source single-task window — and the final ordering is
     the same two-phase rank); everything else is codegen projections.
     """
-    h = _hash60(F.col(id_col), f"{salt}:{epoch}:").alias("__h")
+    h = _hash60(F.col(id_col), f"il:{epoch}:").alias("__h")
     scratch: list[DataFrame] = []
     ranked = with_global_rank(
         df.withColumn("__h", h),
@@ -598,8 +583,6 @@ def quality_filter(
     docs,
     decisions,
     weights,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     bias: float = 0.0,
     threshold: float = 0.5,
     dim: int = 4096,
@@ -609,7 +592,7 @@ def quality_filter(
     hashed-ngram linear classifier (:mod:`..classifier`) and demote
     those under ``threshold`` to reason ``quality_fail``.
 
-    docs: the full corpus; decisions: output of
+    docs: the full (doc_id, text) corpus; decisions: output of
     :func:`curation_decisions`; weights: (bucket, w) table. Returns
     (decisions', survivors, scores): decisions with ``kept`` rows
     re-labeled ``quality_fail`` where score < threshold, the docs
@@ -624,12 +607,10 @@ def quality_filter(
 
     survivors = docs.join(
         decisions.filter(F.col("reason") == "kept"),
-        docs[id_col] == decisions["doc_id"],
+        docs["doc_id"] == decisions["doc_id"],
         "left_semi",
     )
-    scores = classify_documents(
-        survivors, id_col, text_col, weights, bias=bias, dim=dim
-    )
+    scores = classify_documents(survivors, "doc_id", "text", weights, bias=bias, dim=dim)
     fails = scores.filter(F.col("score") < threshold).select(
         F.col("id").alias("doc_id")
     )
@@ -644,5 +625,5 @@ def quality_filter(
         .otherwise(F.col("reason"))
         .alias("reason"),
     )
-    kept = survivors.join(fails, survivors[id_col] == fails["doc_id"], "left_anti")
+    kept = survivors.join(fails, survivors["doc_id"] == fails["doc_id"], "left_anti")
     return decisions2, kept, scores

@@ -55,15 +55,13 @@ def exact_dedup_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, tau: float = 0.8, n: int = 3
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs (ground truth / verify stage).
+def jaccard_pairs(df: DataFrame, id_col: str, text_col: str, tau: float = 0.8) -> DataFrame:
+    """Exact word-3-gram Jaccard near-dup pairs (ground truth / verify stage).
 
     inter(i,j) via shingle equi-join; |A∪B| = |A|+|B|−inter. Output
     (id1, id2, jacc) with jacc ≥ tau, id1 < id2.
     """
-    sh = shingles(df, id_col, text_col, n)
+    sh = shingles(df, id_col, text_col)
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     a = sh.select(F.col("id").alias("id1"), "shingle")
     b = sh.select(F.col("id").alias("id2"), "shingle")
@@ -86,7 +84,7 @@ def jaccard_pairs(
 
 
 def minhash_signatures_wide(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, _shingles: DataFrame | None = None
+    df: DataFrame, id_col: str, text_col: str, _shingles: DataFrame | None = None
 ) -> DataFrame:
     """(id, mh0..mh7): k-permutation MinHash over 28-bit shingle hashes.
 
@@ -96,7 +94,7 @@ def minhash_signatures_wide(
     row per (partition, id). The previous form crossJoined a k-row
     permutation table, multiplying every (id, shingle) row ×k before
     the shuffle — 8× the shuffle input for the identical result."""
-    base = _shingles if _shingles is not None else shingles(df, id_col, text_col, n)
+    base = _shingles if _shingles is not None else shingles(df, id_col, text_col)
     sh = base.withColumn("h", hash28_col("shingle"))
     aggs = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"mh{j}")
@@ -238,7 +236,7 @@ def cap_bucket_width(
 
 
 def minhash_near_dups(
-    df: DataFrame, id_col: str, text_col: str, tau: float = 0.8, n: int = 3,
+    df: DataFrame, id_col: str, text_col: str, tau: float = 0.8,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: band-bucket candidate pairs, then exact
@@ -247,8 +245,8 @@ def minhash_near_dups(
     :func:`cap_bucket_width`)."""
     # the shingle set feeds BOTH the signature build and the verify
     # stage — cache it once (columnar) instead of re-tokenizing
-    sh = shingles(df, id_col, text_col, n).persist()
-    sig = minhash_signatures_wide(df, id_col, text_col, n, _shingles=sh)
+    sh = shingles(df, id_col, text_col).persist()
+    sig = minhash_signatures_wide(df, id_col, text_col, _shingles=sh)
     bands = cap_bucket_width(lsh_band_keys(sig), ["band", "band_key"], max_bucket)
     b1 = bands.select(F.col("id").alias("id1"), "band", "band_key")
     b2 = bands.select(F.col("id").alias("id2"), "band", "band_key")
@@ -287,9 +285,7 @@ def minhash_near_dups(
     )
 
 
-def build_minhash_index(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
+def build_minhash_index(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """The persistable LSH state of a long-running crawl: (id, band,
     band_key) rows, one write per corpus batch, kept in a parquet/
     Iceberg table partitioned by band. Each later batch PROBES this
@@ -298,7 +294,7 @@ def build_minhash_index(
     only shape that works at 10^9+ documents (re-running
     :func:`minhash_near_dups` over corpus ∪ delta is O(corpus) per
     batch; probing is O(delta + matched buckets))."""
-    return lsh_band_keys(minhash_signatures_wide(df, id_col, text_col, n))
+    return lsh_band_keys(minhash_signatures_wide(df, id_col, text_col))
 
 
 def minhash_probe_index(
@@ -308,13 +304,12 @@ def minhash_probe_index(
     id_col: str,
     text_col: str,
     tau: float = 0.8,
-    n: int = 3,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Incremental MinHash-LSH: near-dup pairs that TOUCH a new batch.
 
     candidates = (delta bands ⋈ stored index) ∪ (banded intra-delta
-    self-join); verify = exact n-gram Jaccard, with the corpus side
+    self-join); verify = exact word-3-gram Jaccard, with the corpus side
     re-shingled ONLY for candidate ids (semi-join pushdown — the 100 TB
     corpus scan reads matched docs, not everything). Output
     (id1, id2, jacc) with the same canonical id1 < id2 orientation and
@@ -324,8 +319,8 @@ def minhash_probe_index(
     ``corpus`` must be the table the index was built from (text is
     needed for verification); delta and corpus ids must be disjoint.
     """
-    sh_delta = shingles(delta, id_col, text_col, n).persist()
-    sig = minhash_signatures_wide(delta, id_col, text_col, n, _shingles=sh_delta)
+    sh_delta = shingles(delta, id_col, text_col).persist()
+    sig = minhash_signatures_wide(delta, id_col, text_col, _shingles=sh_delta)
     dbands = cap_bucket_width(lsh_band_keys(sig), ["band", "band_key"], max_bucket)
     ix = cap_bucket_width(
         index.select(F.col("id").alias("cid"), "band", "band_key"),
@@ -351,9 +346,7 @@ def minhash_probe_index(
     cand_ids = cand.select(F.col("id1").alias(id_col)).unionByName(
         cand.select(F.col("id2").alias(id_col))
     ).distinct()
-    sh_corpus = shingles(
-        corpus.join(cand_ids, id_col, "left_semi"), id_col, text_col, n
-    )
+    sh_corpus = shingles(corpus.join(cand_ids, id_col, "left_semi"), id_col, text_col)
     sh = sh_delta.unionByName(sh_corpus).persist()
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     s1 = sh.select(F.col("id").alias("id1"), "shingle")
@@ -376,14 +369,17 @@ def minhash_probe_index(
     )
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 60) -> DataFrame:
+SIMHASH_BITS = 60
+
+
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """60-bit SimHash: per token (with multiplicity) take hash60; each
     bit contributes ±1; simhash bit = majority. Output (id, simhash).
 
-    Per-bit vote sums are ``bits`` aggregate COLUMNS in one
+    Per-bit vote sums are 60 aggregate COLUMNS in one
     groupBy(id) over the token rows (all whole-stage codegen, partial
     aggregation map-side) — the previous form exploded every token
-    into ``bits`` rows (60× shuffle input) and aggregated twice."""
+    into 60 rows (60× shuffle input) and aggregated twice."""
     toks = (
         df.select(F.col(id_col).alias("id"), tokens_col(text_col).alias("toks"))
         .select("id", F.explode("toks").alias("tok"))
@@ -392,25 +388,25 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 60) -> DataFr
     votes = toks.groupBy("id").agg(
         *[
             F.sum(F.expr(f"(shiftright(h, {b}) & 1) * 2 - 1")).alias(f"s{b}")
-            for b in range(bits)
+            for b in range(SIMHASH_BITS)
         ]
     )
     acc = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         acc = acc + F.when(F.col(f"s{b}") > 0, F.lit(1 << b).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
     return votes.select("id", acc.alias("simhash"))
 
 
-def simhash_bands(sh: DataFrame, max_hamming: int = 3, bits: int = 60) -> DataFrame:
+def simhash_bands(sh: DataFrame, max_hamming: int = 3) -> DataFrame:
     """(id, chunk, chunk_val): split each simhash into ``max_hamming+1``
     disjoint bit chunks. Pigeonhole: two hashes within Hamming distance
     ``max_hamming`` differ in ≤ max_hamming chunks, so they AGREE on at
     least one chunk — equi-joining on (chunk, chunk_val) proposes every
     true pair with zero false negatives."""
     n_chunks = max_hamming + 1
-    width = -(-bits // n_chunks)  # ceil
+    width = -(-SIMHASH_BITS // n_chunks)  # ceil
     chunks = [
         F.struct(
             F.lit(c).cast("int").alias("chunk"),
@@ -589,7 +585,7 @@ def _cc_small_star(edges: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    pairs: DataFrame, id1: str = "id1", id2: str = "id2", max_iter: int = 25
+    pairs: DataFrame, id1: str = "id1", id2: str = "id2"
 ) -> DataFrame:
     """Duplicate-cluster assignment: connected components over a
     near-dup pair list, via alternating large-star / small-star
@@ -610,7 +606,7 @@ def connected_components(
     ``localCheckpoint`` truncates lineage per round (iterative plans
     otherwise grow the logical plan — and Catalyst analysis time —
     linearly with rounds) and keeps the converged edge set cached
-    executor-side for the final cluster assembly."""
+    executor-side for the final cluster assembly. At most 25 rounds."""
     edges = (
         pairs.select(F.col(id1).alias("src"), F.col(id2).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
@@ -618,7 +614,7 @@ def connected_components(
         .localCheckpoint()
     )
     prev_digest = None
-    for _ in range(max_iter):
+    for _ in range(25):
         nxt = _cc_small_star(_cc_large_star(edges)).localCheckpoint()
         digest = nxt.agg(
             F.count("*").alias("n"),
@@ -655,7 +651,6 @@ def duplicated_spans(
     text_col: str,
     k: int = 8,
     min_len: int = 12,
-    max_gram_df: int | None = None,
 ) -> DataFrame:
     """Maximal cross-doc exact duplicated token spans — the
     "deduplicating training data" substring pass (Lee et al. 2021,
@@ -671,10 +666,9 @@ def duplicated_spans(
     ``id1 < id2``, ``span_len ≥ min_len`` (≥ k required to anchor).
 
     Scale: the anchor join shuffles on the gram; stopword-run grams are
-    the skew risk — ``max_gram_df`` drops grams seen in more than that
-    many documents before pairing (the standard common-gram cap; a
-    dropped gram can only split a span that rarer neighbors still
-    anchor).  The run merge is a keyed window per (id1, id2, diagonal)
+    the skew risk (a common-gram cap before pairing is the standard
+    remedy; a dropped gram can only split a span that rarer neighbors
+    still anchor).  The run merge is a keyed window per (id1, id2, diagonal)
     — never global.  At 10^10 docs, join on ``xxhash64(gram)`` instead
     of the string and re-verify survivors by re-slicing; the string
     join here keeps the battery oracle byte-exact.
@@ -695,14 +689,6 @@ def duplicated_spans(
             )
         ).alias("p", "g"),
     )
-    if max_gram_df is not None:
-        rare = (
-            grams.groupBy("g")
-            .agg(F.countDistinct("id").alias("gdf"))
-            .filter(F.col("gdf") <= max_gram_df)
-            .select("g")
-        )
-        grams = grams.join(rare, "g", "left_semi")
     a = grams.select(F.col("id").alias("id1"), F.col("p").alias("p1"), "g")
     b = grams.select(F.col("id").alias("id2"), F.col("p").alias("p2"), "g")
     hits = a.join(b, "g").filter(F.col("id1") < F.col("id2")).select(
@@ -722,12 +708,7 @@ def duplicated_spans(
     )
 
 
-def mirror_hosts(
-    df: DataFrame,
-    host_col: str = "host",
-    content_col: str = "sha1hex",
-    tau: float = 0.5,
-) -> DataFrame:
+def mirror_hosts(df: DataFrame, tau: float = 0.5) -> DataFrame:
     """Mirror-site detection: host pairs whose CONTENT-HASH sets overlap
     (set Jaccard ≥ tau) — the host-level generalization of the
     reference's URL-agnostic sha1 dedup (its HBase table exists to
@@ -739,12 +720,10 @@ def mirror_hosts(
     equi-join keyed on the content hash (a hash shared by m hosts
     contributes m·(m−1)/2 pairs — cap ubiquitous hashes upstream the
     way LSH caps hot buckets), set sizes are a per-host agg, and
-    |A∪B| = |A|+|B|−|A∩B|.  Returns ``(host1, host2, inter, jacc)``
-    with host1 < host2.
+    |A∪B| = |A|+|B|−|A∩B|.  Input (host, sha1hex); returns
+    ``(host1, host2, inter, jacc)`` with host1 < host2.
     """
-    sets = df.select(
-        F.col(host_col).alias("h"), F.col(content_col).alias("c")
-    ).distinct()
+    sets = df.select(F.col("host").alias("h"), F.col("sha1hex").alias("c")).distinct()
     sizes = sets.groupBy("h").agg(F.count("*").alias("sz"))
     a = sets.select(F.col("h").alias("host1"), "c")
     b = sets.select(F.col("h").alias("host2"), "c")
@@ -772,16 +751,11 @@ def mirror_hosts(
     )
 
 
-def trap_host_stats(
-    df: DataFrame,
-    host_col: str = "host",
-    url_col: str = "url",
-    digest_col: str = "digest",
-    *,
-    min_urls: int = 100,
-    diversity_max: float = 0.10,
-    query_ratio_min: float = 0.90,
-) -> DataFrame:
+TRAP_DIVERSITY_MAX = 0.10
+TRAP_QUERY_RATIO_MIN = 0.90
+
+
+def trap_host_stats(df: DataFrame, *, min_urls: int = 100) -> DataFrame:
     """Crawler-trap detection over a (host, url, digest) capture table —
     the host-level hygiene twin of :func:`mirror_hosts`.  Traps
     (calendar pages, session-id URLs, faceted search) are the classic
@@ -796,7 +770,8 @@ def trap_host_stats(
     - ``avg_path_depth``     = mean '/'-segment count of the path
       (recursive path traps grow without bound),
     - ``trap_suspect``       = n_urls >= ``min_urls`` AND
-      (diversity <= ``diversity_max`` OR query_ratio >= ``query_ratio_min``).
+      (diversity <= ``TRAP_DIVERSITY_MAX`` OR
+      query_ratio >= ``TRAP_QUERY_RATIO_MIN``).
 
     A flagged host feeds the frontier's blocklist gate (F6) so the
     scheduler stops paying politeness budget for content it already
@@ -806,15 +781,15 @@ def trap_host_stats(
     same plan shape, and HLL sketches sidestep the very hot-host skew
     this operator exists to find.  Path depth and querystring flags are
     pure codegen string expressions on the scan."""
-    noq = F.substring_index(F.col(url_col), "?", 1)
+    noq = F.substring_index(F.col("url"), "?", 1)
     path = F.regexp_replace(noq, "^[a-z][a-z0-9+.-]*://[^/]*", "")
     depth = F.length(path) - F.length(F.replace(path, F.lit("/"), F.lit("")))
-    has_q = F.col(url_col).contains("?").cast("int")
+    has_q = F.col("url").contains("?").cast("int")
     stats = (
         df.select(
-            F.col(host_col).alias("host"),
-            F.col(url_col).alias("url"),
-            F.col(digest_col).alias("digest"),
+            F.col("host").alias("host"),
+            F.col("url").alias("url"),
+            F.col("digest").alias("digest"),
             depth.alias("depth"),
             has_q.alias("has_q"),
         )
@@ -841,20 +816,14 @@ def trap_host_stats(
         (
             (F.col("n_urls") >= min_urls)
             & (
-                (F.col("content_diversity") <= diversity_max)
-                | (F.col("query_ratio") >= query_ratio_min)
+                (F.col("content_diversity") <= TRAP_DIVERSITY_MAX)
+                | (F.col("query_ratio") >= TRAP_QUERY_RATIO_MIN)
             )
         ).alias("trap_suspect"),
     )
 
 
-def select_representatives(
-    members: DataFrame,
-    scores: DataFrame,
-    id_col: str = "id",
-    cluster_col: str = "cluster_id",
-    score_col: str = "score",
-) -> DataFrame:
+def select_representatives(members: DataFrame, scores: DataFrame) -> DataFrame:
     """Cluster-representative selection by QUALITY instead of min-id:
     the keep-best retention policy (FineWeb/Dolma-style pipelines keep
     the highest-quality member of each near-dup cluster; the
@@ -879,27 +848,27 @@ def select_representatives(
     # table with duplicate (id, score) rows would otherwise duplicate
     # member rows in the output (taking max matches the keep-best
     # policy; map-side combinable)
-    sc = scores.groupBy(F.col(id_col).alias("__sid")).agg(
-        F.max(score_col).alias("__score")
+    sc = scores.groupBy(F.col("id").alias("__sid")).agg(
+        F.max("score").alias("__score")
     )
     j = members.join(
-        sc, members[id_col] == F.col("__sid"), "left"
+        sc, members["id"] == F.col("__sid"), "left"
     ).drop("__sid").withColumn(
         "__score", F.coalesce(F.col("__score"), F.lit(float("-inf")))
     )
-    best = j.groupBy(cluster_col).agg(F.max("__score").alias("__best"))
-    j = j.join(best, cluster_col)
+    best = j.groupBy("cluster_id").agg(F.max("__score").alias("__best"))
+    j = j.join(best, "cluster_id")
     keeper = (
         j.filter(F.col("__score") == F.col("__best"))
-        .groupBy(cluster_col)
-        .agg(F.min(id_col).alias("__keep_id"))
+        .groupBy("cluster_id")
+        .agg(F.min("id").alias("__keep_id"))
     )
     return (
-        j.join(keeper, cluster_col)
+        j.join(keeper, "cluster_id")
         .select(
-            id_col,
-            cluster_col,
+            "id",
+            "cluster_id",
             F.col("__score").alias("score"),
-            (F.col(id_col) == F.col("__keep_id")).alias("is_representative"),
+            (F.col("id") == F.col("__keep_id")).alias("is_representative"),
         )
     )

@@ -288,16 +288,17 @@ def _scope_error_from(url: Column, platform: Column, comp: Column) -> Column:
     )
 
 
-def with_platform_classification(df: DataFrame, url_col: str = "base_url") -> DataFrame:
+def with_platform_classification(df: DataFrame) -> DataFrame:
     """Add ``platform_name`` (nullable) and ``__scope_err`` (boolean)
-    to a request frame, materializing each parse_url/split exactly once
-    per row in intermediate projections (dropped on output). Row-level
+    to a request frame keyed by ``base_url``, materializing each
+    parse_url/split exactly once per row in intermediate projections
+    (dropped on output). Row-level
     semantics are identical to ``platform_name(url)`` +
     ``platform_scope_error(url, platform)``; the plan is one narrow
     stage instead of a CASE forest of repeated ParseUrl invocations
     (measured on the sf1.0 battery corpus: classification stage
     2.69 s → 1.32 s noop, values byte-identical)."""
-    url = F.col(url_col)
+    url = F.col("base_url")
     parts = (
         df.withColumn(
             "__pid", F.parse_url(url, F.lit("QUERY"), F.lit("persistentId"))
@@ -403,33 +404,29 @@ def choose_strategy(
     return F.when(platform == "archiveorg", archiveorg).otherwise(default)
 
 
-def summarize_manifest(
-    manifest: DataFrame, key: str = "base_url", size_col: str = "size"
-) -> DataFrame:
-    """Per-dataset manifest rollup (ingest_fileset.py:355-356 +
+def summarize_manifest(manifest: DataFrame) -> DataFrame:
+    """Per-dataset (``base_url``) manifest rollup (ingest_fileset.py:355-356 +
     fileset_platforms.py:46-47): file_count, total_size (null sizes
     contribute 0), largest_size. One map-side-combinable groupBy.
     """
-    s = F.coalesce(F.col(size_col).cast("bigint"), F.lit(0))
-    return manifest.groupBy(key).agg(
+    s = F.coalesce(F.col("size").cast("bigint"), F.lit(0))
+    return manifest.groupBy("base_url").agg(
         F.count(F.lit(1)).alias("file_count"),
         F.sum(s).alias("total_size"),
         F.max(s).alias("largest_size"),
     )
 
 
-def merge_manifest_summaries(
-    partials: DataFrame, key: str = "base_url"
-) -> DataFrame:
+def merge_manifest_summaries(partials: DataFrame) -> DataFrame:
     """Merge pre-aggregated manifest rollups (same schema as
     :func:`summarize_manifest`) that were first aggregated under a
     FINER key. count/sum/max decompose exactly over integers, so
     ``merge(summarize(by finer key)) == summarize(raw rows)`` whenever
-    the finer key refines ``key`` — the standard two-level aggregation
+    the finer key refines ``base_url`` — the standard two-level aggregation
     that lets a caller shuffle narrow numeric keys for the heavy first
     pass and only touch the wide string key on the (much smaller)
     pre-aggregated rows (optimization guide §2.3/§2.5)."""
-    return partials.groupBy(key).agg(
+    return partials.groupBy("base_url").agg(
         F.sum("file_count").alias("file_count"),
         F.sum("total_size").alias("total_size"),
         F.max("largest_size").alias("largest_size"),
@@ -439,8 +436,6 @@ def merge_manifest_summaries(
 def fileset_ingest(
     requests: DataFrame,
     manifest: DataFrame,
-    max_total_size: int = MAX_TOTAL_SIZE,
-    max_file_count: int = MAX_FILE_COUNT,
     manifest_summary: DataFrame | None = None,
 ) -> DataFrame:
     """The relational core of IngestFilesetWorker.process
@@ -481,8 +476,8 @@ def fileset_ingest(
         F.when(F.col("platform_name").isNull(), F.lit("no-platform-match"))
         .when(F.col("__scope_err"), F.lit("platform-scope"))
         .when(fc == 0, F.lit("empty-manifest"))
-        .when(F.col("total_size") > max_total_size, F.lit("too-large-size"))
-        .when(fc > max_file_count, F.lit("too-many-files"))
+        .when(F.col("total_size") > MAX_TOTAL_SIZE, F.lit("too-large-size"))
+        .when(fc > MAX_FILE_COUNT, F.lit("too-many-files"))
         .otherwise(F.lit("success"))
     )
     # status is materialized as its own projection so the strategy gate
@@ -580,11 +575,7 @@ def check_existing_item(
     )
 
 
-def verify_manifest_local(
-    manifest: DataFrame,
-    fetched: DataFrame,
-    success_status: str = "success",
-) -> DataFrame:
+def verify_manifest_local(manifest: DataFrame, fetched: DataFrame) -> DataFrame:
     """The ArchiveorgFilesetStrategy download-verification ladder
     (fileset_strategies.py:100-211) as one declarative plan.
 
@@ -614,10 +605,9 @@ def verify_manifest_local(
     Returns per-file rows (item, idx, path, status, size, sha1,
     sha256, md5, mimetype) plus item_status on every row: first
     'error-platform-download' if any file hit one, else the
-    lowest-idx non-'verified-local' status, else ``success_status``
-    ('success' for archiveorg-fileset, 'success-file' for
-    archiveorg-file, fileset_strategies.py:262-271 — upload errors are
-    live-I/O, not modeled).
+    lowest-idx non-'verified-local' status, else 'success' (the
+    archiveorg-fileset status, fileset_strategies.py:262-271; upload
+    errors are live-I/O, not modeled).
     """
     fe = fetched.select(
         "item",
@@ -711,7 +701,7 @@ def verify_manifest_local(
         verified["*"],
         F.when(F.col("__any_err") == 1, F.lit("error-platform-download"))
         .when(F.col("__first_bad").isNotNull(), F.col("__first_bad"))
-        .otherwise(F.lit(success_status))
+        .otherwise(F.lit("success"))
         .alias("item_status"),
     )
 
@@ -722,7 +712,6 @@ MAX_SPN_MANIFEST = 20  # fileset_strategies.py:283
 def web_fetch_verify(
     manifest: DataFrame,
     resources: DataFrame,
-    success_status: str = "success",
     max_spn_manifest: int = MAX_SPN_MANIFEST,
 ) -> DataFrame:
     """WebFilesetStrategy.process (fileset_strategies.py:285-375) over
@@ -750,8 +739,7 @@ def web_fetch_verify(
     only possible for an absent-resource row under the SPN budget,
     modeled as 'no-capture'), 'empty-manifest' for items with no files
     (callers pass those separately since an empty manifest has no rows
-    to carry them — see the battery query), else ``success_status``
-    ('success-file' for web-file, :383-388).
+    to carry them — see the battery query), else 'success'.
     """
     res = resources.select(
         F.col("url").alias("platform_url"),
@@ -817,5 +805,5 @@ def web_fetch_verify(
     )
     return verified.join(item_status, "item").select(
         verified["*"],
-        F.coalesce(F.col("__first_bad"), F.lit(success_status)).alias("item_status"),
+        F.coalesce(F.col("__first_bad"), F.lit("success")).alias("item_status"),
     )

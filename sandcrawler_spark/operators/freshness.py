@@ -50,7 +50,6 @@ def estimate_change_rates(
     ts_col: str = "ts",
     digest_col: str = "sha1b32",
     min_captures: int = 2,
-    now_ts=None,
 ) -> DataFrame:
     """Per-URL Poisson change-rate estimate from dated captures.
 
@@ -61,8 +60,8 @@ def estimate_change_rates(
     ``min_captures`` observations or zero span are dropped — one
     observation says nothing about change frequency.
 
-    ``now_ts``: decision-time Column/literal for the staleness term;
-    defaults to the max capture timestamp in the table (deterministic).
+    The decision time for the staleness term is the max capture
+    timestamp in the table (deterministic).
 
     Returns ``(url, n_caps, n_changes, span_seconds, lambda_day,
     staleness)`` — ``lambda_day`` is changes/day (6dp), ``staleness``
@@ -96,11 +95,8 @@ def estimate_change_rates(
     lam = -F.log(
         (F.col("n_caps") - F.col("n_changes") + 0.5) / (F.col("n_caps") + 0.5)
     ) / (F.col("span_seconds") / F.col("n_caps"))
-    if now_ts is None:
-        now = per.agg(F.max("__last").alias("__now"))
-        per = per.crossJoin(F.broadcast(now))
-    else:
-        per = per.withColumn("__now", F.lit(now_ts).cast("timestamp").cast("double"))
+    now = per.agg(F.max("__last").alias("__now"))
+    per = per.crossJoin(F.broadcast(now))
     age = F.col("__now") - F.col("__last")
     return per.select(
         "url",
@@ -131,7 +127,6 @@ def rescore_seeds_by_freshness(
     data_dir: str,
     out_path: str,
     weight: float = 1.0,
-    single_file: bool = True,
 ) -> int:
     """Offline freshness rescore between crawl generations — the
     adaptive-schedule counterpart of the PageRank citation refresh
@@ -144,11 +139,12 @@ def rescore_seeds_by_freshness(
     ``out_path``. Seeds without capture history keep their priority
     unchanged. Returns the number of seeds rescored.
 
-    ``single_file=True`` writes ONE Arrow parquet ordered by ``seq``
-    (byte-deterministic, matches the datagen file contract both the
-    engine and the oracle glob); pass ``False`` at cluster scale for a
-    distributed directory write.
+    Writes ONE Arrow parquet ordered by ``seq`` (byte-deterministic,
+    matches the datagen file contract both the engine and the oracle
+    glob).
     """
+    import pyarrow.parquet as pq
+
     from sandcrawler_spark.functions.urlkeys import canonical_url_udf
 
     rates = capture_history_rates(
@@ -174,13 +170,7 @@ def rescore_seeds_by_freshness(
         .drop("_cu", "_stale")
         .select(seeds.columns)
     )
-    if single_file:
-        import pyarrow.parquet as pq
-
-        tbl = refreshed.orderBy("seq").toArrow()
-        pq.write_table(tbl, out_path, row_group_size=65536)
-    else:
-        refreshed.write.mode("overwrite").parquet(out_path)
+    pq.write_table(refreshed.orderBy("seq").toArrow(), out_path, row_group_size=65536)
     return n
 
 
@@ -188,8 +178,6 @@ def staleness_reingest_seeds(
     captures: DataFrame,
     url_seen: DataFrame,
     tau: float = 0.5,
-    seq_offset: int = 0,
-    ingest_type: str = "html",
     min_captures: int = 2,
 ) -> DataFrame:
     """Change-rate-driven re-crawl seeds: the adaptive twin of
@@ -225,8 +213,8 @@ def staleness_reingest_seeds(
     )
     ranked = with_global_rank(due, ["canonical_url", "ingest_type"], rank_col="__rank")
     return ranked.select(
-        (F.col("__rank") + seq_offset).cast("long").alias("seq"),
-        F.coalesce("ingest_type", F.lit(ingest_type)).alias("ingest_type"),
+        F.col("__rank").cast("long").alias("seq"),
+        F.coalesce("ingest_type", F.lit("html")).alias("ingest_type"),
         F.col("canonical_url").alias("base_url"),
         F.lit("change-rate").alias("link_source"),
         F.col("canonical_url").alias("link_source_id"),

@@ -79,13 +79,12 @@ def _r(pdf_url=None, next_url=None, release_stage=None, technique=None) -> Colum
     )
 
 
-def fulltext_url_tricks(
-    df: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """Adds (pdf_url, next_url, release_stage, technique) columns; all
-    null when no arm fires (the reference's empty dict)."""
-    u = F.col(url_col)
-    h = F.col(html_col)
+def fulltext_url_tricks(df: DataFrame) -> DataFrame:
+    """Adds (pdf_url, next_url, release_stage, technique) columns to a
+    (url, html) frame; all null when no arm fires (the reference's
+    empty dict)."""
+    u = F.col("url")
+    h = F.col("html")
     host = F.regexp_extract(u, r"^(.*?://[^/]*)", 1)
 
     def ext(pat: str, src: Column = None) -> Column:
@@ -380,15 +379,8 @@ WALL_BLOCKLIST = [
 ]
 
 
-def pdf_hop_decision(
-    df: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    hops_col: str = "hops",
-    biblio_pdf_col: str | None = None,
-    wall_blocklist: list[str] = WALL_BLOCKLIST,
-) -> DataFrame:
-    """The pdf-ingest next-hop decision on an HTML-ish resource
+def pdf_hop_decision(df: DataFrame, biblio_pdf_col: str | None = None) -> DataFrame:
+    """The pdf-ingest next-hop decision on a (url, html, hops) resource
     (``ingest_file.py:772-809``): html_biblio's pdf_fulltext_url wins
     when present (technique ``html_biblio``, :775-779), else the
     :func:`fulltext_url_tricks` ladder; nothing found → ``blocked-wall``
@@ -406,7 +398,7 @@ def pdf_hop_decision(
     """
     from sandcrawler_spark.functions.urlkeys import canonical_url_udf
 
-    out = fulltext_url_tricks(df, url_col, html_col)
+    out = fulltext_url_tricks(df)
     found = F.coalesce(F.col("pdf_url"), F.col("next_url"))
     technique = F.col("technique")
     if biblio_pdf_col is not None:
@@ -415,13 +407,13 @@ def pdf_hop_decision(
         found = F.when(use_bp, bp).otherwise(found)
         technique = F.when(use_bp, F.lit("html_biblio")).otherwise(technique)
     wall = F.lit(False)
-    for b in wall_blocklist:
-        wall = wall | F.col(url_col).contains(b)
+    for b in WALL_BLOCKLIST:
+        wall = wall | F.col("url").contains(b)
     nxt = canonical_url_udf(found)
     status = (
         F.when(found.isNull() & wall, F.lit("blocked-wall"))
         .when(found.isNull(), F.lit("no-pdf-link"))
-        .when(F.array_contains(F.col(hops_col), nxt), F.lit("link-loop"))
+        .when(F.array_contains(F.col("hops"), nxt), F.lit("link-loop"))
         .otherwise(F.lit("next-hop"))
     )
     return (
@@ -431,8 +423,8 @@ def pdf_hop_decision(
         .withColumn(
             "hops_out",
             F.when(
-                status == "next-hop", F.array_append(F.col(hops_col), nxt)
-            ).otherwise(F.col(hops_col)),
+                status == "next-hop", F.array_append(F.col("hops"), nxt)
+            ).otherwise(F.col("hops")),
         )
         .drop("pdf_url", "next_url", "release_stage", "technique")
     )

@@ -343,14 +343,13 @@ def arabesque_requests(
     df: DataFrame,
     link_source: str,
     extid_type: str,
-    ingest_type: str = "pdf",
-    ingest_request_source: str = "arabesque",
     release_stage: str | None = None,
 ) -> DataFrame:
-    """Arabesque crawl-log backfill → ingest requests
-    (arabesque2ingestrequest.py:19-47): keep hits, take final_url
-    verbatim (the one converter that does NOT canonicalize), carry the
-    identifier under a caller-chosen extid type."""
+    """Arabesque crawl-log backfill → ``pdf`` ingest requests from
+    source ``arabesque`` (arabesque2ingestrequest.py:19-47): keep hits,
+    take final_url verbatim (the one converter that does NOT
+    canonicalize), carry the identifier under a caller-chosen extid
+    type."""
     if release_stage is not None and release_stage not in (
         "published",
         "submitted",
@@ -361,10 +360,10 @@ def arabesque_requests(
         raise ValueError(f"invalid release_stage: {release_stage}")
     return df.where(F.col("hit")).select(
         F.col("final_url").alias("base_url"),
-        F.lit(ingest_type).alias("ingest_type"),
+        F.lit("pdf").alias("ingest_type"),
         F.lit(link_source).alias("link_source"),
         F.col("identifier").alias("link_source_id"),
-        F.lit(ingest_request_source).alias("ingest_request_source"),
+        F.lit("arabesque").alias("ingest_request_source"),
         F.lit(release_stage).cast("string").alias("release_stage"),
         F.lit(extid_type).alias("extid_type"),
         F.col("identifier").alias("extid_value"),
@@ -481,11 +480,11 @@ _GW_OUT_SCHEMA = T.StructType(
 )
 
 
-def groupworks_filter(
-    df: DataFrame,
-    score_threshold: int = 900,
-    max_slug_lines: int = 50,
-) -> DataFrame:
+GROUPWORKS_SCORE_MIN = 900
+GROUPWORKS_MAX_SLUG_LINES = 50
+
+
+def groupworks_filter(df: DataFrame) -> DataFrame:
     """Slug-grouped work-merge filter (filter_groupworks.py:82-146).
 
     Input columns: ``slug`` string, ``seq`` (the reference's input-line
@@ -494,8 +493,9 @@ def groupworks_filter(
     ``year`` int, ``fatcat_release`` string).
 
     Mirrored semantics, in reference order: a slug with more than
-    ``max_slug_lines`` input lines is dropped WHOLE (run():137-139);
-    per line, score below threshold drops it, the groupworks
+    ``GROUPWORKS_MAX_SLUG_LINES`` input lines is dropped WHOLE
+    (run():137-139); per line, score below ``GROUPWORKS_SCORE_MIN``
+    drops it, the groupworks
     check_authors variant must pass, and defined-but-different years
     drop it (process_group():85-98); then the reference's second pass
     (:104-119) iterates the surviving lines SKIPPING THE FIRST — a
@@ -508,7 +508,7 @@ def groupworks_filter(
 
     Scale shape: the score/author/year gates are a single Catalyst+
     Arrow projection; only the tiny contagion loop runs per slug group
-    (≤``max_slug_lines`` rows each) inside ``applyInPandas`` — one
+    (≤``GROUPWORKS_MAX_SLUG_LINES`` rows each) inside ``applyInPandas`` — one
     shuffle on slug, skew bounded by the line cap itself."""
     # slug-size cap via partial-agg count + join-back, deliberately NOT
     # a count-over-window: the whole point of this gate is that some
@@ -516,9 +516,9 @@ def groupworks_filter(
     # in one task BEFORE the cap can discard it, while the groupBy
     # count map-side-combines to one tiny row per slug.
     sizes = df.groupBy("slug").agg(F.count("*").alias("_n"))
-    capped = df.join(sizes, "slug").where(F.col("_n") <= max_slug_lines).drop("_n")
+    capped = df.join(sizes, "slug").where(F.col("_n") <= GROUPWORKS_MAX_SLUG_LINES).drop("_n")
     filtered = (
-        capped.where(F.col("score") >= score_threshold)
+        capped.where(F.col("score") >= GROUPWORKS_SCORE_MIN)
         .where(
             check_authors_groupworks_udf(
                 F.col("left.authors"), F.col("right.authors")

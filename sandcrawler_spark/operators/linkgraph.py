@@ -37,11 +37,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def graph_nodes(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Distinct node set of an edge list → one column ``node``."""
+def graph_nodes(edges: DataFrame) -> DataFrame:
+    """Distinct node set of a (src, dst) edge list → one column ``node``."""
     return (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
 
@@ -50,11 +50,9 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
     checkpoint: bool = True,
 ) -> DataFrame:
-    """Power-iteration PageRank over an edge DataFrame.
+    """Power-iteration PageRank over a (src, dst) edge DataFrame.
 
     Returns ``(node, rank)``.  Handles dangling nodes (rank mass of
     nodes with no outlinks is redistributed uniformly each iteration),
@@ -63,7 +61,7 @@ def pagerank(
     ``checkpoint=True`` localCheckpoints ranks per iteration (lineage
     truncation); tests that want a pure-lazy plan can disable it.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
     nodes = graph_nodes(e).cache()
 
     out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
@@ -144,8 +142,6 @@ def pagerank(
 def hits(
     edges: DataFrame,
     iterations: int = 2,
-    src: str = "src",
-    dst: str = "dst",
     checkpoint: bool = True,
 ) -> DataFrame:
     """HITS hubs-and-authorities power iteration — the citation-graph
@@ -174,7 +170,7 @@ def hits(
     """
     if iterations < 1:
         raise ValueError("hits requires iterations >= 1")
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
     nodes = graph_nodes(e).cache()
     hub = nodes.select("node", F.lit(1.0).alias("hub"))
     auth = None
@@ -223,9 +219,7 @@ def hits(
     return out
 
 
-def indegree_citation(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def indegree_citation(edges: DataFrame) -> DataFrame:
     """In-degree citation score normalized to [0, 1]:
     ``citation = in_deg / max(in_deg)``.  The cheap one-shuffle
     alternative to PageRank for priority seeding — exactly the shape the
@@ -233,10 +227,10 @@ def indegree_citation(
 
     Returns ``(node, in_deg, citation)``; nodes with no inlinks get 0.
     """
-    indeg = edges.groupBy(F.col(dst).alias("node")).agg(
+    indeg = edges.groupBy(F.col("dst").alias("node")).agg(
         F.count("*").alias("in_deg")
     )
-    all_nodes = graph_nodes(edges, src, dst)
+    all_nodes = graph_nodes(edges)
     scored = all_nodes.join(indeg, "node", "left").select(
         "node", F.coalesce("in_deg", F.lit(0)).alias("in_deg")
     )
@@ -254,12 +248,7 @@ def indegree_citation(
     )
 
 
-def anchor_text_topk(
-    edges: DataFrame,
-    k: int = 3,
-    dst: str = "dst",
-    anchor: str = "anchor",
-) -> DataFrame:
+def anchor_text_topk(edges: DataFrame, k: int = 3) -> DataFrame:
     """Top-k inbound anchor texts per target URL.
 
     The classic web-IR signal: what OTHER pages call this page.
@@ -269,8 +258,8 @@ def anchor_text_topk(
     coalesces them at scale; no Python.
     """
     counts = (
-        edges.filter(F.length(F.trim(F.col(anchor))) > 0)
-        .groupBy(F.col(dst).alias("url"), F.trim(F.col(anchor)).alias("anchor"))
+        edges.filter(F.length(F.trim(F.col("anchor"))) > 0)
+        .groupBy(F.col("dst").alias("url"), F.trim(F.col("anchor")).alias("anchor"))
         .agg(F.count("*").alias("n"))
     )
     w = Window.partitionBy("url").orderBy(F.col("n").desc(), F.col("anchor").asc())
@@ -308,9 +297,6 @@ def refresh_seed_citations(
     data_dir: str,
     state_dir: str,
     out_path: str,
-    iterations: int = 3,
-    damping: float = 0.85,
-    single_file: bool = True,
 ) -> int:
     """Offline citation refresh between crawl generations — the
     reference's model (seedlist priorities recomputed offline from
@@ -324,20 +310,18 @@ def refresh_seed_citations(
     single-threaded oracle — consumes it unchanged, so order parity is
     preserved by construction.  Returns the number of seeds rescored.
 
-    ``single_file=True`` (default) writes ONE parquet file via Arrow,
-    matching the datagen file contract that the oracle and duckdb
-    checks glob (`datagen.py` writes seeds with ``pq.write_table``);
-    rows are ordered by ``seq`` so the file is byte-deterministic.
-    This collects the seed table on the driver — fine to ~10^7 seeds
-    (seeds are the curated frontier input, not the 10^10 crawl data).
-    At cluster scale pass ``single_file=False`` for a distributed
-    Spark parquet directory write instead (the engine reads either).
+    Writes ONE parquet file via Arrow, matching the datagen file
+    contract that the oracle and duckdb checks glob (`datagen.py`
+    writes seeds with ``pq.write_table``); rows are ordered by ``seq``
+    so the file is byte-deterministic. This collects the seed table on
+    the driver — fine to ~10^7 seeds (seeds are the curated frontier
+    input, not the 10^10 crawl data).
     """
+    import pyarrow.parquet as pq
+
     from sandcrawler_spark.functions.urlkeys import canonical_url_udf
 
-    scores = pagerank(
-        crawl_edges(spark, state_dir), iterations=iterations, damping=damping
-    )
+    scores = pagerank(crawl_edges(spark, state_dir))
     seeds = spark.read.parquet(f"{data_dir}/seeds.parquet")
     keyed = seeds.withColumn("_cu", canonical_url_udf("base_url"))
     sc = scores.select(
@@ -351,25 +335,15 @@ def refresh_seed_citations(
         .drop("_cu", "_cite")
         .select(seeds.columns)
     )
-    if single_file:
-        import pyarrow.parquet as pq
-
-        tbl = refreshed.orderBy("seq").toArrow()
-        pq.write_table(tbl, out_path, row_group_size=65536)
-        n = tbl.num_rows - tbl.column("citation_priority").null_count
-    else:
-        refreshed.write.mode("overwrite").parquet(out_path)
-        n = refreshed.filter(F.col("citation_priority").isNotNull()).count()
-    return n
+    tbl = refreshed.orderBy("seq").toArrow()
+    pq.write_table(tbl, out_path, row_group_size=65536)
+    return tbl.num_rows - tbl.column("citation_priority").null_count
 
 
 def bfs_depths(
     edges: DataFrame,
     seeds: DataFrame,
     max_depth: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-    seed_col: str = "node",
     early_stop: bool = True,
     checkpoint: bool = True,
 ) -> DataFrame:
@@ -380,6 +354,7 @@ def bfs_depths(
     over any edge list).  Discovery depth is heap key #2 of the north
     rule's fetch ordering.
 
+    ``edges`` is (src, dst), ``seeds`` has a ``node`` column.
     Level-synchronous frontier expansion: each level is one equi-join
     (frontier ⋈ edges on src) + distinct + anti-join against visited —
     the same dedup-then-anti-join shape as a crawl round.  Returns
@@ -393,9 +368,9 @@ def bfs_depths(
     per-level driver action); with it True an empty frontier ends the
     loop with a 1-row ``head`` probe per level.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
     visited = (
-        seeds.select(F.col(seed_col).alias("node"))
+        seeds.select(F.col("node").alias("node"))
         .distinct()
         .withColumn("depth", F.lit(0).cast("int"))
     )

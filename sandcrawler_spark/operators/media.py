@@ -146,8 +146,9 @@ def decode_image(blob: bytes, fake: bool = False) -> tuple[int, int]:
     return 64 + h[0] % 192, 64 + h[1] % 192  # (width, height)
 
 
-def binary_meta(df: DataFrame, id_col: str, binary_col: str, fake_decode: bool = True) -> DataFrame:
-    """Arrow-batched metadata extraction over a binary column.
+def binary_meta(df: DataFrame, id_col: str, binary_col: str) -> DataFrame:
+    """Arrow-batched metadata extraction over a binary column (stub
+    image decode, ``fake=True``).
 
     Partition-parallel ``mapInPandas``; each batch hashes + (stub-)
     decodes vectorized in Python. At 100 TB this is the shape of every
@@ -159,7 +160,7 @@ def binary_meta(df: DataFrame, id_col: str, binary_col: str, fake_decode: bool =
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             blobs = [bytes(b) for b in pdf["blob"]]
-            dims = [decode_image(b, fake=fake_decode) for b in blobs]
+            dims = [decode_image(b, fake=True) for b in blobs]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -198,8 +199,7 @@ def resize_image(blob: bytes, max_dim: int, fake: bool = False) -> tuple[int, in
 
 
 def resize_images(
-    df: DataFrame, id_col: str, binary_col: str, max_dim: int = 180,
-    fake_decode: bool = True,
+    df: DataFrame, id_col: str, binary_col: str, max_dim: int = 180
 ) -> DataFrame:
     """Multimodal resize stage: binary in → (width, height, thumb
     binary) out, Arrow-batched ``mapInPandas``. Thumbnails are small, so
@@ -209,7 +209,7 @@ def resize_images(
 
     def rz(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = [resize_image(bytes(b), max_dim, fake=fake_decode) for b in pdf["blob"]]
+            out = [resize_image(bytes(b), max_dim, fake=True) for b in pdf["blob"]]
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"],
                 "width": [o[0] for o in out],
@@ -222,7 +222,7 @@ def resize_images(
 
 def sample_frames(
     df: DataFrame, id_col: str, binary_col: str, fps: float = 0.5,
-    max_frames: int = 8, fake_decode: bool = True,
+    max_frames: int = 8,
 ) -> DataFrame:
     """Video frame sampling: one input row fans out to ≤``max_frames``
     frame rows (doc_id, frame_idx, t_sec, frame binary). The 1→N
@@ -238,10 +238,6 @@ def sample_frames(
             ids, idxs, ts, payloads = [], [], [], []
             for doc_id, b in zip(pdf["doc_id"], pdf["blob"]):
                 blob = bytes(b)
-                if not fake_decode:
-                    raise NotImplementedError(
-                        "video codecs not available in this environment"
-                    )
                 h = hashlib.md5(blob).digest()
                 duration = 1.0 + h[2]  # deterministic fake seconds
                 n = min(max_frames, max(1, int(duration * fps)))
@@ -261,7 +257,7 @@ def sample_frames(
 
 def segment_audio(
     df: DataFrame, id_col: str, binary_col: str, window_s: float = 4.0,
-    hop_s: float = 2.0, max_segments: int = 16, fake_decode: bool = True,
+    hop_s: float = 2.0, max_segments: int = 16,
 ) -> DataFrame:
     """Audio windowing: one input row fans out to overlapping
     (window_s, hop_s) segment rows (doc_id, seg_idx, t_start, t_end,
@@ -279,10 +275,6 @@ def segment_audio(
             ids, idxs, t0s, t1s, payloads = [], [], [], [], []
             for doc_id, b in zip(pdf["doc_id"], pdf["blob"]):
                 blob = bytes(b)
-                if not fake_decode:
-                    raise NotImplementedError(
-                        "audio codecs not available in this environment"
-                    )
                 h = hashlib.md5(blob).digest()
                 duration = 1.0 + h[3]  # deterministic fake seconds
                 n = min(
@@ -373,11 +365,9 @@ def process_pdf_bytes(blob: bytes, fake: bool = False) -> dict:
     return meta
 
 
-def process_pdfs(
-    df: DataFrame, id_col: str, binary_col: str, fake_decode: bool = True
-) -> DataFrame:
-    """PDF text+thumbnail extraction as a distributed operator: one
-    Arrow-batched ``mapInPandas`` pass; each input row yields one result
+def process_pdfs(df: DataFrame, id_col: str, binary_col: str) -> DataFrame:
+    """PDF text+thumbnail extraction (stub codec, ``fake=True``) as a
+    distributed operator: one Arrow-batched ``mapInPandas`` pass; each input row yields one result
     row carrying BOTH modalities (the reference worker publishes them to
     two sha1-keyed Kafka topics from the same process loop,
     pdf_extract worker / kafka/topics.md pdf-text + pdf-thumbnail-SIZE)."""
@@ -390,7 +380,7 @@ def process_pdfs(
         for pdf in batches:
             rows = []
             for did, b in zip(pdf["doc_id"], pdf["blob"]):
-                r = process_pdf_bytes(bytes(b), fake=fake_decode)
+                r = process_pdf_bytes(bytes(b), fake=True)
                 r["doc_id"] = did
                 rows.append(r)
             yield pd.DataFrame(
@@ -521,13 +511,11 @@ def fake_pdf_pages(blob: bytes) -> list[str]:
 
 def pdf_extract_spans(
     df: DataFrame,
-    id_col: str = "doc_id",
-    binary_col: str = "blob",
     bad_pdf_md5: list[str] | None = None,
     max_text_chars: int = 1_000_000,
-    fake_decode: bool = True,
 ) -> DataFrame:
     """PDF text + page-0 thumbnail extraction → interleaved spans
+    over a (doc_id, blob) frame
     (pdfextract.py:296-444 ``process_pdf``), the PDF modality of the
     interleaved text+media document model. Complements
     :func:`process_pdfs` (the flat one-row-per-doc result with full
@@ -554,9 +542,9 @@ def pdf_extract_spans(
     the (kind, text, media_ref, offset) span contract, so
     span-sequence equality checks apply to PDFs like any other doc.
 
-    Codec honesty: ``fake_decode=True`` uses :func:`fake_pdf_pages`
-    (deterministic from content); False raises — poppler isn't in this
-    container, the distributed plumbing is what's real here.
+    Codec honesty: page texts come from :func:`fake_pdf_pages`
+    (deterministic from content) — poppler isn't in this container,
+    the distributed plumbing is what's real here.
 
     Scale shape: ONE scan, one Arrow pass, no shuffle. The three cheap
     gates (sniff + denylist + length) are Catalyst expressions that
@@ -566,18 +554,18 @@ def pdf_extract_spans(
     re-scan the source once per status) is avoided; 1→1 rows with
     bounded span fan-out per row."""
     bad = [b.lower() for b in (bad_pdf_md5 or [])]
-    md5c = F.lower(F.md5(F.col(binary_col)))
-    is_pdf = sniff_container_col(F.col(binary_col)) == "application/pdf"
+    md5c = F.lower(F.md5(F.col("blob")))
+    is_pdf = sniff_container_col(F.col("blob")) == "application/pdf"
     is_bad = md5c.isin(bad) if bad else F.lit(False)
-    is_empty = F.length(binary_col) < 8
+    is_empty = F.length("blob") < 8
     gate = (
         F.when(~is_pdf, F.lit("not-pdf"))
         .when(is_bad, F.lit("bad-pdf"))
         .when(is_empty, F.lit("empty-pdf"))
     )
     src = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.when(gate.isNull(), F.col(binary_col)).alias("blob"),
+        F.col("doc_id").alias("doc_id"),
+        F.when(gate.isNull(), F.col("blob")).alias("blob"),
         gate.alias("_gate"),
         md5c.alias("md5hex"),
     )
@@ -597,10 +585,6 @@ def pdf_extract_spans(
                         )
                     )
                     continue
-                if not fake_decode:
-                    raise NotImplementedError(
-                        "pdf codecs not available in this environment"
-                    )
                 blob = bytes(b)
                 pages = fake_pdf_pages(blob)
                 text_len = sum(len(p) for p in pages)

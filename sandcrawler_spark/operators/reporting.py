@@ -187,40 +187,29 @@ def daily_throughput(
     )
 
 
-def score_histogram(
-    df: DataFrame,
-    score_col: str,
-    lo: float = 0.0,
-    hi: float = 100.0,
-    n_buckets: int = 19,
-    scale: float = 100.0,
-    bucket_step: int = 5,
-    status: str | None = "success",
-) -> DataFrame:
+def score_histogram(df: DataFrame, score_col: str) -> DataFrame:
     """Classifier-score histogram (sql/pdftrio_queries.md:42-66): the
     reference's ``width_bucket(score * 100, 0.0, 100.0, 19) * 5``
-    reports over pdftrio scores. Postgres width_bucket semantics are
-    spelled out as explicit arithmetic (below lo → 0, at/above hi →
-    n+1, else equi-width floor) rather than an engine builtin, so the
-    replaying oracle evaluates the identical float expression.
+    reports over the pdftrio scores of successful rows. Postgres
+    width_bucket semantics are spelled out as explicit arithmetic
+    (below 0 → 0, at/above 100 → 20, else equi-width floor) rather
+    than an engine builtin, so the replaying oracle evaluates the
+    identical float expression.
 
     One map-side-combinable groupBy over a scan with pushed-down
     filters — nothing here grows with bucket count."""
-    x = F.col(score_col) * scale
+    x = F.col(score_col) * 100.0
     bucket = (
         F.when(F.col(score_col).isNull(), F.lit(None))
-        .when(x < lo, F.lit(0))
-        .when(x >= hi, F.lit(n_buckets + 1))
-        .otherwise(
-            F.floor((x - F.lit(lo)) * n_buckets / (F.lit(hi) - F.lit(lo))) + 1
-        )
+        .when(x < 0.0, F.lit(0))
+        .when(x >= 100.0, F.lit(20))
+        # the oracle's width_bucket arithmetic, term for term
+        .otherwise(F.floor((x - F.lit(0.0)) * 19 / (F.lit(100.0) - F.lit(0.0))) + 1)
     )
-    out = df
-    if status is not None:
-        out = out.filter(F.col("status") == status)
     return (
-        out.filter(F.col(score_col).isNotNull())
-        .select((bucket * bucket_step).alias("buckets"))
+        df.filter(F.col("status") == "success")
+        .filter(F.col(score_col).isNotNull())
+        .select((bucket * 5).alias("buckets"))
         .groupBy("buckets")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -259,18 +248,11 @@ REINGEST_SPN2_EXCLUDE = (
 )
 
 
-def reingest_candidates(
-    requests: DataFrame,
-    results: DataFrame,
-    now: str,
-    min_age_hours: int = 8,
-    window_days: int = 91,
-    sources: tuple[str, ...] = REINGEST_SOURCES,
-) -> DataFrame:
+def reingest_candidates(requests: DataFrame, results: DataFrame, now: str) -> DataFrame:
     """The reingest-dump selection (sql/dump_reingest_quarterly.sql —
     weekly/bulk/old are the same query with different windows/source
     allowlists): requests of the four retryable ingest types, created
-    inside (now - window_days, now - min_age_hours), from an allowlisted
+    inside (now - 91 days, now - 8 hours), from an allowlisted
     source, whose result is a MISS (hit = false) with a transient
     status — 'spn2-%' by prefix minus seven permanent spn2 errors, or
     one of the five named transient statuses. Emits the request rows
@@ -285,9 +267,9 @@ def reingest_candidates(
     now_ts = F.lit(now).cast("timestamp")
     req = requests.where(
         F.col("ingest_type").isin(list(REINGEST_TYPES))
-        & (F.col("created") < now_ts - F.expr(f"INTERVAL {min_age_hours} HOURS"))
-        & (F.col("created") > now_ts - F.expr(f"INTERVAL {window_days} DAYS"))
-        & F.col("ingest_request_source").isin(list(sources))
+        & (F.col("created") < now_ts - F.expr("INTERVAL 8 HOURS"))
+        & (F.col("created") > now_ts - F.expr("INTERVAL 91 DAYS"))
+        & F.col("ingest_request_source").isin(list(REINGEST_SOURCES))
     )
     retryable = (
         F.col("status").startswith("spn2-")
@@ -319,7 +301,7 @@ def reingest_candidates(
 # ORDER BY (dump_regrobid does it in the shell: ``sort | uniq -w 40``),
 # i.e. an ARBITRARY representative. Arbitrary picks don't survive
 # distributed reruns, so the port pins a canonical one — the row
-# minimizing ``order_cols`` — via one sort-free min_by aggregate (the
+# minimizing (dt, url) — via one sort-free min_by aggregate (the
 # same idiom as the frontier's dedup; no window, no global sort, one
 # shuffle on sha1hex).
 #
@@ -329,14 +311,14 @@ def reingest_candidates(
 # min_by — no row ever carries more than the capture columns.
 
 
-def _one_per_key(captures: DataFrame, key: str, order_cols: tuple[str, ...]) -> DataFrame:
+def _one_per_key(captures: DataFrame) -> DataFrame:
     row = F.struct(*[F.col(c) for c in captures.columns])
-    # append the whole row to the ordering struct: ties on order_cols
+    # append the whole row to the ordering struct: ties on (dt, url)
     # then resolve on the remaining columns, so the pick is a TOTAL
     # order — independent of input partitioning/order (two rows that
     # still tie are identical, and either pick is the same row)
-    ordk = F.struct(*[F.col(c) for c in order_cols], row.alias("__row"))
-    agg = captures.groupBy(key).agg(F.min_by(row, ordk).alias("_row"))
+    ordk = F.struct(F.col("dt"), F.col("url"), row.alias("__row"))
+    agg = captures.groupBy("sha1hex").agg(F.min_by(row, ordk).alias("_row"))
     return agg.select(*[F.col(f"_row.{c}").alias(c) for c in captures.columns])
 
 
@@ -345,8 +327,6 @@ def backfill_unextracted(
     captures: DataFrame,
     pdf_meta: DataFrame,
     ingest_results: DataFrame | None = None,
-    key: str = "sha1hex",
-    order_cols: tuple[str, ...] = ("dt", "url"),
 ) -> DataFrame:
     """dump_unextracted_pdf.sql: capture rows whose sha1 has a GROBID
     row and (cdx variant) a terminal ingest result, but no pdf_meta row
@@ -355,18 +335,18 @@ def backfill_unextracted(
     anti-join; pass ``ingest_results=None`` for the petabox variant
     (dump_unextracted_pdf_petabox.sql drops that gate)."""
     out = captures.join(
-        grobid.select(key).distinct(), key, "left_semi"
+        grobid.select("sha1hex").distinct(), "sha1hex", "left_semi"
     )
     if ingest_results is not None:
         out = out.join(
             ingest_results.select(
-                F.col("terminal_sha1hex").alias(key)
+                F.col("terminal_sha1hex").alias("sha1hex")
             ).distinct(),
-            key,
+            "sha1hex",
             "left_semi",
         )
-    out = out.join(pdf_meta.select(key).distinct(), key, "left_anti")
-    return _one_per_key(out, key, order_cols)
+    out = out.join(pdf_meta.select("sha1hex").distinct(), "sha1hex", "left_anti")
+    return _one_per_key(out)
 
 
 def backfill_ungrobid(
@@ -374,8 +354,6 @@ def backfill_ungrobid(
     grobid: DataFrame,
     fatcat_file: DataFrame | None = None,
     mimetype: str | None = "application/pdf",
-    key: str = "sha1hex",
-    order_cols: tuple[str, ...] = ("dt", "url"),
 ) -> DataFrame:
     """dump_ungrobid_pdf.sql: captures never successfully GROBIDed —
     NOT EXISTS a grobid row WITH a status (status-less rows don't
@@ -387,33 +365,24 @@ def backfill_ungrobid(
     if mimetype is not None:
         out = out.where(F.col("mimetype") == mimetype)
     out = out.join(
-        grobid.where(F.col("status").isNotNull()).select(key).distinct(),
-        key,
+        grobid.where(F.col("status").isNotNull()).select("sha1hex").distinct(),
+        "sha1hex",
         "left_anti",
     )
     if fatcat_file is not None:
-        out = out.join(fatcat_file.select(key).distinct(), key, "left_semi")
-    return _one_per_key(out, key, order_cols)
+        out = out.join(fatcat_file.select("sha1hex").distinct(), "sha1hex", "left_semi")
+    return _one_per_key(out)
 
 
-def backfill_regrobid(
-    captures: DataFrame,
-    grobid: DataFrame,
-    mimetype: str | None = "application/pdf",
-    key: str = "sha1hex",
-    order_cols: tuple[str, ...] = ("dt", "url"),
-) -> DataFrame:
+def backfill_regrobid(captures: DataFrame, grobid: DataFrame) -> DataFrame:
     """dump_regrobid_pdf.sql: pdf captures whose grobid row predates
     version tracking (grobid_version IS NULL) — the re-extraction
     feed. The reference's pipeline dedups in the shell afterwards
     (``sort -S 4G | uniq -w 40`` = one line per sha1, 40 hex chars);
     here that is the same min_by pick as the other dumps."""
-    out = captures
-    if mimetype is not None:
-        out = out.where(F.col("mimetype") == mimetype)
-    out = out.join(
-        grobid.where(F.col("grobid_version").isNull()).select(key).distinct(),
-        key,
+    out = captures.where(F.col("mimetype") == "application/pdf").join(
+        grobid.where(F.col("grobid_version").isNull()).select("sha1hex").distinct(),
+        "sha1hex",
         "left_semi",
     )
-    return _one_per_key(out, key, order_cols)
+    return _one_per_key(out)

@@ -33,15 +33,17 @@ from pyspark.sql import functions as F
 
 from sandcrawler_spark.operators.text import tokens_col
 
+BM25_K1 = 1.2
+BM25_B = 0.75
 
-def postings(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Term-frequency postings: ``(doc_id, term, tf)`` plus per-doc
+
+def postings(docs: DataFrame) -> DataFrame:
+    """Term-frequency postings over a ``(doc_id, text)`` corpus:
+    ``(doc_id, term, tf)`` plus per-doc
     length ``dl`` (token count) carried on every row — one explode, one
     map-side-combining groupBy."""
     toks = docs.select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("toks")
+        F.col("doc_id").alias("doc_id"), tokens_col("text").alias("toks")
     ).select(
         "doc_id", F.size("toks").alias("dl"), F.explode("toks").alias("term")
     ).filter(F.length("term") > 0)
@@ -52,12 +54,9 @@ def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """Okapi BM25 ranked retrieval: top-``k`` documents per query.
+    """Okapi BM25 ranked retrieval (``BM25_K1``, ``BM25_B``) over a
+    ``(doc_id, text)`` corpus: top-``k`` documents per query.
 
     ``queries`` is ``(query_id, term)`` — one row per query term
     (pre-lowercased).  Returns ``(query_id, doc_id, score, rk)`` with
@@ -80,7 +79,7 @@ def bm25_topk(
         F.col("query_id"), F.lower(F.trim(F.col("term"))).alias("term")
     ).distinct()
     toks = docs.select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("toks")
+        F.col("doc_id").alias("doc_id"), tokens_col("text").alias("toks")
     )
     n_docs = docs.select(F.count("*").alias("n_docs"))
     avgdl = (
@@ -113,11 +112,11 @@ def bm25_topk(
         .withColumn(
             "w",
             F.col("idf")
-            * (F.col("tf") * (k1 + 1))
+            * (F.col("tf") * (BM25_K1 + 1))
             / (
                 F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+                + F.lit(BM25_K1)
+                * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.col("avgdl"))
             ),
         )
         .groupBy("query_id", "doc_id")
@@ -133,17 +132,12 @@ def bm25_topk(
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-``k`` tf-idf keywords per document — the corpus-QA
     "what is this doc about" signal.  ``score = tf * ln(N / df)``
     rounded to 6dp; ties break (score DESC, term ASC).  Terms present
     in every document get idf 0 and lose to any distinctive term."""
-    post = postings(docs, id_col, text_col)
+    post = postings(docs)
     n_docs = docs.select(F.count("*").alias("n_docs"))
     df_ = post.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     scored = (
@@ -166,12 +160,7 @@ def tfidf_top_terms(
     )
 
 
-def unigram_nll(
-    docs: DataFrame,
-    alpha: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def unigram_nll(docs: DataFrame, alpha: float = 0.5) -> DataFrame:
     """Per-document mean negative log-likelihood under the corpus's own
     add-alpha-smoothed unigram LM — the classic model-based quality
     proxy (CCNet-style perplexity filtering with the KenLM 5-gram
@@ -189,7 +178,7 @@ def unigram_nll(
     against the (small) term-count table, broadcast scalar totals, one
     per-doc aggregation — the same shuffle shape as BM25 without the
     query side."""
-    post = postings(docs, id_col, text_col)
+    post = postings(docs)
     counts = post.groupBy("term").agg(F.sum("tf").alias("cnt"))
     totals = counts.agg(
         F.sum("cnt").alias("t_tokens"), F.count("*").alias("v_size")
@@ -213,21 +202,15 @@ def unigram_nll(
     )
 
 
-def ccnet_buckets(
-    docs: DataFrame,
-    alpha: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    cuts: tuple[float, float] = (1 / 3, 2 / 3),
-) -> DataFrame:
+def ccnet_buckets(docs: DataFrame, alpha: float = 0.5) -> DataFrame:
     """CCNet's head/middle/tail split (Wenzek et al. 2020 §4.4, public
     paper): per language, partition documents into quality buckets by
     LM score terciles — ``head`` (lowest NLL, most corpus-typical),
     ``middle``, ``tail``. This is the stage whose output CCNet actually
     ships; downstream recipes train on head(+middle) only.
 
-    Returns ``(doc_id, lang, nll, bucket)`` for every scorable doc.
+    ``docs`` is ``(doc_id, text, lang)``. Returns
+    ``(doc_id, lang, nll, bucket)`` for every scorable doc.
 
     Scale shape: the per-doc NLL is :func:`unigram_nll` (one postings
     build, term-keyed join, per-doc agg); the per-language cut points
@@ -237,13 +220,13 @@ def ccnet_buckets(
     sort, no ntile window over the corpus — bucketing is a threshold
     comparison, which is also how CCNet applies it (cutoffs from a
     held-out sample, then a streaming filter)."""
-    nll = unigram_nll(docs, alpha=alpha, id_col=id_col, text_col=text_col)
+    nll = unigram_nll(docs, alpha=alpha)
     scored = nll.join(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(lang_col).alias("lang")),
+        docs.select(F.col("doc_id").alias("doc_id"), F.col("lang").alias("lang")),
         "doc_id",
     )
     th = scored.groupBy("lang").agg(
-        F.percentile("nll", list(cuts)).alias("qs")
+        F.percentile("nll", [1 / 3, 2 / 3]).alias("qs")
     )
     return scored.join(F.broadcast(th), "lang").select(
         "doc_id",

@@ -50,13 +50,7 @@ def cosine_col(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors per query (self excluded).
 
     Ordering is total — (round(sim,6) DESC, vec_id ASC) — so results are
@@ -69,10 +63,10 @@ def cosine_topk(
     # pair is unchanged — dot/(norm_q*norm_c) over identical folds — so
     # sims are bit-identical.
     q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     ).withColumn("q_norm", _norm(F.col("q_vec")))
     c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("vec_id"), F.col("embedding").alias("c_vec")
     ).withColumn("c_norm", _norm(F.col("c_vec")))
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -95,17 +89,16 @@ def cosine_topk(
 
 
 _PACKED_SCHEMA = "blk long, n int, dim int, ids binary, mat binary"
+GEMM_BLOCKS = 8  # dense blocks per near-dup pass; B²/2 block-pair tasks
 
 
-def _pack_blocks(
-    corpus: DataFrame, id_col: str, vec_col: str, n_blocks: int
-) -> DataFrame:
-    """Hash-partition vectors into ``n_blocks`` dense blocks, one row
+def _pack_blocks(corpus: DataFrame) -> DataFrame:
+    """Hash-partition vectors into ``GEMM_BLOCKS`` dense blocks, one row
     per block carrying (ids int64[], matrix float64[n,dim]) as packed
     numpy buffers — the unit of work for blocked GEMM."""
     c = corpus.select(
-        F.col(id_col).cast("long").alias("vec_id"), F.col(vec_col).alias("v")
-    ).withColumn("blk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)))
+        F.col("vec_id").cast("long").alias("vec_id"), F.col("embedding").alias("v")
+    ).withColumn("blk", F.pmod(F.xxhash64("vec_id"), F.lit(GEMM_BLOCKS)))
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         order = np.argsort(pdf["vec_id"].to_numpy())  # deterministic block layout
@@ -124,18 +117,12 @@ def _pack_blocks(
     return c.groupBy("blk").applyInPandas(pack, schema=_PACKED_SCHEMA)
 
 
-def embedding_near_dups(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tau: float = 0.45,
-    n_blocks: int = 8,
-) -> DataFrame:
+def embedding_near_dups(corpus: DataFrame, tau: float = 0.45) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the 5th dedup modality):
     all pairs id1 < id2 with cosine ≥ tau.
 
     Plan: BLOCKED GEMM, not a row-level cross join. Vectors are packed
-    into ``n_blocks`` dense blocks; the join enumerates the ~B²/2
+    into ``GEMM_BLOCKS`` dense blocks; the join enumerates the ~B²/2
     unordered BLOCK pairs (B rows per side — a few KB of join input),
     and each task computes one block-pair's cosine matrix as a single
     float64 matmul, emitting only pairs ≥ tau. Per-pair cost is a BLAS
@@ -145,7 +132,7 @@ def embedding_near_dups(
     compose with :func:`ivf_assign` to restrict block pairs to shared
     cells. (LSH banding is NOT exact for cosine at low tau — the
     block-GEMM keeps the answer exact.)"""
-    packed = _pack_blocks(corpus, id_col, vec_col, n_blocks)
+    packed = _pack_blocks(corpus)
     a = packed.select(*[F.col(c).alias(f"a_{c}") for c in packed.columns])
     b = packed.select(*[F.col(c).alias(f"b_{c}") for c in packed.columns])
     pairs = a.join(F.broadcast(b), F.col("a_blk") <= F.col("b_blk"))
@@ -183,15 +170,10 @@ def embedding_near_dups(
     return pairs.mapInPandas(gemm, schema="id1 long, id2 long, sim double")
 
 
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign each vector to its max-cosine centroid (IVF cell build)."""
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    cen = centroids.select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cv"))
+    c = corpus.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("v"))
+    cen = centroids.select(F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv"))
     scored = c.crossJoin(F.broadcast(cen)).withColumn(
         "sim", F.round(cosine_col(F.col("v"), F.col("cv")), 6)
     )
@@ -209,8 +191,6 @@ def ivf_search(
     centroids: DataFrame,
     k: int = 5,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-probed approximate top-k search — the ANN *scale path*: each
     query scores only the vectors assigned to its ``nprobe``
@@ -221,14 +201,14 @@ def ivf_search(
     a SQL oracle reproduces the identical probe→score→top-k pipeline.
     At 10^9 vectors the corpus side stays partitioned by cell — the
     cell equi-join replaces the all-pairs broadcast entirely."""
-    assign = ivf_assign(corpus, centroids, id_col, vec_col)
+    assign = ivf_assign(corpus, centroids)
     c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("vec_id"), F.col("embedding").alias("c_vec")
     ).join(assign, "vec_id")
     cen = centroids.select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cv")
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv")
     )
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+    q = queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     probes = q.crossJoin(F.broadcast(cen)).withColumn(
         "psim", F.round(cosine_col(F.col("q_vec"), F.col("cv")), 6)
     )
@@ -250,8 +230,7 @@ def ivf_search(
         .select("q_id", "vec_id", "sim")
     )
 
-def cell_means(assigned: DataFrame, cell_col: str = "centroid_id",
-               vec_col: str = "embedding") -> DataFrame:
+def cell_means(assigned: DataFrame) -> DataFrame:
     """Per-cell vector mean, array-native: ONE embedding column end to
     end, never ``dim`` separate ``avg(embedding[i])`` aggregates.
 
@@ -260,15 +239,16 @@ def cell_means(assigned: DataFrame, cell_col: str = "centroid_id",
     (sum-vector, count) rows with a single numpy scatter-add — the
     explicit map-side combine, so the shuffle carries at most
     partitions×cells rows, not the corpus; (2) a ``groupBy(cell)``
-    ``applyInPandas`` adds the partials. Output: (cell, mean, n).
+    ``applyInPandas`` adds the partials. Input (centroid_id, embedding);
+    output (cell, mean, n).
     """
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            cid = pdf[cell_col].to_numpy()
+            M = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
+            cid = pdf["centroid_id"].to_numpy()
             uniq, inv = np.unique(cid, return_inverse=True)
             sums = np.zeros((len(uniq), M.shape[1]))
             np.add.at(sums, inv, M)
@@ -283,7 +263,7 @@ def cell_means(assigned: DataFrame, cell_col: str = "centroid_id",
             {"cell": pdf["cell"].iloc[:1], "mean": [S / n], "n": [n]}
         )
 
-    part = assigned.select(F.col(cell_col), F.col(vec_col)).mapInPandas(
+    part = assigned.select(F.col("centroid_id"), F.col("embedding")).mapInPandas(
         partials, schema="cell long, psum array<double>, pn long"
     )
     return part.groupBy("cell").applyInPandas(
@@ -298,22 +278,16 @@ def _hash_frac(col, salt: int):
     return (F.abs(F.xxhash64(col, F.lit(salt))) / F.lit(float(1 << 63)))
 
 
-def kmeans_parallel_init(
-    corpus: DataFrame,
-    k: int,
-    rounds: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list:
+def kmeans_parallel_init(corpus: DataFrame, k: int) -> list:
     """k-means|| seeding (Bahmani et al., VLDB'12) under cosine,
-    deterministic: start from the min-id vector; each round samples
+    deterministic: start from the min-id vector; each of two rounds samples
     points with probability l·cost(x)/Σcost (l = 2k, coin =
     hash(id, round)); the oversampled candidate set is weighted by a
     distributed nearest-candidate count and reduced to k driver-side
     with greedy farthest-point selection (the deterministic stand-in
     for weighted k-means++). Only O(k·rounds) vectors ever reach the
     driver."""
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+    c = corpus.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("v"))
     first = c.orderBy("vec_id").limit(1).collect()[0]
     cands = [(int(first["vec_id"]), [float(x) for x in first["v"]])]
     ell = 2.0 * k
@@ -344,7 +318,7 @@ def kmeans_parallel_init(
             score, schema="vec_id long, v array<double>, cost double"
         )
 
-    for r in range(rounds):
+    for r in range(2):
         with_cost = costs(cands)
         total = with_cost.agg(F.sum("cost")).collect()[0][0] or 0.0
         if total <= 0:
@@ -402,8 +376,6 @@ def train_ivf_centroids(
     corpus: DataFrame,
     k: int = 16,
     iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     init: str = "smallest_ids",
 ) -> DataFrame:
     """IVF centroid training: Lloyd's iterations under the cosine
@@ -425,14 +397,14 @@ def train_ivf_centroids(
     Bahmani seeding, the production-quality choice).
 
     Empty cells keep their previous centroid (no NaN centroids, stable
-    k). Returns a DataFrame (id_col, vec_col) shaped like the
+    k). Returns a DataFrame (vec_id, embedding) shaped like the
     ``centroids`` input of :func:`ivf_assign` / :func:`ivf_search`.
     """
     spark = corpus.sparkSession
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+    c = corpus.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("v"))
 
     if init == "kmeans||":
-        seed_vecs = kmeans_parallel_init(corpus, k, id_col=id_col, vec_col=vec_col)
+        seed_vecs = kmeans_parallel_init(corpus, k)
         cents = list(enumerate(seed_vecs))
     else:
         rows = c.orderBy("vec_id").limit(k).collect()
@@ -444,36 +416,31 @@ def train_ivf_centroids(
         )
         assign = ivf_assign(c.withColumnRenamed("v", "embedding"), cen_df)
         means = cell_means(
-            c.withColumnRenamed("v", "embedding").join(assign, "vec_id"),
-            cell_col="centroid_id", vec_col="embedding",
+            c.withColumnRenamed("v", "embedding").join(assign, "vec_id")
         ).collect()
         new = {r["cell"]: [float(x) for x in r["mean"]] for r in means}
         cents = [(cid, new.get(cid, vec)) for cid, vec in cents]
 
-    return spark.createDataFrame(
-        cents, f"{id_col} long, {vec_col} array<double>"
-    )
+    return spark.createDataFrame(cents, "vec_id long, embedding array<double>")
 
-def hyperplane_signatures(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    seed: int = 42,
-) -> DataFrame:
+SRP_PLANES = 16  # signature bits (at most 62)
+SRP_BANDS = 4
+SRP_SEED = 42
+
+
+def hyperplane_signatures(corpus: DataFrame) -> DataFrame:
     """Random-hyperplane (SRP) LSH signatures: bit p of the signature
-    is sign(v · h_p) for ``n_planes`` fixed Gaussian hyperplanes
+    is sign(v · h_p) for ``SRP_PLANES`` fixed Gaussian hyperplanes
     (seeded, identical on every executor and across runs). Computed as
     one Arrow-batched numpy matmul per batch — no per-row Python, no
     shuffle. P(bit agrees) = 1 − θ/π, so near-duplicate vectors share
     most bits."""
-    assert n_planes <= 62
-    dim = len(corpus.select(vec_col).first()[0])
-    planes = np.random.RandomState(seed).standard_normal((n_planes, dim))
-    weights = (1 << np.arange(n_planes, dtype=np.int64))
+    dim = len(corpus.select("embedding").first()[0])
+    planes = np.random.RandomState(SRP_SEED).standard_normal((SRP_PLANES, dim))
+    weights = (1 << np.arange(SRP_PLANES, dtype=np.int64))
 
     c = corpus.select(
-        F.col(id_col).cast("long").alias("vec_id"), F.col(vec_col).alias("v")
+        F.col("vec_id").cast("long").alias("vec_id"), F.col("embedding").alias("v")
     )
 
     def sign_bits(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -489,29 +456,19 @@ def hyperplane_signatures(
     return c.mapInPandas(sign_bits, schema="vec_id long, sig long")
 
 
-def embedding_near_dups_lsh(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tau: float = 0.9,
-    n_planes: int = 16,
-    n_bands: int = 4,
-    seed: int = 42,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
+def embedding_near_dups_lsh(corpus: DataFrame, tau: float = 0.9) -> DataFrame:
     """APPROXIMATE embedding near-dup pairs — the sub-quadratic scale
     path for 10^9-vector corpora (exact :func:`embedding_near_dups` is
     the oracle/verification-scale twin). Pipeline: SRP signatures →
-    band into ``n_bands`` chunks (pairs agreeing on ≥1 whole band
+    band into ``SRP_BANDS`` chunks (pairs agreeing on ≥1 whole band
     become candidates via bucket equi-join — work scales with bucket
     sizes, never O(n²)) → EXACT cosine verify ≥ tau, so false
     positives cost only verify work and every reported pair is truly
     ≥ tau; recall is the banded-LSH probability (high for the
-    near-duplicate regime tau ≥ ~0.8 where θ is small). ``max_bucket``
-    enables the hot-bucket skew cap (boilerplate embedding clusters —
-    see ``dedup.cap_bucket_width``)."""
-    sigs = hyperplane_signatures(corpus, id_col, vec_col, n_planes, seed)
-    bands = _srp_bands(sigs, n_planes, n_bands, max_bucket)
+    near-duplicate regime tau ≥ ~0.8 where θ is small). Buckets wider
+    than ``DEFAULT_MAX_BUCKET`` are capped (boilerplate embedding
+    clusters — see ``dedup.cap_bucket_width``)."""
+    bands = _srp_bands(hyperplane_signatures(corpus))
     cand = (
         bands.alias("a")
         .join(bands.alias("b"), ["band", "band_val"])
@@ -522,10 +479,10 @@ def embedding_near_dups_lsh(
         .distinct()
     )
     v1 = corpus.select(
-        F.col(id_col).cast("long").alias("id1"), F.col(vec_col).alias("v1")
+        F.col("vec_id").cast("long").alias("id1"), F.col("embedding").alias("v1")
     )
     v2 = corpus.select(
-        F.col(id_col).cast("long").alias("id2"), F.col(vec_col).alias("v2")
+        F.col("vec_id").cast("long").alias("id2"), F.col("embedding").alias("v2")
     )
     return (
         cand.join(v1, "id1")
@@ -536,11 +493,11 @@ def embedding_near_dups_lsh(
     )
 
 
-def _srp_bands(sigs, n_planes: int, n_bands: int, max_bucket):
+def _srp_bands(sigs):
     """(vec_id, band, band_val) from SRP signatures."""
     from sandcrawler_spark.operators.dedup import cap_bucket_width
 
-    width = -(-n_planes // n_bands)  # ceil
+    width = -(-SRP_PLANES // SRP_BANDS)  # ceil
     bands = sigs.select(
         "vec_id",
         F.explode(
@@ -551,11 +508,11 @@ def _srp_bands(sigs, n_planes: int, n_bands: int, max_bucket):
                         f"shiftright(sig, {b * width}) & {(1 << width) - 1}"
                     ).alias("band_val"),
                 )
-                for b in range(n_bands)
+                for b in range(SRP_BANDS)
             ])
         ).alias("bk"),
     ).select("vec_id", "bk.band", "bk.band_val")
-    return cap_bucket_width(bands, ["band", "band_val"], max_bucket)
+    return cap_bucket_width(bands, ["band", "band_val"], DEFAULT_MAX_BUCKET)
 
 
 # ------------------------------------------------------------------ IVF-PQ
@@ -574,8 +531,6 @@ def train_pq_codebooks(
     m: int = 4,
     k: int = 16,
     iters: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list:
     """PQ codebook training: per-subspace Lloyd's under L2, all ``m``
     subspaces trained in ONE distributed pass per iteration.
@@ -590,8 +545,7 @@ def train_pq_codebooks(
 
     Returns ``codebooks[m][k][dim//m]`` (plain nested lists, safe to
     closure-ship to :func:`pq_encode` / :func:`pq_search`)."""
-    spark = corpus.sparkSession
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+    c = corpus.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("v"))
     seed_rows = c.orderBy("vec_id").limit(k).collect()
     seed = np.array([np.asarray(r["v"], dtype=np.float64) for r in seed_rows])
     dim = seed.shape[1]
@@ -645,12 +599,7 @@ def train_pq_codebooks(
     return [[list(map(float, code)) for code in book] for book in books]
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: list,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(corpus: DataFrame, codebooks: list) -> DataFrame:
     """Encode each vector as its ``m`` nearest-code ids (one Arrow-batched
     GEMM argmin per subspace; ties to the lowest code id). Output
     (vec_id, codes array<int>) — the m-byte-per-vector corpus state."""
@@ -658,7 +607,7 @@ def pq_encode(
     m, _, dsub = B.shape
 
     c = corpus.select(
-        F.col(id_col).cast("long").alias("vec_id"), F.col(vec_col).alias("v")
+        F.col("vec_id").cast("long").alias("vec_id"), F.col("embedding").alias("v")
     )
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -682,8 +631,6 @@ def pq_search(
     codes: DataFrame,
     codebooks: list,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ADC top-k over PQ codes: per Arrow batch, each query builds one
     m×k table of subspace partial distances (‖q_sub − c‖²), then every
@@ -696,7 +643,7 @@ def pq_search(
     B = np.asarray(codebooks, dtype=np.float64)  # (m, k, dsub)
     m, _, dsub = B.shape
     q_rows = queries.select(
-        F.col(id_col).cast("long").alias("q_id"), F.col(vec_col).alias("qv")
+        F.col("vec_id").cast("long").alias("q_id"), F.col("embedding").alias("qv")
     ).collect()
     q_ids = np.array([r["q_id"] for r in q_rows], dtype=np.int64)
     Q = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in q_rows])
@@ -748,8 +695,6 @@ def semdedup(
     corpus: DataFrame,
     centroids: DataFrame,
     tau: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, public method): semantic
     deduplication by clustering embeddings and pruning near-identical
@@ -767,9 +712,9 @@ def semdedup(
     split them by training more centroids, exactly the paper's k
     scaling knob).
     """
-    assign = ivf_assign(corpus, centroids, id_col, vec_col)
+    assign = ivf_assign(corpus, centroids)
     v = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
+        F.col("vec_id").alias("vec_id"), F.col("embedding").alias("v")
     ).join(assign, "vec_id")
     a = v.select(F.col("vec_id").alias("id1"), F.col("v").alias("v1"), "centroid_id")
     b = v.select(F.col("vec_id").alias("id2"), F.col("v").alias("v2"), "centroid_id")

@@ -60,10 +60,10 @@ def interleave_stats(span_rows: DataFrame) -> DataFrame:
     )
 
 
-def flatten_text(docs: DataFrame, sep: str = " ") -> DataFrame:
+def flatten_text(docs: DataFrame) -> DataFrame:
     """(doc_id, text, n_text_spans, n_media_spans): each doc's
     interleaved span sequence flattened to plain text — kind='text'
-    spans joined by ``sep`` in OFFSET order (array_sort with an
+    spans joined by one space in OFFSET order (array_sort with an
     explicit offset comparator, applied inside the array: no explode,
     no shuffle, order from data not partitioning). Media spans are
     counted, never decoded. The crawl→corpus bridge
@@ -78,7 +78,7 @@ def flatten_text(docs: DataFrame, sep: str = " ") -> DataFrame:
     )
     return docs.select(
         "doc_id",
-        F.array_join(F.transform(text_spans, lambda s: s["text"]), sep).alias("text"),
+        F.array_join(F.transform(text_spans, lambda s: s["text"]), " ").alias("text"),
         F.size(F.filter("spans", lambda s: s["kind"] == "text")).alias("n_text_spans"),
         F.size(F.filter("spans", lambda s: s["kind"] != "text")).alias("n_media_spans"),
     )

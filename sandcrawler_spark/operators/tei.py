@@ -153,11 +153,11 @@ def parse_tei_biblio_udf(xml_text: pd.Series) -> pd.DataFrame:
     return pd.DataFrame([_parse_tei_header(x) for x in xml_text])
 
 
-def tei_biblio(df: DataFrame, xml_col: str = "tei_xml") -> DataFrame:
-    """grobid.py:174-200 over a DataFrame of TEI-XML strings: adds a
+def tei_biblio(df: DataFrame) -> DataFrame:
+    """grobid.py:174-200 over a DataFrame of TEI-XML strings (``tei_xml``): adds a
     ``biblio`` struct column (status='bad-grobid-xml' on parse error,
     field layout per to_legacy_dict's biblio subset)."""
-    return df.withColumn("biblio", parse_tei_biblio_udf(F.col(xml_col)))
+    return df.withColumn("biblio", parse_tei_biblio_udf(F.col("tei_xml")))
 
 
 _ENTITY_MARKERS = ["&#", "&amp;", "&gt;", "&lt;"]
@@ -224,12 +224,10 @@ def should_parse_crossref_ref_col(
 
 def crossref_refs_prep(
     refs: DataFrame,
-    doi_col: str = "work_doi",
-    ts_col: str = "indexed_ts",
     max_refs_per_work: int = 2000,
 ) -> DataFrame:
     """grobid.py:228-283 minus the processCitationList HTTP hop: from a
-    table of one row per (work DOI, indexed timestamp, position, key,
+    table of one row per (``work_doi``, ``indexed_ts``, position, key,
     ref fields), emit the batch that would be sent to GROBID —
     (source, source_id, source_ts, key, position, clean_ref) — with
     unstructured-missing and should-not-parse refs dropped and the
@@ -250,15 +248,15 @@ def crossref_refs_prep(
         F.col("volume"),
         F.col("first_page"),
     )
-    w = Window.partitionBy(doi_col).orderBy(F.col("position"))
+    w = Window.partitionBy("work_doi").orderBy(F.col("position"))
     return (
         refs.filter(_present(F.col("unstructured")) & keep)
         .withColumn("_rank", F.row_number().over(w))
         .filter(F.col("_rank") <= max_refs_per_work)
         .select(
             F.lit("crossref").alias("source"),
-            F.lower(F.col(doi_col)).alias("source_id"),
-            F.col(ts_col).alias("source_ts"),
+            F.lower(F.col("work_doi")).alias("source_id"),
+            F.col("indexed_ts").alias("source_ts"),
             F.col("key"),
             F.col("position"),
             clean_crossref_unstructured_col(F.col("unstructured")).alias("clean_ref"),
@@ -301,13 +299,13 @@ def tei_body_words_udf(xml_text: pd.Series) -> pd.DataFrame:
     return pd.DataFrame([_tei_body_words(x) for x in xml_text])
 
 
-def tei_body_stats(df: DataFrame, xml_col: str = "tei_xml") -> DataFrame:
+def tei_body_stats(df: DataFrame) -> DataFrame:
     """html_extract_body_teixml's downstream half over a DataFrame of
-    TEI-XML strings (the trafilatura HTML→TEI conversion itself is an
+    TEI-XML strings (``tei_xml``; the trafilatura HTML→TEI conversion itself is an
     external library, out of scope like the media codecs): adds a
     ``body`` struct with (status, word_count) — the word_count that
     feeds html_guess_scope (ingest_html.py:414)."""
-    return df.withColumn("body", tei_body_words_udf(F.col(xml_col)))
+    return df.withColumn("body", tei_body_words_udf(F.col("tei_xml")))
 
 
 def _tei_affiliations(xml_text: str | None) -> list[str] | None:
@@ -522,11 +520,9 @@ def _teixml2json(xml_text: str | None, encumbered: bool = True) -> dict:
     return info
 
 
-def tei_to_grobid_doc(
-    df: DataFrame, xml_col: str = "tei_xml", encumbered: bool = True
-) -> DataFrame:
+def tei_to_grobid_doc(df: DataFrame, encumbered: bool = True) -> DataFrame:
     """Full TEI → grobid-JSON document column (grobid2json.py's
-    teixml2json as an Arrow-batched pass): adds ``doc`` struct with
+    teixml2json as an Arrow-batched pass over ``tei_xml``): adds ``doc`` struct with
     header metadata, journal info, the indexed citation list, and —
     unless ``encumbered=False`` (the --no-encumbered flag /
     remove_encumbered) — abstract/body/acknowledgement/annex. The
@@ -540,7 +536,7 @@ def tei_to_grobid_doc(
             [_teixml2json(x, encumbered=encumbered) for x in xml_text]
         )
 
-    return df.withColumn("doc", parse(F.col(xml_col)))
+    return df.withColumn("doc", parse(F.col("tei_xml")))
 
 
 def grobid_doc_to_import_input(df: DataFrame) -> DataFrame:

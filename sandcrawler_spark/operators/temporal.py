@@ -42,6 +42,7 @@ _SIDE = "__asof_side"
 _B = "__asof_b"
 _PFX = "__asof_r_"
 _RT = "__asof_rt"
+_SUFFIX = "_right"  # matched right payload column ``<col>_right``
 
 
 def _tagged_union(
@@ -49,10 +50,10 @@ def _tagged_union(
     right: DataFrame,
     on: list[str],
     left_time: str,
-    right_time: str,
     right_cols: list[str],
 ):
-    """Unified (keys, time, side, left-payload, right-payload) relation.
+    """Unified (keys, time, side, left-payload, right-payload) relation
+    over the ``left_time`` column both sides carry.
 
     side 0 = right, 1 = left: at equal time the right row sorts first,
     so the inclusive (>=) match falls out of plain (time, side) order.
@@ -68,7 +69,7 @@ def _tagged_union(
     )
     r = right.select(
         *on,
-        F.col(right_time).alias(_T),
+        F.col(left_time).alias(_T),
         F.lit(0).alias(_SIDE),
         *[F.lit(None).cast(left.schema[c].dataType).alias(c)
           for c in left_payload],
@@ -89,15 +90,14 @@ def asof_join(
     right: DataFrame,
     on: list[str] | str,
     left_time: str,
-    right_time: str | None = None,
     right_cols: list[str] | None = None,
     direction: str = "backward",
-    suffix: str = "_right",
     bucket_s: int | None = None,
     tolerance_s: float | None = None,
 ) -> DataFrame:
-    """Left as-of join. Returns every left row plus the matched right
-    payload columns renamed ``<col><suffix>`` (null when no match).
+    """Left as-of join on the ``left_time`` column both sides carry.
+    Returns every left row plus the matched right payload columns
+    renamed ``<col>_right`` (null when no match).
 
     ``bucket_s`` switches to the skew-proof two-phase plan (bucket
     width in seconds over the time column); semantics are identical.
@@ -113,7 +113,6 @@ def asof_join(
     partitioning, so still a single shuffle.
     """
     on = [on] if isinstance(on, str) else list(on)
-    right_time = right_time or left_time
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in on]
     if direction not in ("backward", "forward", "nearest"):
@@ -126,17 +125,15 @@ def asof_join(
     if tolerance_s is not None or direction == "nearest":
         # carry the matched right time as a hidden payload column so
         # the gap to the left time can be computed after the carry
-        right = right.withColumn(_RT, F.col(right_time))
+        right = right.withColumn(_RT, F.col(left_time))
         right_cols = [*right_cols, _RT]
 
-    u, left_payload = _tagged_union(
-        left, right, on, left_time, right_time, right_cols
-    )
+    u, left_payload = _tagged_union(left, right, on, left_time, right_cols)
 
     if direction == "nearest":
         return _nearest(
-            u, on, left, right, left_time, right_time, left_payload,
-            public_right, right_cols, suffix, tolerance_s,
+            u, on, left, right, left_time, left_payload,
+            public_right, right_cols, tolerance_s,
         )
     t_order = F.asc(_T) if direction == "backward" else F.desc(_T)
 
@@ -203,13 +200,13 @@ def asof_join(
         )
 
     if tolerance_s is None:
-        out_right = [F.col(_PFX + c).alias(c + suffix) for c in public_right]
+        out_right = [F.col(_PFX + c).alias(c + _SUFFIX) for c in public_right]
     else:
         lt = _epoch_col(F.col(_T), left.schema[left_time].dataType)
-        rt = _epoch_col(F.col(_PFX + _RT), right.schema[right_time].dataType)
+        rt = _epoch_col(F.col(_PFX + _RT), right.schema[left_time].dataType)
         ok = F.abs(lt - rt) <= F.lit(float(tolerance_s))
         out_right = [
-            F.when(ok, F.col(_PFX + c)).alias(c + suffix)
+            F.when(ok, F.col(_PFX + c)).alias(c + _SUFFIX)
             for c in public_right
         ]
     return (
@@ -236,8 +233,8 @@ def _epoch(col: Column, df: DataFrame, name: str) -> Column:
 
 
 def _nearest(
-    u, on, left, right, left_time, right_time, left_payload,
-    public_right, right_cols, suffix, tolerance_s,
+    u, on, left, right, left_time, left_payload,
+    public_right, right_cols, tolerance_s,
 ):
     """direction='nearest': both carries from one shuffle (the two
     windows share the partitioning; only the sort differs), then a
@@ -264,7 +261,7 @@ def _nearest(
         F.col(_SIDE) == 1
     )
     lt = _epoch_col(F.col(_T), left.schema[left_time].dataType)
-    rdt = right.schema[right_time].dataType
+    rdt = right.schema[left_time].dataType
     gap_b = lt - _epoch_col(F.col(f"__b_{_RT}"), rdt)
     gap_f = _epoch_col(F.col(f"__f_{_RT}"), rdt) - lt
     if tolerance_s is not None:
@@ -276,7 +273,7 @@ def _nearest(
     out_right = [
         F.when(use_b, F.col(f"__b_{c}"))
         .when(use_f, F.col(f"__f_{c}"))
-        .alias(c + suffix)
+        .alias(c + _SUFFIX)
         for c in public_right
     ]
     return m.select(
@@ -291,10 +288,10 @@ def interval_join(
     left_span: tuple[str, str],
     right_span: tuple[str, str],
     bucket_s: float = 3600.0,
-    suffix: str = "_right",
 ) -> DataFrame:
     """Overlap (range) join without the nested-loop trap: pairs of rows
     whose [start, end] intervals intersect (closed ends), per key.
+    Right payload columns are renamed ``<col>_right``.
 
     Catalyst executes ``l.start <= r.end AND r.start <= l.end`` as a
     BroadcastNestedLoopJoin — quadratic, dead at scale. Here each
@@ -322,7 +319,7 @@ def interval_join(
     l = prep(left, ls, le, "l")
     r = prep(right, rs, re_, "r")
     for c in [c for c in right.columns if c not in on]:
-        r = r.withColumnRenamed(c, c + suffix)
+        r = r.withColumnRenamed(c, c + _SUFFIX)
 
     def burst(df: DataFrame, s: str, e: str) -> DataFrame:
         return df.withColumn(

@@ -30,7 +30,7 @@ STOPWORDS = ("the", "a", "of", "and", "to")
 # concatenation of the right list.
 
 
-def author_tokenize(s: str, remove_whitespace: bool = False) -> str:
+def author_tokenize(s: str) -> str:
     """Lowercase, keep alnum+space, ASCII-fold by dropping non-ASCII
     (filter_scored_matches.py:24-35).
 
@@ -42,8 +42,6 @@ def author_tokenize(s: str, remove_whitespace: bool = False) -> str:
     escaped names; the golden vectors in tests cover both forms."""
     s = s.replace("&apos;", "'")
     s = "".join(c for c in s.lower() if c.isalnum() or c.isspace())
-    if remove_whitespace:
-        s = "".join(s.split())
     return s.encode("ascii", "replace").replace(b"?", b"").decode("ascii")
 
 
@@ -154,14 +152,14 @@ def doc_quality(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def lang_guess(df: DataFrame, id_col: str, text_col: str, threshold: float = 0.12) -> DataFrame:
-    """n-gram-heuristic language ID (stopword-density rule): a cheap,
-    deterministic classifier of the kind large corpus pipelines run
-    before real LID models."""
+def lang_guess(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """n-gram-heuristic language ID (stopword-density rule, ``en`` at
+    ≥ 0.12 stopwords per token): a cheap, deterministic classifier of
+    the kind large corpus pipelines run before real LID models."""
     q = doc_quality(df, id_col, text_col)
     return q.select(
         "id",
-        F.when(F.col("stop_ratio") >= threshold, F.lit("en"))
+        F.when(F.col("stop_ratio") >= 0.12, F.lit("en"))
         .otherwise(F.lit("other"))
         .alias("lang_guess"),
     )
@@ -185,12 +183,10 @@ LANG_TRIGRAM_PROFILES: tuple[tuple[str, tuple[str, ...]], ...] = (
 )
 
 
-def lang_guess_ngram(
-    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.01
-) -> DataFrame:
+def lang_guess_ngram(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Character-n-gram language ID: per-language trigram-profile hit
     density over the lowercased text, argmax with an absolute density
-    floor (``threshold`` hits/char — below it the text matches no
+    floor (0.01 hits/char — below it the text matches no
     profile and falls to ``other``). Ties break to the earliest profile
     in ``LANG_TRIGRAM_PROFILES`` order. Pure Catalyst — 48 codegen'd
     replace/length expressions, no explode, no Python."""
@@ -221,7 +217,7 @@ def lang_guess_ngram(
     return df.select(
         F.col(id_col).alias("id"),
         F.when(
-            (n_chars > 0) & (best["s"] / n_chars >= F.lit(threshold)),
+            (n_chars > 0) & (best["s"] / n_chars >= F.lit(0.01)),
             best["lang"],
         )
         .otherwise(F.lit("other"))
@@ -324,16 +320,14 @@ def ngram_contamination(
     )
 
 
-def repetition_stats(
-    df: DataFrame, id_col: str, text_col: str, top_n: int = 2, dup_n: int = 5
-) -> DataFrame:
+def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Gopher-style repetition signals (Rae et al. 2021 §A1.1, public
     paper), adapted to single-line docs: per doc,
 
     - ``top_ngram_frac``: chars covered by all occurrences of the most
-      frequent ``top_n``-gram / total chars (Gopher's top-2..4-gram
+      frequent 2-gram / total chars (Gopher's top-2..4-gram
       character fraction), and
-    - ``dup_ngram_frac``: chars covered by every ``dup_n``-gram that
+    - ``dup_ngram_frac``: chars covered by every 5-gram that
       occurs more than once / total chars (Gopher's duplicate
       5..10-gram character fraction).
 
@@ -346,12 +340,12 @@ def repetition_stats(
         F.length(F.concat_ws(" ", tokens_col(text_col))).alias("doc_chars"),
     )
     top = (
-        _ngram_counts(df, id_col, text_col, top_n)
+        _ngram_counts(df, id_col, text_col, 2)
         .groupBy("id")
         .agg(F.max(F.col("cnt") * F.length("g")).alias("top_chars"))
     )
     dup = (
-        _ngram_counts(df, id_col, text_col, dup_n)
+        _ngram_counts(df, id_col, text_col, 5)
         .filter(F.col("cnt") >= 2)
         .groupBy("id")
         .agg(F.sum(F.col("cnt") * F.length("g")).alias("dup_chars"))
@@ -490,7 +484,6 @@ def line_dedup(
     id_col: str,
     text_col: str,
     min_docs: int = 2,
-    sep: str = "\n",
 ) -> DataFrame:
     """CCNet-style duplicated-line removal (Wenzek et al. 2019, public
     paper): drop every line whose normalized form (lower+trim) appears
@@ -508,7 +501,7 @@ def line_dedup(
     keeps a row even when all its lines are removed (clean_text '')."""
     lines = df.select(
         F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "line"),
+        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
     ).withColumn("nrm", F.lower(F.trim("line")))
     dup_norms = (
         lines.where(F.col("nrm") != "")
@@ -520,7 +513,7 @@ def line_dedup(
     kept = lines.join(dup_norms, "nrm", "left_anti")
     reassembled = kept.groupBy("id").agg(
         F.concat_ws(
-            sep,
+            "\n",
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "line"))),
                 lambda s: s["line"],
@@ -572,9 +565,6 @@ def boilerplate_classify(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    min_words: int = 4,
-    sw_high: float = 0.32,
-    sw_low: float = 0.17,
 ) -> DataFrame:
     """jusText-inspired two-pass boilerplate classification (Pomikálek
     2011, public thesis — simplified as documented below): split each
@@ -584,9 +574,9 @@ def boilerplate_classify(
     pass that makes jusText better than per-paragraph thresholds alone.
 
     Context-free classes (per paragraph):
-    - ``short``    — fewer than ``min_words`` tokens,
-    - ``good``     — stopword density ≥ ``sw_high``,
-    - ``neargood`` — density ≥ ``sw_low``,
+    - ``short``    — fewer than 4 tokens,
+    - ``good``     — stopword density ≥ 0.32,
+    - ``neargood`` — density ≥ 0.17,
     - ``bad``      — otherwise.
 
     Context-sensitive resolution (the simplification: jusText walks to
@@ -619,9 +609,9 @@ def boilerplate_classify(
         F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t))).alias("n_stop"),
     ).withColumn(
         "ctx_free",
-        F.when(F.col("n_words") < min_words, F.lit("short"))
-        .when(F.col("n_stop") / F.col("n_words") >= sw_high, F.lit("good"))
-        .when(F.col("n_stop") / F.col("n_words") >= sw_low, F.lit("neargood"))
+        F.when(F.col("n_words") < 4, F.lit("short"))
+        .when(F.col("n_stop") / F.col("n_words") >= 0.32, F.lit("good"))
+        .when(F.col("n_stop") / F.col("n_words") >= 0.17, F.lit("neargood"))
         .otherwise(F.lit("bad")),
     )
     w = Window.partitionBy("id").orderBy("idx")
@@ -657,30 +647,28 @@ def nfc_normalize_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda x: unicodedata.normalize("NFC", x) if x is not None else None)
 
 
-def clean_text_col(text: Column, nfc: bool = True) -> Column:
+def clean_text_col(text: Column) -> Column:
     """Text-cleanup kernel: strip control characters (C0 except
     tab/newline/CR, DEL, C1), collapse horizontal-whitespace runs to
     one space, normalize space around newlines, cap blank-line runs at
-    one empty line, trim -- then optionally NFC-normalize (combining
-    sequences -> precomposed, the fix for the same grapheme
-    hashing/deduping differently by byte form). The regex passes are
+    one empty line, trim -- then NFC-normalize (combining sequences
+    -> precomposed, the fix for the same grapheme hashing/deduping
+    differently by byte form). The regex passes are
     pure Catalyst; only NFC crosses the Arrow boundary."""
     c = F.regexp_replace(text, _CONTROL_CHARS, "")
     c = F.regexp_replace(c, "[ \\t\\u00A0]+", " ")
     c = F.regexp_replace(c, " ?\\r?\\n ?", "\n")
     c = F.regexp_replace(c, "\\n{3,}", "\n\n")
     c = F.trim(c)
-    return nfc_normalize_udf(c) if nfc else c
+    return nfc_normalize_udf(c)
 
 
-def clean_documents(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", nfc: bool = True
-) -> DataFrame:
-    """(id, text) with the cleanup kernel applied -- run BEFORE hashing,
-    dedup, or quality scoring so that byte-level noise (controls, NBSP
-    runs, decomposed accents) cannot split exact-dup groups or skew
-    token counts."""
+def clean_documents(df: DataFrame) -> DataFrame:
+    """(id, text) from (doc_id, text) with the cleanup kernel applied
+    -- run BEFORE hashing, dedup, or quality scoring so that
+    byte-level noise (controls, NBSP runs, decomposed accents) cannot
+    split exact-dup groups or skew token counts."""
     return df.select(
-        F.col(id_col).alias("id"),
-        clean_text_col(F.col(text_col), nfc=nfc).alias("text"),
+        F.col("doc_id").alias("id"),
+        clean_text_col(F.col("text")).alias("text"),
     )

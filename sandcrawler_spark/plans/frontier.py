@@ -29,6 +29,9 @@ matches the single-threaded oracle byte-for-byte.
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
@@ -133,13 +136,12 @@ def _dedup_candidates(frontier: DataFrame) -> DataFrame:
         (-F.col("citation_priority")).alias("neg_cite"),
         F.col("seq"),
         F.concat_ws("|", "hops").alias("hopchain"),
-    ]
-    if "attempt" in frontier.columns:
         # retry rows carry the same (priority, depth, cite, seq, hops)
         # as the stale attempt-0 copy still in the append-only pool —
         # the HIGHEST attempt must win the dedup so its `not_before`
         # backoff gate shields the key during the wait window.
-        order_cols.append((-F.col("attempt")).alias("neg_attempt"))
+        (-F.col("attempt")).alias("neg_attempt"),
+    ]
     order = F.struct(*order_cols)
     return (
         frontier.groupBy(*keys)
@@ -160,20 +162,15 @@ def _dedup_candidates(frontier: DataFrame) -> DataFrame:
     )
 
 
-def _politeness_select(candidates: DataFrame, budget_col: str = "host_budget") -> DataFrame:
-    """Two-phase salted per-host top-k (W3; SURVEY §7.3 #3).
+def _politeness_select(candidates: DataFrame) -> DataFrame:
+    """Two-phase salted per-host top-``host_budget`` (W3; SURVEY §7.3 #3).
 
     Phase 1 ranks within (host, salt) — SALT_BUCKETS parallel windows per
     hot host — and keeps ≤ budget per salt; phase 2 ranks the surviving
     ≤ budget·S rows within host. The per-salt survivors are a superset of
     the true per-host top-budget, so the result is exact while no single
     task ever sorts a whole hot host's frontier."""
-    order = [
-        F.col("priority").asc(),
-        F.col("depth").asc(),
-        F.col("citation_priority").desc(),
-        F.col("canonical_url").asc(),
-    ]
+    order = _fetch_order_cols()
     salted = candidates.withColumn(
         "__salt", F.pmod(F.xxhash64("canonical_url"), F.lit(SALT_BUCKETS))
     )
@@ -183,16 +180,16 @@ def _politeness_select(candidates: DataFrame, budget_col: str = "host_budget") -
     # (each salt already contributes its best `budget`), so they skip the
     # phase-2 sort — but they MUST stay in the output as unselected:
     # non-selected candidates are next round's frontier, not waste.
-    finalists = pre.filter(F.col("__r1") <= F.col(budget_col)).drop("__r1")
+    finalists = pre.filter(F.col("__r1") <= F.col("host_budget")).drop("__r1")
     overflow = (
-        pre.filter(F.col("__r1") > F.col(budget_col))
+        pre.filter(F.col("__r1") > F.col("host_budget"))
         .drop("__r1", "__salt")
         .withColumn("selected", F.lit(False))
     )
     w2 = Window.partitionBy("host").orderBy(*order)
     ranked = (
         finalists.withColumn("__r2", F.row_number().over(w2))
-        .withColumn("selected", F.col("__r2") <= F.col(budget_col))
+        .withColumn("selected", F.col("__r2") <= F.col("host_budget"))
         .drop("__salt", "__r2")
     )
     return ranked.unionByName(overflow)
@@ -203,14 +200,7 @@ def _best_capture(fetch: DataFrame, captures: DataFrame) -> DataFrame:
     capture per candidate under the reference's 8-key preference tuple
     (ia.py:371-390) + (datetime, sha1hex) totality tiebreakers."""
     best_mime = F.coalesce(
-        *[
-            F.when(F.col("ingest_type") == t, F.lit(m))
-            for t, m in (
-                ("pdf", "application/pdf"),
-                ("xml", "text/xml"),
-                ("html", "text/html"),
-            )
-        ],
+        *[F.when(F.col("ingest_type") == t, F.lit(m)) for t, m in _MIME_GATE.items()],
         F.lit("application/octet-stream"),
     )
     cap = captures.select(
@@ -747,6 +737,13 @@ def _compact_frontier(
     )
     store.set_compaction(round_id, name, int(obs.get["n"]))
     _release(scratch)
+    # the committed base supersedes every older one (and any url_seen
+    # base a bucketed-seen crawl left behind): nothing reads them now
+    for old in glob.glob(store.aux_path("frontier_base_r*")) + glob.glob(
+        store.aux_path("seen_base_r*")
+    ):
+        if os.path.basename(old) != name:
+            shutil.rmtree(old)
 
 
 def _compaction_due(since: int, base: int) -> bool:
@@ -782,21 +779,23 @@ class _Crawl:
         return self.store.counters().get(str(round_id), {}).get(key, default)
 
 
-def _seed_round0(c: _Crawl, data_dir: str) -> tuple[DataFrame, int]:
-    """Round 0's frontier: the seeds, canonicalized ONCE into the state
-    dir; their forced and total row counts ride the write job as an
-    Observation. Returns (frontier, input_row_count)."""
-    path = c.store.aux_path("seeds_prepared")
+def _register_seeds(
+    spark: SparkSession, store: SnapshotStore, seeds_path: str, name: str, at_round: int
+) -> tuple[DataFrame, int]:
+    """Canonicalize a seed list ONCE into the state dir as aux table
+    ``name`` and register it for round ``at_round``: its total and
+    forced row counts ride the write job as an Observation and are
+    recorded with the table. Returns (table, row_count)."""
+    path = store.aux_path(name)
     obs = Observation()
-    prepare_seeds(c.spark.read.parquet(f"{data_dir}/seeds.parquet")).observe(
+    prepare_seeds(spark.read.parquet(seeds_path)).observe(
         obs,
         F.sum(F.col("force_recrawl").cast("int")).alias("nf"),
         F.count(F.lit(1)).alias("n"),
     ).write.mode("overwrite").parquet(path)
     n = int(obs.get["n"])
-    c.store.note_forced_seeds(int(obs.get["nf"] or 0))
-    c.store.note_seed_rows("seeds_prepared", n)
-    return c.spark.read.parquet(path), n
+    store.add_seed_table(name, at_round, rows=n, forced=int(obs.get["nf"] or 0))
+    return spark.read.parquet(path), n
 
 
 def _crawl_finished(c: _Crawl, round_id: int) -> bool:
@@ -1082,7 +1081,9 @@ def run_crawl(
             # through the url_seen anti-join (no full-frontier rewrite per
             # round — the Iceberg-native layout).
             if round_id == 0:
-                frontier, input_rows = _seed_round0(c, data_dir)
+                frontier, input_rows = _register_seeds(
+                    spark, store, f"{data_dir}/seeds.parquet", "seeds_prepared", 0
+                )
             elif _crawl_finished(c, round_id):
                 break
             else:
@@ -1119,8 +1120,6 @@ def run_reingest(
     state_dir: str,
     reingest_seeds_path: str,
     extra_rounds: int = 2,
-    default_budget: int = DEFAULT_BUDGET,
-    max_retries: int = 0,
 ) -> SnapshotStore:
     """Dump→re-ingest cycle (reference: sql/dump_reingest_quarterly.sql —
     periodically re-enqueue requests whose results should be retried).
@@ -1134,17 +1133,10 @@ def run_reingest(
     if store.last_round < 0:
         raise ValueError("re-ingest requires an existing committed crawl")
     gen = store.bump_generation()
-    prepared = prepare_seeds(spark.read.parquet(reingest_seeds_path))
-    name = f"seeds_gen{gen}"
-    obs = Observation()
-    prepared.observe(
-        obs, F.sum(F.col("force_recrawl").cast("int")).alias("nf")
-    ).write.mode("overwrite").parquet(store.aux_path(name))
-    store.note_forced_seeds(int(obs.get["nf"] or 0))
-    store.add_seed_table(name, at_round=store.last_round + 1)
+    _register_seeds(
+        spark, store, reingest_seeds_path, f"seeds_gen{gen}", store.last_round + 1
+    )
     return run_crawl(
         spark, data_dir, state_dir,
-        max_rounds=store.last_round + 1 + extra_rounds,
-        default_budget=default_budget, resume=True,
-        max_retries=max_retries,
+        max_rounds=store.last_round + 1 + extra_rounds, resume=True,
     )

@@ -38,7 +38,6 @@ def capture_rank_key(
     datetime14: str,
     warc_path: str,
     sha1hex: str,
-    closest_dt: str = "00000000",
 ):
     """DESCENDING-preference tuple: the max-key capture is chosen.
 
@@ -52,19 +51,11 @@ def capture_rank_key(
         0 - (status_code or 999),
         int(mimetype == best_mimetype),
         int(mimetype != "warc/revisit"),
-        int(datetime14[:4] == closest_dt[:4]),
+        # closest_dt year match against the reference's "00000000"
+        # default: batch mode has no 'closest' target
+        int(datetime14[:4] == "0000"),
         int(datetime14),
         int("/" in (warc_path or "")),
         sha1hex or "",
     )
 
-
-BEST_MIMETYPE_BY_TYPE = {
-    # reference: best_mimetype arg of lookup_best per ingest type
-    "pdf": "application/pdf",
-    "xml": "text/xml",
-    "html": "text/html",
-    "src": "application/octet-stream",
-    "component": "application/octet-stream",
-    "file": "application/pdf",
-}

@@ -75,24 +75,18 @@ class SnapshotStore:
         the compaction round."""
         return int(self._manifest.get("seed_table_rounds", {}).get(name, 0))
 
-    def add_seed_table(self, name: str, at_round: int | None = None) -> None:
-        tables = self.seed_tables
-        if name not in tables:
-            tables.append(name)
-        self._manifest["seed_tables"] = tables
-        if at_round is not None:
-            # new seeds re-arm the crawl even if the previous round made
-            # no progress (exhausted-state re-ingest)
-            self._manifest["seeds_added_at_round"] = at_round
-            rounds = dict(self._manifest.get("seed_table_rounds", {}))
-            rounds[name] = at_round
-            self._manifest["seed_table_rounds"] = rounds
-        self.save_manifest()
-
-    def note_seed_rows(self, name: str, n: int) -> None:
-        rows = dict(self._manifest.get("seed_table_rows", {}))
-        rows[name] = int(n)
-        self._manifest["seed_table_rows"] = rows
+    def add_seed_table(self, name: str, at_round: int, rows: int, forced: int) -> None:
+        """Register a prepared seed table for round ``at_round`` with its
+        row and force_recrawl counts, in ONE manifest write. New seeds
+        re-arm the crawl even if the previous round made no progress
+        (exhausted-state re-ingest)."""
+        m = self._manifest
+        if name not in self.seed_tables:
+            m["seed_tables"] = [*self.seed_tables, name]
+        m["seeds_added_at_round"] = int(at_round)
+        m["seed_table_rounds"] = {**m.get("seed_table_rounds", {}), name: int(at_round)}
+        m["seed_table_rows"] = {**m.get("seed_table_rows", {}), name: int(rows)}
+        m["forced_seeds"] = int(m.get("forced_seeds", 0)) + int(forced)
         self.save_manifest()
 
     def seed_table_rows(self, name: str) -> int:
@@ -132,11 +126,6 @@ class SnapshotStore:
         is zero. Missing key (pre-existing state dirs) → assume forced
         rows may exist."""
         return int(self._manifest.get("forced_seeds", 1 << 30))
-
-    def note_forced_seeds(self, n: int) -> None:
-        prev = int(self._manifest.get("forced_seeds", 0))
-        self._manifest["forced_seeds"] = prev + int(n)
-        self.save_manifest()
 
     def save_manifest(self) -> None:
         tmp = self._manifest_path() + ".tmp"

@@ -323,7 +323,7 @@ def med_pdf_spans(spark, sf_dir):
     )
     src = c.select(ks.alias("doc_id"), blob_s.cast("binary").alias("blob"))
     out = pdf_extract_spans(
-        src, bad_pdf_md5=[bad_md5], max_text_chars=70, fake_decode=True
+        src, bad_pdf_md5=[bad_md5], max_text_chars=70
     )
     s = F.col("s")
     return out.select(

@@ -310,7 +310,7 @@ def med_binary_meta(spark, sf_dir):
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "UTF-8").alias("blob"),
     )
-    return media.binary_meta(d, "doc_id", "blob", fake_decode=True)
+    return media.binary_meta(d, "doc_id", "blob")
 
 
 def med_resize(spark, sf_dir):
@@ -3755,7 +3755,7 @@ def cls_quality_score(spark, sf_dir):
         ((F.col("id") % 201).cast("double") / 100.0 - 1.0).alias("w"),
     )
     out = classifier.classify_documents(
-        docs, "doc_id", "text", wdf, bias=-0.1, dim=4096, bigrams=True
+        docs, "doc_id", "text", wdf, bias=-0.1, dim=4096
     )
     return out.select(F.col("id").alias("doc_id"), "score")
 

@@ -40,21 +40,20 @@ def _feed(xml_col, block_re: str, link_re: str, date_re: str):
     )
 
 
-def feed_entries(
-    df: DataFrame, id_col: str = "fetch_url", xml_col: str = "xml"
-) -> DataFrame:
-    """Parse RSS ``<item>`` and Atom ``<entry>`` blocks into sitemap-
-    shaped entry rows: ``(<id_col>, kind='url', url, lastmod,
-    sm_priority=null)``.  RSS links come from ``<link>text</link>``,
-    Atom links from ``<link href="..."/>``; pubDate/updated land in
+def feed_entries(df: DataFrame) -> DataFrame:
+    """Parse the RSS ``<item>`` and Atom ``<entry>`` blocks of
+    ``(fetch_url, xml)`` rows into sitemap-shaped entry rows:
+    ``(fetch_url, kind='url', url, lastmod, sm_priority=null)``.  RSS
+    links come from ``<link>text</link>``, Atom links from
+    ``<link href="..."/>``; pubDate/updated land in
     ``lastmod`` verbatim (normalize downstream if comparing to CDX
     datetimes).  Link-less items are dropped."""
     both = F.concat(
-        _feed(xml_col, _ITEM_BLOCK, _RSS_LINK, _PUBDATE),
-        _feed(xml_col, _ENTRY_BLOCK, _ATOM_LINK, _UPDATED),
+        _feed("xml", _ITEM_BLOCK, _RSS_LINK, _PUBDATE),
+        _feed("xml", _ENTRY_BLOCK, _ATOM_LINK, _UPDATED),
     )
     return (
-        df.select(F.col(id_col), F.explode(both).alias("e"))
-        .select(id_col, "e.kind", "e.url", "e.lastmod", "e.sm_priority")
+        df.select(F.col("fetch_url"), F.explode(both).alias("e"))
+        .select("fetch_url", "e.kind", "e.url", "e.lastmod", "e.sm_priority")
         .filter(F.length("url") > 0)
     )

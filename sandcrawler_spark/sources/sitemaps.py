@@ -52,36 +52,27 @@ def _entries(xml_col, block_re: str, kind: str):
     )
 
 
-def sitemap_entries(
-    df: DataFrame, id_col: str = "fetch_url", xml_col: str = "xml"
-) -> DataFrame:
-    """Parse sitemap / sitemap-index XML rows into one row per entry:
-    ``(<id_col>, kind, url, lastmod, sm_priority)`` with
+def sitemap_entries(df: DataFrame) -> DataFrame:
+    """Parse ``(fetch_url, xml)`` sitemap / sitemap-index rows into one
+    row per entry: ``(fetch_url, kind, url, lastmod, sm_priority)`` with
     ``kind ∈ {url, sitemap}`` (``sitemap`` rows are child sitemaps from
     an index file, to be fetched and fed back through this parser).
     Entries with an empty ``<loc>`` are dropped; ``lastmod`` /
     ``<priority>`` are optional per the protocol (null when absent)."""
     both = F.concat(
-        _entries(xml_col, _URL_BLOCK, "url"),
-        _entries(xml_col, _SM_BLOCK, "sitemap"),
+        _entries("xml", _URL_BLOCK, "url"),
+        _entries("xml", _SM_BLOCK, "sitemap"),
     )
     return (
-        df.select(F.col(id_col), F.explode(both).alias("e"))
-        .select(
-            id_col, "e.kind", "e.url", "e.lastmod", "e.sm_priority"
-        )
+        df.select(F.col("fetch_url"), F.explode(both).alias("e"))
+        .select("fetch_url", "e.kind", "e.url", "e.lastmod", "e.sm_priority")
         .filter(F.length("url") > 0)
     )
 
 
-def seeds_from_sitemaps(
-    entries: DataFrame,
-    link_source: str = "sitemap",
-    ingest_type: str = "html",
-    seq_offset: int = 0,
-) -> DataFrame:
-    """Convert parsed ``kind='url'`` entries to the frontier's seed
-    schema (``datagen.py`` seeds contract): ``<priority>`` becomes
+def seeds_from_sitemaps(entries: DataFrame, link_source: str = "sitemap") -> DataFrame:
+    """Convert parsed ``kind='url'`` entries to the frontier's ``html``
+    seed schema (``datagen.py`` seeds contract): ``<priority>`` becomes
     ``citation_priority`` (spec default 0.5 when absent), the sitemap
     fetch URL becomes ``link_source_id``.  ``seq`` is a deterministic
     dense rank over (url, source) — stable across partitioning."""
@@ -96,8 +87,8 @@ def seeds_from_sitemaps(
     # two-phase global rank would be the cluster-scale choice; seeds
     # are bounded (50k/sitemap), so a plain dense ordering is fine here
     return urls.select(
-        (F.row_number().over(w) - 1 + seq_offset).cast("long").alias("seq"),
-        F.lit(ingest_type).alias("ingest_type"),
+        (F.row_number().over(w) - 1).cast("long").alias("seq"),
+        F.lit("html").alias("ingest_type"),
         F.col("url").alias("base_url"),
         F.lit(link_source).alias("link_source"),
         F.col("src_sitemap").alias("link_source_id"),
@@ -112,7 +103,6 @@ def freshness_reingest_seeds(
     entries: DataFrame,
     url_seen: DataFrame,
     seq_offset: int = 0,
-    ingest_type: str = "html",
 ) -> DataFrame:
     """Freshness-driven re-crawl seeds: sitemap ``lastmod`` vs the
     crawl's recorded fetch datetime.  An already-seen URL whose sitemap
@@ -156,7 +146,7 @@ def freshness_reingest_seeds(
     w = Window.orderBy("canonical_url", "ingest_type")
     return due.select(
         (F.row_number().over(w) - 1 + seq_offset).cast("long").alias("seq"),
-        F.coalesce("ingest_type", F.lit(ingest_type)).alias("ingest_type"),
+        F.coalesce("ingest_type", F.lit("html")).alias("ingest_type"),
         F.col("url").alias("base_url"),
         F.lit("sitemap-freshness").alias("link_source"),
         F.col("canonical_url").alias("link_source_id"),

@@ -20,6 +20,8 @@ def _docs(spark, sf_dir):
 
 
 def test_hash_sample_deterministic_and_salted(spark, sf_dir):
+    import hashlib
+
     d = _docs(spark, sf_dir)
     a = {r.doc_id for r in curation.hash_sample(d, "doc_id", 2000).select("doc_id").collect()}
     # repartitioning must not change the picked set (rand() would)
@@ -30,14 +32,13 @@ def test_hash_sample_deterministic_and_salted(spark, sf_dir):
         .collect()
     }
     assert a == b and a
-    # a different salt draws an (almost surely) different set at ~20%
-    c = {
+    # the draw is the portable salted-md5 rule with salt "smp"
+    want = {
         r.doc_id
-        for r in curation.hash_sample(d, "doc_id", 2000, salt="val")
-        .select("doc_id")
-        .collect()
+        for r in d.select("doc_id").collect()
+        if int(hashlib.md5(f"smp{r.doc_id}".encode()).hexdigest()[:15], 16) % 10000 < 2000
     }
-    assert c != a
+    assert a == want
 
 
 def test_stratified_exact_quota(spark, sf_dir):
@@ -132,11 +133,13 @@ def test_weighted_sample_deterministic_and_proportional(spark):
     )
     a = [r["id"] for r in weighted_sample(df, "id", "w", k=80).collect()]
     b = [r["id"] for r in weighted_sample(df, "id", "w", k=80).collect()]
-    assert a == b  # pure function of (id, salt): stable across runs
-    # inclusion probability tracks weight: pool the draw over many salts
+    assert a == b  # pure function of the id: stable across runs
+    # inclusion probability tracks weight: pool the draw over many
+    # disjoint id ranges (each an independent draw)
     heavy = light = 0
     for i in range(12):
-        rows = weighted_sample(df, "id", "w", k=80, salt=f"s{i}").collect()
+        rows = weighted_sample(df.withColumn("id", F.col("id") + 400 * (i + 1)),
+                               "id", "w", k=80).collect()
         heavy += sum(1 for r in rows if r["id"] % 2 == 0)
         light += sum(1 for r in rows if r["id"] % 2 != 0)
     assert heavy > 3 * light  # 10x weight >> parity, with slack for k-cap
@@ -182,11 +185,6 @@ def test_duplicated_spans_exact(spark):
     # doc4 self-pairs excluded (id1 < id2 on distinct docs only);
     # doc3 shares nothing long enough
     assert not any(3 in (i, j) for i, j, *_ in got)
-    # max_gram_df=1 drops every cross-doc anchor -> empty
-    assert (
-        duplicated_spans(df, "doc_id", "text", k=4, min_len=8, max_gram_df=1).count()
-        == 0
-    )
 
 
 def test_mirror_hosts(spark):
@@ -225,9 +223,7 @@ def test_trap_host_stats(spark):
     df = spark.createDataFrame(rows, "host string, url string, digest string")
     got = {
         r["host"]: r
-        for r in trap_host_stats(
-            df, min_urls=5, diversity_max=0.5, query_ratio_min=0.9
-        ).collect()
+        for r in trap_host_stats(df, min_urls=5).collect()
     }
     t = got["trap.org"]
     assert (t["n_urls"], t["n_digests"]) == (6, 2)

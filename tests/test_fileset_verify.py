@@ -75,12 +75,12 @@ def test_check_existing_decisions(spark):
 # --- verify_manifest_local: rung goldens --------------------------------
 
 
-def _verify(spark, man_rows, fet_rows, **kw):
+def _verify(spark, man_rows, fet_rows):
     man = spark.createDataFrame(man_rows, MAN_SCHEMA)
     fet = spark.createDataFrame(fet_rows, FET_SCHEMA)
     return {
         (r["item"], r["idx"]): r
-        for r in fileset.verify_manifest_local(man, fet, **kw).collect()
+        for r in fileset.verify_manifest_local(man, fet).collect()
     }
 
 
@@ -169,13 +169,6 @@ def test_verify_local_download_abort(spark):
     )
 
 
-def test_verify_local_success_status_param(spark):
-    man = [("i", 0, "a", 1, None, None, None, None)]
-    fet = [("i", "a", 1, "s", "t", "m", "application/pdf")]
-    out = _verify(spark, man, fet, success_status="success-file")
-    assert out[("i", 0)]["item_status"] == "success-file"
-
-
 # --- verify_manifest_local: python-model parity over a fixture ----------
 
 
@@ -191,7 +184,7 @@ def _py_sanitize(path):
     return "/".join(out) or "."
 
 
-def _py_verify(man_rows, fet_by_key, success_status="success"):
+def _py_verify(man_rows, fet_by_key):
     """Line-for-line model of fileset_strategies.py:100-211."""
     rows = sorted(man_rows, key=lambda r: r[1])
     state = {}
@@ -243,7 +236,7 @@ def _py_verify(man_rows, fet_by_key, success_status="success"):
                 item_status = state[idx]["status"]
                 break
         else:
-            item_status = success_status
+            item_status = "success"
     return state, item_status
 
 
@@ -384,7 +377,7 @@ def test_web_fetch_first_failure_order(spark):
         " size_bytes bigint, sha1hex string, sha256hex string, md5hex string,"
         " mimetype string, empty_body boolean",
     )
-    rows = fileset.web_fetch_verify(man, res, success_status="success-file").collect()
+    rows = fileset.web_fetch_verify(man, res).collect()
     assert all(r["item_status"] == "redirect" for r in rows)
 
 

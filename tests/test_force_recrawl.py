@@ -30,16 +30,17 @@ def test_forced_rows_bypass_seen_and_reresolve(spark, tmp_path):
     ][:5]
     assert fetched0
 
-    # round 1 frontier: same keys again — half forced, half not
+    # round 1 frontier (prepare_seeds' schema): same keys again — half
+    # forced, half not
     rows = [
-        (t, u, "h0.example.org", 0, 0.5, 0, [], 1000 + i, i % 2 == 0)
+        (t, u, "h0.example.org", 0, 0.5, 0, [], 1000 + i, i % 2 == 0, 0, 0)
         for i, (t, u) in enumerate(fetched0)
     ]
     f1 = spark.createDataFrame(
         rows,
         "ingest_type string, canonical_url string, host string, priority int, "
         "citation_priority double, depth int, hops array<string>, seq long, "
-        "force_recrawl boolean",
+        "force_recrawl boolean, attempt int, not_before int",
     ).withColumn("host", F.parse_url("canonical_url", F.lit("HOST")))
     # generation 1 = a re-ingest cycle: forced rows bypass gen-0 results
     rr1 = run_round(spark, f1, seen0, robots, captures, docs, round_id=1, generation=1)

@@ -165,11 +165,11 @@ def test_staleness_reingest_seeds(spark):
         ],
         "ingest_type string, canonical_url string, terminal_dt string",
     )
-    seeds = staleness_reingest_seeds(caps, seen, tau=0.5, seq_offset=100)
+    seeds = staleness_reingest_seeds(caps, seen, tau=0.5)
     rows = seeds.collect()
     assert [r["base_url"] for r in rows] == ["http://h/hot"]
     r = rows[0]
-    assert r["seq"] == 100 and r["force_recrawl"] and r["priority"] == 0
+    assert r["seq"] == 0 and r["force_recrawl"] and r["priority"] == 0
     assert r["link_source"] == "change-rate"
     assert 0.5 <= r["citation_priority"] <= 1.0
 

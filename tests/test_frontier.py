@@ -145,8 +145,15 @@ def test_compaction_digest_neutral_and_bounded_input(
     assert plain.compaction is None
     monkeypatch.setattr(frontier, "COMPACT_FACTOR", 0.0)  # compact every round
     monkeypatch.setattr(frontier, "COMPACT_MIN_ROWS", 1)
+    # a url_seen base left by an old bucketed-seen crawl
+    stale = tmp_path / "cc" / "aux" / "seen_base_r00000"
+    stale.mkdir(parents=True)
+    (stale / "part-0.parquet").write_bytes(b"")
     compacted = run_crawl(spark, fixture_dir, str(tmp_path / "cc"), max_rounds=rounds)
     assert compacted.compaction is not None  # it actually ran
+    # only the committed base survives; superseded ones are deleted
+    bases = sorted(p.name for p in (tmp_path / "cc" / "aux").iterdir() if "_base_r" in p.name)
+    assert bases == [compacted.compaction["table"]]
     assert _spark_orders(plain) == _spark_orders(compacted)
     assert _spark_seen(plain) == _spark_seen(compacted)
 

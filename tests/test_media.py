@@ -252,17 +252,18 @@ def test_hot_bucket_cap_default_on_and_observed(spark):
     silent truncation)."""
     import inspect
 
-    from sandcrawler_spark.operators import dedup, similarity
+    from sandcrawler_spark.operators import dedup
     from sandcrawler_spark.operators.dedup import (
         DEFAULT_MAX_BUCKET,
         minhash_near_dups,
         pop_cap_observations,
     )
 
+    # (embedding_near_dups_lsh has no opt-out: its SRP bands always cap
+    # at DEFAULT_MAX_BUCKET)
     for fn in (
         dedup.minhash_near_dups, dedup.minhash_probe_index,
         dedup.simhash_near_dups, dedup.simhash_probe_index,
-        similarity.embedding_near_dups_lsh,
     ):
         assert (
             inspect.signature(fn).parameters["max_bucket"].default
@@ -488,7 +489,7 @@ def test_pq_search_cluster_precision(spark):
     books = train_pq_codebooks(df, m=4, k=8, iters=4)
     codes = pq_encode(df, books)
     queries = df.filter("vec_id in (0, 25, 45, 70)")
-    got = pq_search(queries, codes, books, k=5, id_col="vec_id").collect()
+    got = pq_search(queries, codes, books, k=5).collect()
 
     M = np.array([v for _, v in rows])
     for qid in (0, 25, 45, 70):

@@ -64,6 +64,13 @@ def test_reingest_matches_oracle(spark, env):
     want = {k: (v["status"], v["round_id"]) for k, v in oracle.url_seen.items()}
     assert got == want
 
+    # the first reingest round's candidate input counts the 25 prepared
+    # reingest seeds next to everything round 1 read and added
+    c = store.counters()
+    assert c["2"]["frontier_input_rows"] == (
+        c["1"]["frontier_input_rows"] + c["1"]["frontier_rows"] + 25
+    )
+
 
 def test_forced_rows_superseded(spark, env):
     d, state, ri_path = env

@@ -164,6 +164,3 @@ def test_clean_documents_rules(spark):
     assert out["nfc"] == "étude" and len(out["nfc"]) == 5
     assert out["trim"] == "padded"
     assert out["none"] is None
-    # nfc=False skips the Arrow pass entirely
-    raw = {r["id"]: r["text"] for r in clean_documents(df, nfc=False).collect()}
-    assert raw["nfc"] == "étude"
